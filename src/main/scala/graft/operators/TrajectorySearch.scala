@@ -1,23 +1,28 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.MetricUdfs
+import graft.functions.{BoxLbKernel, MetricUdfs}
+import graft.geo.Metrics
 import graft.util.Snap.Ops
 
 /** Reference O15 — the flagship query of the DFT system: given a query
   * trajectory, return the k most similar trajectories under Hausdorff or
   * discrete Fréchet distance.
   *
-  * Spark-first shape: the 1-row query trajectory is broadcast (the reference
-  * broadcasts its query the same way), distances are computed partition-
-  * local over the per-user array table, and top-k is
-  * `TakeOrderedAndProject` (per-partition heap, driver merges k rows). At
-  * 10⁸ trajectories the pair scan gains the reference's bound-seeding: a
-  * cheap scalar lower bound in the join condition before the exact kernel —
-  * the same bound-then-refine pattern implemented for vectors in
+  * Spark-first shape ([[topKOf]]): the 1-row query trajectory is broadcast
+  * (the reference broadcasts its query the same way), distances are
+  * computed partition-local over the per-user array table, and top-k is
+  * `TakeOrderedAndProject` (per-partition heap, driver merges k rows).
+  * [[topKPruned]] runs the same search as the reference's partition-local
+  * branch-and-bound: candidates in lower-bound order, exact kernel only
+  * until the bound passes the running k-th distance — the same
+  * bound-then-refine pattern implemented for vectors in
   * VectorOps.cosineSelfJoin.
   */
 object TrajectorySearch {
@@ -716,54 +721,141 @@ object TrajectorySearch {
   private[operators] def ensureBoxes(ta: DataFrame): DataFrame =
     if (ta.columns.contains("boxes")) ta else graft.Tables.withSliceBoxes(ta)
 
-  /** Sliced-box lower bound of every candidate against ONE query user:
-    * `d_box ≤ min-point-distance ≤ Hausdorff ≤ Fréchet`. Pure scalar/array
-    * arithmetic — no kernel calls. */
-  private def withLowerBound(ta0: DataFrame, queryUser: Long): (DataFrame, DataFrame) = {
-    graft.functions.SlicedBoxLb.register(ta0.sparkSession)
+  /** Reference O11/O13 single search the way DFT runs it: the query
+    * trajectory is shipped to every partition, and each partition runs a
+    * branch-and-bound pass over its own candidates.
+    *
+    *  1. One tiny job fetches the query user's `xs`/`ys`/`boxes`.
+    *  2. One job searches every partition: candidates are ranked by the
+    *     sliced-box lower bound ([[graft.functions.BoxLbKernel]]) and the
+    *     exact kernel ([[graft.geo.Metrics]] `hausdorffBounded` /
+    *     `frechetBounded`) runs in bound order. Once k rows are held, the
+    *     abandon bound is the partition's k-th rounded distance + 1e-5, and
+    *     the scan stops at the first candidate whose bound exceeds the k-th
+    *     + 1e-6. Each partition returns ≤ k rows.
+    *  3. The driver merges those rows by (dist, user_id) into a local
+    *     DataFrame `(user_id, dist)`.
+    *
+    * Nothing is planned or code-generated per call: both jobs run over the
+    * table's already-planned RDD (`queryExecution.toRdd`).
+    *
+    * Exactness (TrajectorySearchTest checks row-for-row equality with
+    * [[topKOf]] on adversarial tables). Distances are compared after the
+    * 6-dp rounding of `round(x, 6)`, and both margins sit well above its
+    * 1e-6 granularity (for distances whose double spacing is finer than
+    * the margins, i.e. below ~1e9):
+    *  - stop: every later candidate has exact distance ≥ its bound >
+    *    k-th + 1e-6, so it rounds strictly above the k-th and cannot enter
+    *    the top-k, not even on a `user_id` tie-break;
+    *  - abandon: an abandoned kernel returns a value > k-th + 1e-5 that is
+    *    ≤ the exact distance (or the exact distance is NaN, which ranks
+    *    last), so the candidate ranks after the k-th either way and is
+    *    discarded either way; below the bound the kernel is exact.
+    * The box bound is only trusted where both sides' boxes are finite and
+    * small enough that squared distances cannot overflow; there it is ≤ the
+    * kernel's value even in floating point, since every operation it takes
+    * is monotone. Any other pair (NaN or ±Inf coordinates) gets bound 0 and
+    * is always evaluated. A NaN k-th (empty trajectories rank last) never
+    * stops or abandons the scan.
+    */
+  def topKPruned(ta0: DataFrame, queryUser: Long, k: Int, metric: String): DataFrame = {
+    require(k >= 0, s"k must be non-negative, got $k")
+    val frechet = metric match {
+      case "hausdorff" => false
+      case "frechet" => true
+      case other => throw new IllegalArgumentException(s"unknown metric $other")
+    }
     val ta = ensureBoxes(ta0)
-    val q = ta.filter(col("user_id") === queryUser)
-      .select(col("xs").as("qxs"), col("ys").as("qys"), col("boxes").as("qboxes"))
-    val cands = ta.filter(col("user_id") =!= queryUser)
-      .crossJoin(broadcast(q))
-      .withColumn("lb", slicedBoxLb("boxes", "qboxes"))
-    (cands, q)
+    val sch = ta.schema
+    val c = SearchCols(sch.fieldIndex("user_id"), sch.fieldIndex("xs"),
+      sch.fieldIndex("ys"), sch.fieldIndex("boxes"))
+    val rows = ta.queryExecution.toRdd
+    // 1-row query lookup: the query user's row (one per copy of its id)
+    val qs = rows.mapPartitions(_.filter(c.isUser(_, queryUser)).map(c.traj)).collect()
+    // ≤ k rows per partition, merged on the driver into the k smallest
+    val hits =
+      if (qs.isEmpty) Array.empty[Hit]
+      else rows.mapPartitions(searchPartition(_, c, queryUser, qs, k, frechet))
+        .takeOrdered(k)(HitOrder)
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    ta.sparkSession.createDataFrame(
+      hits.toSeq.map(h => org.apache.spark.sql.Row(h.user, h.dist)).asJava,
+      StructType(Seq(StructField("user_id", LongType), StructField("dist", DoubleType))))
   }
 
-  /** Reference O11/O13 bound-seeding + refinement, relationally:
-    *
-    *  1. SEED: exact-evaluate the `seedFactor·k` candidates with the
-    *     smallest box lower bound; the k-th smallest exact distance is an
-    *     upper bound `r` on the answer's k-th distance.
-    *  2. PRUNE+REFINE: exact kernel only where `lb ≤ r` (+ float margin) —
-    *     every discarded candidate has distance ≥ lb > r, so the result is
-    *     exactly `topKOf`'s (TrajectorySearchTest asserts equality, and that
-    *     pruning actually fires on spatially separated data).
-    *
-    * The two driver-side values (seed threshold) are bounded scalars — the
-    * same driver footprint as the reference's bound seeding.
-    */
-  def topKPruned(ta: DataFrame, queryUser: Long, k: Int, metric: String,
-                 seedFactor: Int = 3): DataFrame = {
-    val fn = metricCol(metric, ta.sparkSession)
-    val (cands, _) = withLowerBound(ta, queryUser)
-    val exact = fn(col("xs"), col("ys"), col("qxs"), col("qys"))
+  /** Column ordinals of a trajectory table's internal rows. */
+  private final case class SearchCols(user: Int, xs: Int, ys: Int, boxes: Int) {
+    def isUser(r: InternalRow, u: Long): Boolean = !r.isNullAt(user) && r.getLong(user) == u
+    def isOther(r: InternalRow, u: Long): Boolean = !r.isNullAt(user) && r.getLong(user) != u
+    def traj(r: InternalRow): QueryTraj = QueryTraj(r.getArray(xs).toDoubleArray(),
+      r.getArray(ys).toDoubleArray(), r.getArray(boxes).toDoubleArray())
+  }
 
-    val seeds = cands.orderBy(col("lb"), col("user_id")).limit(seedFactor * k)
-      .select(exact.as("d"))
-      .orderBy(col("d")).limit(k)
-      .collect()
-    if (seeds.length < k) return topKOf(ta, queryUser, k, metric) // tiny data
-    val r = seeds.last.getDouble(0)
+  private final case class QueryTraj(xs: Array[Double], ys: Array[Double], boxes: Array[Double])
 
-    // early-abandoning refine at r (+ margin above the 6-dp rounding
-    // granularity) — both metrics have a bounded codegen kernel
-    val refine = boundedMetricCol(metric, ta.sparkSession)(
-      col("xs"), col("ys"), col("qxs"), col("qys"), lit(r + 1e-5))
-    cands.filter(col("lb") <= r + 1e-6)
-      .select(col("user_id"), round(refine, 6).as("dist"))
-      .orderBy(col("dist"), col("user_id"))
-      .limit(k)
+  private final case class Hit(user: Long, dist: Double)
+
+  /** (dist, user_id) ascending, NaN last — the order of `orderBy(dist,
+    * user_id)` on rounded distances, which are never -0.0. */
+  private object HitOrder extends Ordering[Hit] {
+    def compare(a: Hit, b: Hit): Int = {
+      val d = java.lang.Double.compare(a.dist, b.dist)
+      if (d != 0) d else java.lang.Long.compare(a.user, b.user)
+    }
+  }
+
+  /** Spark's `round(x, 6)` on a double: HALF_UP on the shortest decimal
+    * form, NaN and ±Inf passed through. */
+  private def round6(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** True when every box coordinate is finite and below 1e150, so no
+    * squared point distance between two such trajectories overflows. */
+  private def tameBoxes(b: ArrayData): Boolean = {
+    var i = 0
+    while (i < b.numElements()) {
+      if (!(math.abs(b.getDouble(i)) <= 1e150)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** One partition's branch-and-bound top-k (see [[topKPruned]]). */
+  private def searchPartition(it: Iterator[InternalRow], c: SearchCols, queryUser: Long,
+                              qs: Array[QueryTraj], k: Int,
+                              frechet: Boolean): Iterator[Hit] = {
+    val qBoxes = qs.map(q => UnsafeArrayData.fromPrimitiveArray(q.boxes))
+    val qTame = qBoxes.map(tameBoxes)
+    // rows are reused by the scan: keep a copy of every candidate
+    val cands = it.filter(c.isOther(_, queryUser)).flatMap { r =>
+      val row = r.copy()
+      val boxes = row.getArray(c.boxes)
+      val tame = tameBoxes(boxes)
+      qs.indices.map(i => (if (tame && qTame(i)) BoxLbKernel.compute(boxes, qBoxes(i)) else 0.0,
+        row, qs(i)))
+    }.toArray.sortBy(_._1)(Ordering.Double.TotalOrdering)
+
+    val top = new Array[Hit](k) // ascending by HitOrder, first `held` slots used
+    var held = 0
+    var i = 0
+    while (i < cands.length && !(held == k && cands(i)._1 > top(k - 1).dist + 1e-6)) {
+      val (_, row, q) = cands(i)
+      val bound = if (held == k) top(k - 1).dist + 1e-5 else Double.MaxValue
+      val (xs, ys) = (row.getArray(c.xs).toDoubleArray(), row.getArray(c.ys).toDoubleArray())
+      val hit = Hit(row.getLong(c.user), round6(
+        if (frechet) Metrics.frechetBounded(xs, ys, q.xs, q.ys, bound)
+        else Metrics.hausdorffBounded(xs, ys, q.xs, q.ys, bound)))
+      if (held < k || HitOrder.lt(hit, top(k - 1))) {
+        var j = math.min(held, k - 1)
+        while (j > 0 && HitOrder.lt(hit, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
+        top(j) = hit
+        if (held < k) held += 1
+      }
+      i += 1
+    }
+    top.iterator.take(held)
   }
 
   /** Early-abandoning metric kernels (exact at/below the bound, certificate
@@ -783,9 +875,16 @@ object TrajectorySearch {
     }
 
   /** Candidate count after bound pruning at threshold r — exposed for tests
-    * and for explain-level visibility of pruning power. */
-  def prunedCandidateCount(ta: DataFrame, queryUser: Long, r: Double): Long = {
-    val (cands, _) = withLowerBound(ta, queryUser)
-    cands.filter(col("lb") <= r).count()
+    * and for explain-level visibility of pruning power. The sliced-box
+    * bound `d_box ≤ min-point-distance ≤ Hausdorff ≤ Fréchet` of every
+    * candidate against ONE query user, relationally. */
+  def prunedCandidateCount(ta0: DataFrame, queryUser: Long, r: Double): Long = {
+    graft.functions.SlicedBoxLb.register(ta0.sparkSession)
+    val ta = ensureBoxes(ta0)
+    val q = ta.filter(col("user_id") === queryUser).select(col("boxes").as("qboxes"))
+    ta.filter(col("user_id") =!= queryUser)
+      .crossJoin(broadcast(q))
+      .filter(slicedBoxLb("boxes", "qboxes") <= r)
+      .count()
   }
 }

@@ -265,19 +265,12 @@ class TrajectoryExprTest extends AnyFunSuite {
     // Count jobs around the second call: the memo (keyed on the analyzed
     // plan's semantic hash) must recognize a FRESH createDataFrame of the
     // same rows — the round-13 t30 regression was exactly this 1-row
-    // aggregate job re-running per query call.
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val p2 = graft.operators.GeofenceJoin.derivePitch(spark.createDataFrame(tblA))
-      assert(p2 == p1 && p1 == (4.0, 2.0))
-      Thread.sleep(1500) // listener bus is async — let any job event land
-      assert(jobs == 0, s"memo miss: derivePitch re-ran its aggregate ($jobs jobs)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // aggregate job re-running per query call. Only jobs of the call's own
+    // job group count, so other suites' jobs cannot leak in.
+    val (p2, jobs) = JobCount(spark)(
+      graft.operators.GeofenceJoin.derivePitch(spark.createDataFrame(tblA)))
+    assert(p2 == p1 && p1 == (4.0, 2.0))
+    assert(jobs == 0, s"memo miss: derivePitch re-ran its aggregate ($jobs jobs)")
     // distinct fence data must NOT share a memo entry
     val pB = graft.operators.GeofenceJoin.derivePitch(spark.createDataFrame(tblB))
     assert(pB == (9.0, 7.0), s"cross-table memo bleed: got $pB")

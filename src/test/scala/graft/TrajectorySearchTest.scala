@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TrajectorySearch
@@ -19,6 +21,129 @@ class TrajectorySearchTest extends AnyFunSuite {
       val pruned = TrajectorySearch.topKPruned(ta, 0L, 10, metric)
         .collect().map(_.toString).toSeq
       assert(pruned == naive, metric)
+    }
+  }
+
+  /** One generated single-search case: (user_id, xs, ys) rows, the query
+    * user (possibly absent) and k. */
+  private case class SearchCase(rows: Seq[(Long, Seq[Double], Seq[Double])],
+                                query: Long, k: Int)
+
+  private val searchCases: Gen[SearchCase] = {
+    // coarse steps around three far-apart centers: exact distance ties, and
+    // box bounds that prune the far clusters
+    val center = Gen.oneOf(0.0, 3.0, 200.0)
+    val odd = Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    def coord(c: Double, oddWeight: Int) =
+      Gen.frequency(12 -> Gen.choose(0, 8).map(c + _ * 0.5), oddWeight -> odd)
+    // past Tables.TrajSlices points a slice box spans several points, so a
+    // NaN or ±Inf point no longer stands alone in its box
+    val traj = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 2 -> Gen.const(1), 4 -> Gen.choose(2, 6),
+        3 -> Gen.choose(9, 20))
+      oddWeight <- Gen.frequency(4 -> Gen.const(0), 1 -> Gen.const(1))
+      cx <- center
+      cy <- center
+      xs <- Gen.listOfN(n, coord(cx, oddWeight))
+      ys <- Gen.listOfN(n, coord(cy, oddWeight))
+    } yield (xs, ys)
+    for {
+      base <- Gen.choose(0, 14).flatMap(Gen.listOfN(_, traj))
+      // copies of earlier trajectories under new ids tie with their source
+      dups <- if (base.isEmpty) Gen.const(Nil)
+              else Gen.choose(0, 6).flatMap(Gen.listOfN(_, Gen.oneOf(base)))
+      rows = (base ++ dups).zipWithIndex.map { case ((xs, ys), i) => (i.toLong, xs, ys) }
+      // now and then one id appears twice (the query user's included)
+      reused <- if (rows.isEmpty) Gen.const(Nil)
+                else Gen.frequency(4 -> Gen.const(Nil), 1 -> Gen.oneOf(rows).flatMap(r =>
+                  traj.map { case (xs, ys) => List((r._1, xs, ys)) }))
+      all <- Gen.long.map(seed => new scala.util.Random(seed).shuffle(rows ++ reused))
+      query <- if (rows.isEmpty) Gen.const(999L)
+               else Gen.frequency(8 -> Gen.oneOf(rows.map(_._1)), 1 -> Gen.const(999L))
+      k <- Gen.choose(1, 8)
+    } yield SearchCase(all, query, k)
+  }
+
+  test("topKPruned ≡ topKOf row for row on generated adversarial tables, 1 and 7 partitions") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("user_id", LongType),
+      StructField("xs", ArrayType(DoubleType)), StructField("ys", ArrayType(DoubleType))))
+    def round6(d: Double) = if (d.isNaN || d.isInfinite) d
+      else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def mismatch(sc: SearchCase): Option[String] = {
+      def frame(parts: Int) = spark.createDataFrame(spark.sparkContext.parallelize(
+        sc.rows.map { case (u, xs, ys) => Row(u, xs, ys) }, parts), schema)
+      (for (metric <- Seq("hausdorff", "frechet")) yield {
+        val naive = TrajectorySearch.topKOf(frame(1), sc.query, sc.k, metric)
+          .collect().map(_.toString).toSeq
+        Seq(1, 7).flatMap { parts =>
+          val pruned = TrajectorySearch.topKPruned(frame(parts), sc.query, sc.k, metric)
+            .collect().map(_.toString).toSeq
+          if (pruned == naive) None
+          else Some(s"$metric, $parts partitions: $pruned != $naive for $sc")
+        }
+      }).flatten.headOption
+    }
+
+    val prop = Prop.forAllNoShrink(searchCases) { sc =>
+      // what the case covers, from a local brute force
+      val qRows = sc.rows.filter(_._1 == sc.query)
+      val cands = sc.rows.filter(_._1 != sc.query)
+      val ranked = (for ((u, xs, ys) <- cands; (_, qx, qy) <- qRows) yield (u, round6(
+        graft.geo.Metrics.hausdorff(xs.toArray, ys.toArray, qx.toArray, qy.toArray))))
+        .sortWith { (a, b) =>
+          val c = java.lang.Double.compare(a._2, b._2)
+          c < 0 || (c == 0 && a._1 < b._1)
+        }
+      val pts = sc.rows.flatMap(r => r._2 ++ r._3)
+      Seq("empty" -> sc.rows.exists(_._2.isEmpty), "1-point" -> sc.rows.exists(_._2.size == 1),
+        "NaN" -> pts.exists(_.isNaN), "Inf" -> pts.exists(_.isInfinite),
+        "absent query" -> qRows.isEmpty,
+        "fewer than k" -> (qRows.nonEmpty && ranked.size < sc.k),
+        "tie at k-th" -> (ranked.size > sc.k && ranked(sc.k - 1)._2 == ranked(sc.k)._2 &&
+          ranked(sc.k - 1)._1 != ranked(sc.k)._1),
+        "duplicate id" -> (sc.rows.map(_._1).distinct.size < sc.rows.size))
+        .foreach { case (what, hit) => if (hit) seen(what) += 1 }
+      val m = mismatch(sc)
+      m.isEmpty :| m.getOrElse("")
+    }
+    val res = org.scalacheck.Test.check(org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(40).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261017L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    for (what <- Seq("empty", "1-point", "NaN", "Inf", "absent query", "fewer than k",
+        "tie at k-th", "duplicate id"))
+      assert(seen(what) > 0, s"no generated case covered '$what': $seen")
+
+    // Layouts random tables rarely hit. Query 0 and candidate 1 are at
+    // Hausdorff distance 0, but slice 0 of candidate 1 (2 of 16 points) has
+    // a box the box bound cannot use: a NaN corner, or a corner whose
+    // squared distance to the query is finite while both points' squared
+    // distances overflow.
+    // Its bound is then > 1 although its distance is 0, so a bound-trusting
+    // search stops after candidate 2 (distance 1).
+    def pts(n: Int, x: Double, y: Double) = Seq.fill(n)((x, y))
+    val query = pts(8, 0.0, 0.0) ++ pts(8, 5.0, 0.0)
+    for (cand <- Seq(
+        Seq((0.0, 0.0), (Double.NaN, 0.0)) ++ pts(14, 5.0, 0.0),
+        Seq((1e154, 1.5e154), (1.5e154, 0.0)) ++ pts(7, 0.0, 0.0) ++ pts(7, 5.0, 0.0))) {
+      val sc = SearchCase(Seq((0L, query.map(_._1), query.map(_._2)),
+        (1L, cand.map(_._1), cand.map(_._2)),
+        (2L, query.map(_._1), query.map(_._2 + 1.0))), query = 0L, k = 1)
+      mismatch(sc).foreach(m => fail(m))
+    }
+  }
+
+  test("topKPruned runs exactly two Spark jobs per call, whatever the query user") {
+    val ta = Tables.trajArrays(spark, TestSpark.sf0001)
+    TrajectorySearch.topKPruned(ta, 0L, 10, "hausdorff").collect() // builds the cache
+    for (metric <- Seq("hausdorff", "frechet"); q <- Seq(0L, 1L)) {
+      val (rows, jobs) = JobCount(spark)(
+        TrajectorySearch.topKPruned(ta, q, 10, metric).collect())
+      assert(jobs == 2, s"$metric, query $q: $jobs jobs")
+      assert(rows.length == 10)
     }
   }
 
