@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One-call library entry point for an EXISTING SparkSession:
   * `graft.Graft.init(spark)` registers every native SQL function
-  * (`graft_dot`, `graft_boxlb`, `graft_hausdorff_bounded`, `graft_within`)
+  * (`graft_dot`, `graft_boxlb`, `graft_hausdorff_bounded`,
+  * `graft_frechet_bounded`, `graft_within`)
   * and installs the optimizer rules (self-dot rewrite, ε-distance-join
   * rewrite). Sessions built with
   * `spark.sql.extensions=graft.plans.GraftExtensions` get the same surface
@@ -23,8 +24,7 @@ object Graft {
   def init(spark: SparkSession): Unit = {
     graft.functions.FloatDotProduct.register(spark)
     graft.functions.SlicedBoxLb.register(spark)
-    graft.functions.HausdorffCodegen.register(spark)
-    graft.functions.FrechetCodegen.register(spark)
+    graft.functions.MetricCol.register(spark)
     graft.plans.GraftRules.install(spark) // registers graft_within + rules
     if (!spark.experimental.extraOptimizations.contains(graft.plans.RewriteSelfDot)) {
       spark.experimental.extraOptimizations =

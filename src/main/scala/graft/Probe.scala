@@ -39,9 +39,8 @@ object Probe {
         println(s"PROBE stats users=${st.users} medPts=${st.medianPoints}")
         val a = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
         val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
-        graft.functions.HausdorffCodegen.register(spark)
-        val kernel = round(graft.functions.HausdorffCodegen(
-          col("xs1"), col("ys1"), col("xs2"), col("ys2"), lit(Double.MaxValue)), 6)
+        val kernel = round(graft.functions.MetricCol("hausdorff",
+          col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6)
         val half = a.join(broadcast(b), col("u1") < col("u2"))
           .select(col("u1"), col("u2"), kernel.as("dist"))
         time("half join noop") {
@@ -163,44 +162,6 @@ object Probe {
           time(s"p23 pair core ONE-EXCHANGE join #$i")(
             oneExForm.write.format("noop").mode("overwrite").save())
         }
-      case "t21ab" =>
-        // copy kernel (toDoubleArray per pair) vs copy-free ArrayData kernel
-        // over the brute half-join, interleaved in one session
-        val ta = Tables.trajArrays(spark, sfDir, "purchase"); ta.count()
-        graft.functions.HausdorffCodegen.register(spark)
-        graft.functions.HausdorffCodegen.registerNoCopy(spark)
-        val a = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
-        val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
-        def half(nc: Boolean) = {
-          val fn = if (nc) graft.functions.HausdorffCodegen.applyNoCopy _
-                   else graft.functions.HausdorffCodegen.apply _
-          a.join(broadcast(b), col("u1") < col("u2"))
-            .select(col("u1"), col("u2"),
-              round(fn(col("xs1"), col("ys1"), col("xs2"), col("ys2"),
-                lit(Double.MaxValue)), 6).as("dist"))
-        }
-        for (i <- 1 to 3) {
-          time(s"half join COPY    #$i")(
-            half(nc = false).write.format("noop").mode("overwrite").save())
-          time(s"half join NO-COPY #$i")(
-            half(nc = true).write.format("noop").mode("overwrite").save())
-        }
-        println("PROBE copy-vs-nocopy diff rows = " +
-          half(nc = false).exceptAll(half(nc = true)).count() + " / " +
-          half(nc = true).exceptAll(half(nc = false)).count())
-        // isolate the join/materialization floor: same join, trivial kernel
-        def halfTrivial = a.join(broadcast(b), col("u1") < col("u2"))
-          .select(col("u1"), col("u2"),
-            (size(col("xs1")) + size(col("xs2"))).cast("double").as("dist"))
-        for (i <- 1 to 2) {
-          time(s"half join TRIVIAL kernel #$i")(
-            halfTrivial.write.format("noop").mode("overwrite").save())
-          time(s"half join arrays-dropped #$i")(
-            a.select(col("u1")).join(broadcast(b.select(col("u2"))),
-              col("u1") < col("u2"))
-              .write.format("noop").mode("overwrite").save())
-        }
-        println("PROBE a partitions = " + a.rdd.getNumPartitions)
       case "d12cold" =>
         // where does the COLD nearDupPairs build actually spend its time?
         import operators.DocSimilarity
@@ -224,52 +185,6 @@ object Probe {
             SparkEntry.queries("d12_dup_degree_histogram")(spark, sfDir).count())
         time("d13 full count")(
           SparkEntry.queries("d13_cross_source_dups")(spark, sfDir).count())
-      case "d12ab" =>
-        // flat (lang-only equi-key, size prune as residual — the r13 form)
-        // vs banded (size band as equi-key) group-pair join, one session
-        import operators.DocSimilarity
-        val toks = DocSimilarity.distinctTokens(spark, sfDir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        println(s"PROBE distinct token rows = ${toks.count()}")
-        val vocab = toks.select(col("tok")).distinct()
-          .limit(DocSimilarity.MaxMaskVocab + 1).collect().map(_.getString(0))
-        val nWords = math.max(1, (vocab.length + 63) / 64)
-        val groups = DocSimilarity.corpusMaskGroups(toks, vocab).localCheckpoint()
-        println(s"PROBE vocab=${vocab.length} nWords=$nWords G=${groups.count()}")
-        val band = DocSimilarity.bandThresholds(3, 5)
-          .map(t => when(col("c") >= t, 1).otherwise(0)).reduce(_ + _)
-        val inter = (0 until nWords)
-          .map(w => expr(s"bit_count(m1[$w] & m2[$w])")).reduce(_ + _).cast("long")
-        val prune = lit(5) * least(col("c1"), col("c2")) >=
-          lit(3) * greatest(col("c1"), col("c2"))
-        def s1(b: Boolean) = groups.select(col("lang"), col("mask").as("m1"),
-          col("c").as("c1"), col("docs").as("docs1"), (if (b) band else lit(0)).as("band"))
-        def s2(b: Boolean) = groups.select(col("lang").as("lang2"), col("mask").as("m2"),
-          col("c").as("c2"), col("docs").as("docs2"),
-          (if (b) explode(array(band - 1, band, band + 1))
-           else explode(array(lit(0)))).as("bandk"))
-        def joined(b: Boolean) = s1(b).join(s2(b),
-          col("lang") === col("lang2") && col("band") === col("bandk") &&
-            col("m1") < col("m2"))
-        def pairsOf(b: Boolean) = joined(b).filter(prune)
-          .withColumn("i", inter)
-          .withColumn("u", col("c1") + col("c2") - col("i"))
-          .filter(lit(5) * col("i") >= lit(3) * col("u"))
-          .select(col("lang"), col("i"), col("u"),
-            explode(col("docs1")).as("da"), col("docs2"))
-          .select(col("lang"), col("i"), col("u"), col("da"),
-            explode(col("docs2")).as("db"))
-        println(s"PROBE enumerated group pairs flat   = ${joined(false).count()}")
-        println(s"PROBE enumerated group pairs banded = ${joined(true).count()}")
-        for (i <- 1 to 3) {
-          time(s"d12 pair core FLAT   #$i")(
-            pairsOf(false).write.format("noop").mode("overwrite").save())
-          time(s"d12 pair core BANDED #$i")(
-            pairsOf(true).write.format("noop").mode("overwrite").save())
-        }
-        println("PROBE banded-vs-flat diff rows = " +
-          pairsOf(false).exceptAll(pairsOf(true)).count() + " / " +
-          pairsOf(true).exceptAll(pairsOf(false)).count())
       case "t30" =>
         // derivePitch memo: the 2nd call arrives on a FRESH createDataFrame
         // frame — a hit proves semanticHash canonicalizes the two identically

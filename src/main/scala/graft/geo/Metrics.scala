@@ -9,7 +9,7 @@ package graft.geo
   * in SQUARED distance space, taking one sqrt at the end: min/max commute
   * with the monotone sqrt, so results are bit-identical to the SQL form that
   * computes `SQRT((ax-bx)^2+(ay-by)^2)` per pair and then min/max — this is
-  * what makes the UDF form hash-match the DuckDB oracle (t2).
+  * what makes the kernel form hash-match the DuckDB oracle (t2).
   */
 object Metrics {
 
@@ -197,20 +197,6 @@ object Metrics {
     row(m - 1)
   }
 
-  /** Naive memoized-recursion DTW — property-test oracle for the DP. */
-  def dtwNaive(xa: Array[Double], ya: Array[Double],
-               xb: Array[Double], yb: Array[Double]): Double = {
-    val memo = collection.mutable.HashMap.empty[(Int, Int), Double]
-    def c(i: Int, j: Int): Double = memo.getOrElseUpdate((i, j), {
-      val d = math.sqrt(d2(xa(i), ya(i), xb(j), yb(j)))
-      if (i == 0 && j == 0) d
-      else if (i == 0) c(0, j - 1) + d
-      else if (j == 0) c(i - 1, 0) + d
-      else d + math.min(math.min(c(i - 1, j), c(i, j - 1)), c(i - 1, j - 1))
-    })
-    c(xa.length - 1, xb.length - 1)
-  }
-
   /** Point→segment distance (reference O2): distance from p to the closest
     * point of segment [a,b] via projection clamp. */
   def pointSegDist(px: Double, py: Double, ax: Double, ay: Double,
@@ -248,10 +234,12 @@ object Metrics {
   /** Closest approach between two polylines (reference O3 lifted to whole
     * trajectories): min over all segment pairs of [[segSegDist]] — 0 when
     * the paths cross. Single-point trajectories degrade to a degenerate
-    * (p, p) segment. Min over a set of doubles is order-independent, so the
-    * loop order cannot perturb the result. */
+    * (p, p) segment; an empty one gives NaN, as in [[hausdorff]]. Min over
+    * a set of doubles is order-independent, so the loop order cannot
+    * perturb the result. */
   def closestApproach(xa: Array[Double], ya: Array[Double],
                       xb: Array[Double], yb: Array[Double]): Double = {
+    if (xa.length == 0 || xb.length == 0) return Double.NaN
     val na = math.max(xa.length - 1, 1)
     val nb = math.max(xb.length - 1, 1)
     def seg(xs: Array[Double], i: Int): Int = math.min(i + 1, xs.length - 1)
@@ -271,19 +259,21 @@ object Metrics {
     best
   }
 
-  /** Naive exponential-recursion Fréchet (memoized) — the definitional form,
-    * used only as the property-test oracle for the DP (SURVEY §5.2). */
-  def discreteFrechetNaive(xa: Array[Double], ya: Array[Double],
-                           xb: Array[Double], yb: Array[Double]): Double = {
-    val memo = collection.mutable.HashMap.empty[(Int, Int), Double]
-    def c(i: Int, j: Int): Double = memo.getOrElseUpdate((i, j), {
-      val d = d2(xa(i), ya(i), xb(j), yb(j))
-      if (i == 0 && j == 0) d
-      else if (i == 0) math.max(c(0, j - 1), d)
-      else if (j == 0) math.max(c(i - 1, 0), d)
-      else math.max(math.min(math.min(c(i - 1, j), c(i, j - 1)), c(i - 1, j - 1)), d)
-    })
-    math.sqrt(c(xa.length - 1, xb.length - 1))
+  /** Min distance from a point to a polyline (reference O2 lifted to the
+    * whole trajectory): min over segments of [[pointSegDist]]. A
+    * single-point polyline degrades to plain point distance; an empty one
+    * gives Double.MaxValue. */
+  def polylineDist(px: Double, py: Double, xs: Array[Double], ys: Array[Double]): Double = {
+    val n = xs.length
+    if (n == 1) return pointSegDist(px, py, xs(0), ys(0), xs(0), ys(0))
+    var best = Double.MaxValue
+    var i = 0
+    while (i < n - 1) {
+      val d = pointSegDist(px, py, xs(i), ys(i), xs(i + 1), ys(i + 1))
+      if (d < best) best = d
+      i += 1
+    }
+    best
   }
 
   /** Point match predicate shared by LCSS/EDR: per-coordinate ε box
@@ -327,18 +317,6 @@ object Metrics {
     prev(m)
   }
 
-  /** Naive memoized-recursion LCSS — property-test oracle for the DP. */
-  def lcssCountNaive(xa: Array[Double], ya: Array[Double],
-                     xb: Array[Double], yb: Array[Double],
-                     ex: Double, ey: Double): Int = {
-    val memo = collection.mutable.HashMap.empty[(Int, Int), Int]
-    def c(i: Int, j: Int): Int = if (i < 0 || j < 0) 0 else memo.getOrElseUpdate((i, j), {
-      if (matches(xa(i), ya(i), xb(j), yb(j), ex, ey)) c(i - 1, j - 1) + 1
-      else math.max(c(i - 1, j), c(i, j - 1))
-    })
-    c(xa.length - 1, xb.length - 1)
-  }
-
   /** EDR — Edit Distance on Real sequence (Chen/Özsu/Oria SIGMOD'05):
     * edit distance where substitution costs 0 on an ε-match and 1
     * otherwise, insert/delete cost 1. Integer-valued (exactly hashable),
@@ -368,22 +346,6 @@ object Metrics {
       i += 1
     }
     prev(m)
-  }
-
-  /** Naive memoized-recursion EDR — property-test oracle for the DP. */
-  def edrNaive(xa: Array[Double], ya: Array[Double],
-               xb: Array[Double], yb: Array[Double],
-               ex: Double, ey: Double): Int = {
-    val memo = collection.mutable.HashMap.empty[(Int, Int), Int]
-    def c(i: Int, j: Int): Int = memo.getOrElseUpdate((i, j), {
-      if (i == 0) j
-      else if (j == 0) i
-      else {
-        val sub = if (matches(xa(i - 1), ya(i - 1), xb(j - 1), yb(j - 1), ex, ey)) 0 else 1
-        math.min(math.min(c(i - 1, j) + 1, c(i, j - 1) + 1), c(i - 1, j - 1) + sub)
-      }
-    })
-    c(xa.length, xb.length)
   }
 
   /** ERP — Edit distance with Real Penalty (Chen/Ng VLDB'04): edit distance
@@ -420,24 +382,5 @@ object Metrics {
       i += 1
     }
     prev(m)
-  }
-
-  /** Naive memoized-recursion ERP — property-test oracle for the DP. */
-  def erpNaive(xa: Array[Double], ya: Array[Double],
-               xb: Array[Double], yb: Array[Double],
-               gx: Double = 0.0, gy: Double = 0.0): Double = {
-    @inline def d(px: Double, py: Double, qx: Double, qy: Double): Double =
-      math.sqrt((px - qx) * (px - qx) + (py - qy) * (py - qy))
-    val memo = collection.mutable.HashMap.empty[(Int, Int), Double]
-    def c(i: Int, j: Int): Double = memo.getOrElseUpdate((i, j), {
-      if (i == 0 && j == 0) 0.0
-      else if (i == 0) c(0, j - 1) + d(xb(j - 1), yb(j - 1), gx, gy)
-      else if (j == 0) c(i - 1, 0) + d(xa(i - 1), ya(i - 1), gx, gy)
-      else math.min(
-        c(i - 1, j - 1) + d(xa(i - 1), ya(i - 1), xb(j - 1), yb(j - 1)),
-        math.min(c(i - 1, j) + d(xa(i - 1), ya(i - 1), gx, gy),
-          c(i, j - 1) + d(xb(j - 1), yb(j - 1), gx, gy)))
-    })
-    c(xa.length, xb.length)
   }
 }

@@ -257,28 +257,6 @@ object DocSimilarity {
   private def lengthPrune(num: Int, den: Int): org.apache.spark.sql.Column =
     lit(den) * least(col("c1"), col("c2")) >= lit(num) * greatest(col("c1"), col("c2"))
 
-  /** Size-band boundaries for ratio r = den/num, in EXACT integer
-    * arithmetic: T_k = ceil(den^k / num^k) for k ≥ 1, up to [[MaxMaskVocab]]
-    * (a mask-strategy set can never be larger). `band(c) = #{k : T_k ≤ c}`
-    * is exactly `floor(log_r c)`, so a pair passing [[lengthPrune]]
-    * (max/min ≤ r) has band difference ≤ 1 — banding one join side and
-    * exploding the other to {b−1, b, b+1} is a prune-only equi-key
-    * (guide §2.5/§3.2). MEASURED AND NOT SHIPPED (r14, Probe `d12ab`): on
-    * the mask-strategy corpus set sizes concentrate near the vocabulary
-    * size, the band key cut the enumerated group pairs only 11% and the
-    * explode overhead made each pass ~20% slower — the flat lang-keyed join
-    * with the prune as residual wins. Kept for the probe and for a corpus
-    * whose set sizes actually spread. */
-  private[graft] def bandThresholds(num: Int, den: Int): Seq[Long] = {
-    val bs = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var dpow = BigInt(den); var npow = BigInt(num)
-    var t = (dpow + npow - 1) / npow
-    while (t <= MaxMaskVocab) {
-      bs += t.toLong; dpow *= den; npow *= num; t = (dpow + npow - 1) / npow
-    }
-    bs.toSeq
-  }
-
   /** The popcount join at GROUP level — callers supply the two sides'
     * mask-group frames (fresh, memoized, or loaded from an IndexStore
     * artifact; both must be built under the same sorted vocabulary) plus
@@ -384,11 +362,11 @@ object DocSimilarity {
     val g2 = groups.select(col("lang").as("lang2"), col("mask").as("m2"), col("c").as("c2"), col("docs").as("docs2"))
     // m1 < m2 dedups unordered group pairs; the length prune and the
     // unrolled popcount are the codegen hot path (see maskInterCol).
-    // NOT banded: turning the prune into a size-band equi-key (see
-    // bandThresholds / Probe d12ab) enumerated only 11% fewer group pairs
-    // on the measured corpus (set sizes concentrate near the vocab size)
-    // and ran ~20% SLOWER per pass — the explode+wider-key overhead beats
-    // the cut; flat + residual prune is the measured winner (r14 A/B).
+    // NOT banded: turning the prune into a size-band equi-key enumerated
+    // only 11% fewer group pairs on the measured corpus (set sizes
+    // concentrate near the vocab size) and ran ~20% SLOWER per pass — the
+    // explode+wider-key overhead beats the cut; flat + residual prune is the
+    // measured winner (OPTIMIZATION_r14.md, "d12/d13 — size-band join key").
     val cross = g1.join(g2,
         col("lang") === col("lang2") && col("m1") < col("m2") && lengthPrune(num, den))
       .withColumn("i", maskInterCol(nWords))

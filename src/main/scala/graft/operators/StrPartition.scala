@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.MetricCol
 import graft.util.Snap.Ops
 
 /** Reference O8 — STR (Sort-Tile-Recursive) spatial partitioning — carried
@@ -152,10 +153,9 @@ object StrPartition {
     // seedFactor·k pairs get the exact kernel; k-th exact distance = r
     val a = taT.select(col("user_id").as("u1"), col("tile").as("t1"), col("boxes").as("boxes1"))
     val b = taT.select(col("user_id").as("u2"), col("tile").as("t2"), col("boxes").as("boxes2"))
-    val fn = TrajectorySearch.metricCol(metric, s)
     val fat1 = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
     val fat2 = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
-    val exact = round(fn(col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6)
+    val exact = round(MetricCol(metric, col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6)
     // stream a across all cores, broadcast the slim b side while it fits: a
     // 16-key shuffle join would serialize the scan onto ≤ nx·ny tasks
     val seeds = a.join(hinted(b, hintSlim), col("t1") === col("t2") && col("u1") < col("u2"))
@@ -219,11 +219,10 @@ object StrPartition {
     scan match {
       case None => TrajectorySearch.allPairsTopK(ta0, k, metric, seedFactor)
       case Some(scan) =>
-        val s = ta0.sparkSession
         val ta = TrajectorySearch.ensureBoxes(ta0)
         val fat1 = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
         val fat2 = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
-        val refine = round(TrajectorySearch.boundedMetricCol(metric, s)(
+        val refine = round(MetricCol(metric,
           col("xs1"), col("ys1"), col("xs2"), col("ys2"), lit(scan.r + 1e-5)), 6)
         candidates(scan)
           .filter(col("lb") <= scan.r + 1e-6)
@@ -299,10 +298,9 @@ object StrPartition {
     val hintFat = st.estArrayBytes <= TrajectorySearch.broadcastCap(s)
     val hintSlim = st.estSlimBytes <= TrajectorySearch.broadcastCap(s)
 
-    val fn = TrajectorySearch.metricCol(metric, s)
     val fat = ta.select(col("user_id"), col("xs"), col("ys"))
     val qFat = ta.select(col("user_id").as("q_user"), col("xs").as("qxs"), col("ys").as("qys"))
-    val exact = round(fn(col("xs"), col("ys"), col("qxs"), col("qys")), 6)
+    val exact = round(MetricCol(metric, col("xs"), col("ys"), col("qxs"), col("qys")), 6)
 
     // 1. within-tile bound pass: stream queries, broadcast the slim
     // candidate side while it fits (a tile-keyed shuffle join serializes
@@ -416,7 +414,7 @@ object StrPartition {
             col("tc") === col("tc2") && col("q_user") =!= col("user_id"))
           .select(col("q_user"), col("user_id"),
             TrajectorySearch.slicedBoxLb("qboxes", "boxes").as("lb"))
-        val refine = round(TrajectorySearch.boundedMetricCol(metric, s)(
+        val refine = round(MetricCol(metric,
           col("xs"), col("ys"), col("qxs"), col("qys"), col("r") + 1e-5), 6)
         val refined = cand.join(hinted(scan.rq, scan.hintSlim), "q_user")
           .filter(col("lb") <= col("r") + 1e-6)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{BoxLbKernel, MetricUdfs}
+import graft.functions.{BoxLbKernel, MetricCol}
 import graft.geo.Metrics
 import graft.util.Snap.Ops
 
@@ -32,31 +32,15 @@ object TrajectorySearch {
     topKOf(Tables.trajArrays(s, dir, eventType), queryUser, k, metric)
 
   def topKOf(ta: DataFrame, queryUser: Long, k: Int, metric: String): DataFrame = {
-    val fn = metricCol(metric, ta.sparkSession)
     val q = ta.filter(col("user_id") === queryUser)
       .select(col("xs").as("qxs"), col("ys").as("qys"))
     ta.filter(col("user_id") =!= queryUser)
       .crossJoin(broadcast(q))
       .select(col("user_id"),
-        round(fn(col("xs"), col("ys"), col("qxs"), col("qys")), 6).as("dist"))
+        round(MetricCol(metric, col("xs"), col("ys"), col("qxs"), col("qys")), 6).as("dist"))
       .orderBy(col("dist"), col("user_id"))
       .limit(k)
   }
-
-  /** Exact metric as a Column builder. Hausdorff runs as the codegen static
-    * call (bulk array copy, no per-element boxing — the bounded kernel with
-    * an unreachable bound computes the identical max-of-both-directions
-    * value); Fréchet keeps its DP UDF. */
-  private[operators] def metricCol(metric: String, s: SparkSession):
-      (org.apache.spark.sql.Column, org.apache.spark.sql.Column,
-       org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
-    metric match {
-      case "hausdorff" =>
-        graft.functions.HausdorffCodegen.register(s)
-        (a, b, c, d) => graft.functions.HausdorffCodegen(a, b, c, d, lit(Double.MaxValue))
-      case "frechet" => (a, b, c, d) => MetricUdfs.frechet(a, b, c, d)
-      case other => throw new IllegalArgumentException(s"unknown metric $other")
-    }
 
   /** Time-sliced MBR lower bound (reference O4/O11 carried to pairs): with
     * A partitioned into time slices {Aᵢ} and B into {Bⱼ}, every a ∈ Aᵢ has
@@ -140,10 +124,9 @@ object TrajectorySearch {
                              metric: String, seedFactor: Int,
                              cacheKey: Option[String]): DataFrame = {
     val hintFat = st.estArrayBytes <= broadcastCap(ta.sparkSession)
-    val fn = metricCol(metric, ta.sparkSession)
     val fat1 = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
     val fat2 = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
-    val exact = round(fn(col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6)
+    val exact = round(MetricCol(metric, col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6)
     // fat coordinate arrays ride equi-joins on u1/u2: hinted while they
     // fit the cap, plain shuffle equi-joins past it (the bounded pair list
     // is the small side the planner then broadcasts on its own)
@@ -177,7 +160,7 @@ object TrajectorySearch {
     // margin 1e-5 ≫ the 6-dp rounding granularity, so every pair that could
     // tie at rounded r is still computed exactly. Codegen static call — a
     // UDF here would box 4 × |traj| doubles per pair, dominating the kernel.
-    val refine = round(boundedMetricCol(metric, ta.sparkSession)(
+    val refine = round(MetricCol(metric,
       col("xs1"), col("ys1"), col("xs2"), col("ys2"), lit(r + 1e-5)), 6)
     withArrays(lbs.filter(col("lb") <= r + 1e-6).select(col("u1"), col("u2")))
       .select(col("u1"), col("u2"), refine.as(metric))
@@ -221,13 +204,12 @@ object TrajectorySearch {
   def topKBatch(ta0: DataFrame, queryUsers: Seq[Long], k: Int,
                 metric: String = "hausdorff"): DataFrame = {
     val ta = ensureBoxes(ta0)
-    val fn = metricCol(metric, ta.sparkSession)
     val q = ta.filter(col("user_id").isInCollection(queryUsers))
       .select(col("user_id").as("q_user"), col("xs").as("qxs"), col("ys").as("qys"))
     val dists = ta.select(col("user_id"), col("xs"), col("ys"))
       .join(broadcast(q), col("user_id") =!= col("q_user"))
       .select(col("q_user"), col("user_id"),
-        round(fn(col("xs"), col("ys"), col("qxs"), col("qys")), 6).as("dist"))
+        round(MetricCol(metric, col("xs"), col("ys"), col("qxs"), col("qys")), 6).as("dist"))
     // two-stage top-k: a query's candidate set is the whole table — never
     // pull it through one reducer (Rank.topKPerGroup)
     Rank.topKPerGroup(dists, Seq(col("q_user")), Seq(col("dist"), col("user_id")), k)
@@ -489,13 +471,12 @@ object TrajectorySearch {
     * the final query plan only shows the checkpointed ExistingRDD. */
   private[graft] def bruteHalfBuild(ta: DataFrame, metric: String,
                                     hintBroadcast: Boolean): DataFrame = {
-    val fn = metricCol(metric, ta.sparkSession)
     // explicit fan-out of the STREAMED side (the allPairsLbOf rule): the
     // per-user array table is physically a FEW small partitions (AQE
     // coalesces its build shuffle), so without this the entire |users|²/2
     // kernel scan runs in ONE task — measured 1 partition / one 1.5 s
     // serial task at sf0.1; fanned, the same scan is ~34 parallel tasks
-    // (r14 A/B in Probe t21ab/t21). The shuffle moved is the slim array
+    // (r14 A/B, OPTIMIZATION_r14.md "t21"). The shuffle moved is the slim array
     // table itself, once.
     val a = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
       .repartition(ta.sparkSession.sparkContext.defaultParallelism, col("u1"))
@@ -504,7 +485,7 @@ object TrajectorySearch {
     // one kernel evaluation per unordered pair
     a.join(b, col("u1") < col("u2"))
       .select(col("u1"), col("u2"),
-        round(fn(col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6).as("dist"))
+        round(MetricCol(metric, col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6).as("dist"))
   }
 
   private def bruteKnnJoin(ta: DataFrame, k: Int, metric: String,
@@ -528,7 +509,6 @@ object TrajectorySearch {
                             metric: String, seedFactor: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.SlicedBoxLb.register(ta.sparkSession)
-    val fn = metricCol(metric, ta.sparkSession)
 
     // size-guard EVERY data-sized hint (the StrPartition.hinted pattern):
     // in the knnJoin-Seeded self-join q0 IS the corpus, so `fat`/`qFat`/
@@ -548,7 +528,7 @@ object TrajectorySearch {
     val qSlim = q0.select(col("user_id").as("q_user"), col("boxes").as("qboxes"))
     val qFat = q0.select(col("user_id").as("q_user"), col("xs").as("qxs"), col("ys").as("qys"))
     val fat = ta.select(col("user_id"), col("xs"), col("ys"))
-    val exact = round(fn(col("xs"), col("ys"), col("qxs"), col("qys")), 6)
+    val exact = round(MetricCol(metric, col("xs"), col("ys"), col("qxs"), col("qys")), 6)
 
     // slim bound pass: (q_user, user_id, lb)
     val lbs = ta.select(col("user_id"), col("boxes"))
@@ -572,7 +552,7 @@ object TrajectorySearch {
       .filter(col("srn") <= k)
       .groupBy(col("q_user")).agg(max(col("dist")).as("r"))
 
-    val refine = round(boundedMetricCol(metric, ta.sparkSession)(
+    val refine = round(MetricCol(metric,
       col("xs"), col("ys"), col("qxs"), col("qys"), col("r") + 1e-5), 6)
     val refined = lbs.join(hinted(rq, hintRq), "q_user")
       .filter(col("lb") <= col("r") + 1e-6)
@@ -702,7 +682,7 @@ object TrajectorySearch {
       .select(col("cu"), col("bu"))
     val fatC = corpus.select(col("user_id").as("cu"), col("xs").as("cxs"), col("ys").as("cys"))
     val fatB = batch.select(col("user_id").as("bu"), col("xs").as("bxs"), col("ys").as("bys"))
-    val refine = round(boundedMetricCol(metric, s)(
+    val refine = round(MetricCol(metric,
       col("cxs"), col("cys"), col("bxs"), col("bys"), lit(tau + 1e-5)), 6)
     val close = cand
       .join(broadcast(fatB), "bu").join(fatC, "cu")
@@ -760,11 +740,7 @@ object TrajectorySearch {
     */
   def topKPruned(ta0: DataFrame, queryUser: Long, k: Int, metric: String): DataFrame = {
     require(k >= 0, s"k must be non-negative, got $k")
-    val frechet = metric match {
-      case "hausdorff" => false
-      case "frechet" => true
-      case other => throw new IllegalArgumentException(s"unknown metric $other")
-    }
+    val frechet = MetricCol.isFrechet(metric)
     val ta = ensureBoxes(ta0)
     val sch = ta.schema
     val c = SearchCols(sch.fieldIndex("user_id"), sch.fieldIndex("xs"),
@@ -857,22 +833,6 @@ object TrajectorySearch {
     }
     top.iterator.take(held)
   }
-
-  /** Early-abandoning metric kernels (exact at/below the bound, certificate
-    * above it) as codegen static calls. */
-  private[operators] def boundedMetricCol(metric: String, s: SparkSession):
-      (org.apache.spark.sql.Column, org.apache.spark.sql.Column,
-       org.apache.spark.sql.Column, org.apache.spark.sql.Column,
-       org.apache.spark.sql.Column) => org.apache.spark.sql.Column =
-    metric match {
-      case "hausdorff" =>
-        graft.functions.HausdorffCodegen.register(s)
-        graft.functions.HausdorffCodegen.apply
-      case "frechet" =>
-        graft.functions.FrechetCodegen.register(s)
-        graft.functions.FrechetCodegen.apply
-      case other => throw new IllegalArgumentException(s"unknown metric $other")
-    }
 
   /** Candidate count after bound pruning at threshold r — exposed for tests
     * and for explain-level visibility of pruning power. The sliced-box

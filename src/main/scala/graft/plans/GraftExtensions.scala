@@ -83,14 +83,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graft_boxlb"),
       new ExpressionInfo(classOf[graft.functions.SlicedBoxLb].getName, "graft_boxlb"),
       (exprs: Seq[Expression]) => graft.functions.SlicedBoxLb(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hausdorff_bounded"),
-      new ExpressionInfo(graft.functions.HausdorffKernelStatic.getClass.getName, "graft_hausdorff_bounded"),
-      (exprs: Seq[Expression]) => graft.functions.HausdorffCodegen.build(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_frechet_bounded"),
-      new ExpressionInfo(graft.functions.FrechetKernelStatic.getClass.getName, "graft_frechet_bounded"),
-      (exprs: Seq[Expression]) => graft.functions.FrechetCodegen.build(exprs)))
+    graft.functions.MetricCol.sqlFunctions.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(graft.functions.MetricKernel.getClass.getName, name), build))
+    }
     ext.injectOptimizerRule(_ => RewriteSelfDot)
     ext.injectOptimizerRule(_ => RewriteDistanceJoin)
     // SQL DELETE/MERGE over graft-table views — must run in the analyzer

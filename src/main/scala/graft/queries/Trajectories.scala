@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{DeclaredQuery, Tables}
 import graft.Fns.{bsumS, cents, centsS}
-import graft.geo.Metrics
+import graft.functions.MetricCol
 
 /** Trajectory queries t1–t6 (SURVEY §2.7) — the reference-parity surface:
   * trajectory construction (O7), Hausdorff (O5) / discrete Fréchet (O6)
@@ -22,7 +22,14 @@ import graft.geo.Metrics
   */
 object Trajectories {
 
-  private val frechetUdf = graft.functions.MetricUdfs.frechet
+  /** Douglas–Peucker simplification stats: (points kept, realized max
+    * error) per trajectory — geo.Simplify run once per row (t12). */
+  private val dpStats =
+    udf { (xs: Seq[Double], ys: Seq[Double], eps: Double) =>
+      val xa = xs.toArray; val ya = ys.toArray
+      val kept = graft.geo.Simplify.douglasPeucker(xa, ya, eps)
+      (kept.length, graft.geo.Simplify.maxError(xa, ya, kept))
+    }
 
   /** t29's fixed geofence: a non-convex (top-notched) pentagon with integer
     * vertices inside the pts fixture's (x=days, y=value) domain. Declared
@@ -91,7 +98,8 @@ object Trajectories {
         val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
         a.join(b, col("u1") < col("u2"))
           .select(col("u1"), col("u2"),
-            round(frechetUdf(col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6).as("frechet"))
+            round(MetricCol("frechet", col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6)
+              .as("frechet"))
           .orderBy(col("u1"), col("u2"))
     },
 
@@ -184,7 +192,7 @@ object Trajectories {
         val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
         a.join(b, col("u1") < col("u2"))
           .select(col("u1"), col("u2"),
-            round(graft.functions.MetricUdfs.dtw(
+            round(MetricCol.dtw(
               col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6).as("dtw"))
           .orderBy(col("u1"), col("u2"))
     },
@@ -205,7 +213,7 @@ object Trajectories {
           size(col("xs")).as("n2"))
         a.join(b, col("u1") < col("u2"))
           .select(col("u1"), col("u2"),
-            graft.functions.MetricUdfs.lcss(
+            MetricCol.lcssCount(
               col("xs1"), col("ys1"), col("xs2"), col("ys2"), lit(2.0), lit(25.0)).as("lcss"),
             least(col("n1"), col("n2")).as("minlen"))
           .withColumn("sim", round(col("lcss") / col("minlen"), 6))
@@ -224,7 +232,7 @@ object Trajectories {
         val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
         a.join(b, col("u1") < col("u2"))
           .select(col("u1"), col("u2"),
-            round(graft.functions.MetricUdfs.erp(
+            round(MetricCol.erp(
               col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6).as("erp"))
           .orderBy(col("u1"), col("u2"))
     },
@@ -239,7 +247,7 @@ object Trajectories {
         val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
         a.join(b, col("u1") < col("u2"))
           .select(col("u1"), col("u2"),
-            graft.functions.MetricUdfs.edr(
+            MetricCol.edr(
               col("xs1"), col("ys1"), col("xs2"), col("ys2"), lit(2.0), lit(25.0)).as("edr"))
           .orderBy(col("u1"), col("u2"))
     },
@@ -332,10 +340,9 @@ object Trajectories {
     // realized error ≤ ε, naive-recursion equivalence, determinism).
     DeclaredQuery.noOracle("t12_dp_simplify") {
       (s, dir) =>
-        val dp = graft.functions.MetricUdfs.dpStats
         Tables.trajArrays(s, dir, "purchase")
           .select(col("user_id"), size(col("xs")).cast("long").as("n_points"),
-            dp(col("xs"), col("ys"), lit(10.0)).as("st"))
+            dpStats(col("xs"), col("ys"), lit(10.0)).as("st"))
           .select(col("user_id"), col("n_points"),
             col("st._1").cast("long").as("n_kept"),
             round(col("st._2"), 6).as("max_err"))
@@ -612,7 +619,7 @@ object Trajectories {
         val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
         a.join(b, col("u1") < col("u2"))
           .select(col("u1"), col("u2"),
-            round(graft.functions.MetricUdfs.closestApproach(
+            round(MetricCol.closestApproach(
               col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6).as("closest"))
           .orderBy(col("u1"), col("u2"))
     },
@@ -721,7 +728,7 @@ object Trajectories {
           .filter(col("user_id") =!= 0)
           .crossJoin(broadcast(q))
           .select(col("user_id"),
-            round(graft.functions.MetricUdfs.polylineDist(
+            round(MetricCol.polylineDist(
               col("x"), col("y"), col("qxs"), col("qys")), 6).as("md"))
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_points"),

@@ -260,7 +260,6 @@ object StreamingQueries {
   def streamTrajGate(newTrajs: DataFrame, corpus0: DataFrame, tau: Double): DataFrame = {
     val s = corpus0.sparkSession
     graft.functions.SlicedBoxLb.register(s)
-    graft.functions.HausdorffCodegen.register(s)
     val corpus = graft.Tables.withSliceBoxes(corpus0)
       .select(col("user_id").as("cu"), col("xs").as("cxs"),
         col("ys").as("cys"), col("boxes").as("cboxes"))
@@ -272,7 +271,7 @@ object StreamingQueries {
     // in-row kernel even when the box bound sits between tau and h
     batch.join(broadcast(corpus),
         graft.operators.TrajectorySearch.slicedBoxLb("bboxes", "cboxes") <= tau + 1e-6)
-      .withColumn("h", round(graft.functions.HausdorffCodegen(
+      .withColumn("h", round(graft.functions.MetricCol("hausdorff",
         col("bxs"), col("bys"), col("cxs"), col("cys"), lit(tau + 1e-5)), 6))
       .filter(col("h") <= tau)
       .select(col("cu"), col("bu"), col("h"))

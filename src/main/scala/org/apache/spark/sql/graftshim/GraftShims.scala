@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.StructType
   * extension libraries that rewrite analyzer plans (a DataFrame must be
   * constructible from a resolved [[LogicalPlan]], and a [[Column]] from a
   * catalyst [[Expression]], neither of which has a public constructor).
-  * Kept to exactly the three factory calls the graft DML rule and the V1
-  * streaming sink need; no other graft code may import this package. */
+  * Kept to exactly the three factory calls the graft DML rule, the V1
+  * streaming sink and the metric Columns (graft.functions.MetricCol) need;
+  * no other graft code may import this package. */
 object GraftShims {
   /** Wrap an analyzed logical plan as a DataFrame (classic Dataset.ofRows). */
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =

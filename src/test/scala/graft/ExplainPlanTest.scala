@@ -243,7 +243,7 @@ class ExplainPlanTest extends AnyFunSuite {
       .bruteHalfBuild(ta, "hausdorff", hintBroadcast = true)
       .queryExecution.executedPlan.toString
     assert(b.contains("Exchange hashpartitioning(u1"), b)
-    assert(b.contains("HausdorffKernelStatic.compute"), b)
+    assert(b.contains("MetricKernel.hausdorffBounded"), b)
   }
 
   test("r21: the fact pass runs once — final plan reads the checkpointed per-part frame") {

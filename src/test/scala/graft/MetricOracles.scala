@@ -1,0 +1,100 @@
+package graft
+
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
+
+import graft.geo.Metrics
+
+/** Test-only oracles for the metric kernels in [[graft.geo.Metrics]]: the
+  * definitional memoized recursions behind the DP property tests, and a
+  * plain Hausdorff UDF that is independent of the engine's bounded
+  * codegen path. */
+object MetricOracles {
+
+  private def d2(ax: Double, ay: Double, bx: Double, by: Double): Double = {
+    val dx = ax - bx
+    val dy = ay - by
+    dx * dx + dy * dy
+  }
+
+  /** The closed ε box of LCSS/EDR (|Δx| ≤ εx ∧ |Δy| ≤ εy). */
+  private def matches(ax: Double, ay: Double, bx: Double, by: Double,
+                      ex: Double, ey: Double): Boolean =
+    math.abs(ax - bx) <= ex && math.abs(ay - by) <= ey
+
+  /** Unbounded [[Metrics.hausdorff]] over the boxed array columns. */
+  val hausdorffUdf: UserDefinedFunction =
+    udf { (xa: Seq[Double], ya: Seq[Double], xb: Seq[Double], yb: Seq[Double]) =>
+      Metrics.hausdorff(xa.toArray, ya.toArray, xb.toArray, yb.toArray)
+    }
+
+  def dtwNaive(xa: Array[Double], ya: Array[Double],
+               xb: Array[Double], yb: Array[Double]): Double = {
+    val memo = collection.mutable.HashMap.empty[(Int, Int), Double]
+    def c(i: Int, j: Int): Double = memo.getOrElseUpdate((i, j), {
+      val d = math.sqrt(d2(xa(i), ya(i), xb(j), yb(j)))
+      if (i == 0 && j == 0) d
+      else if (i == 0) c(0, j - 1) + d
+      else if (j == 0) c(i - 1, 0) + d
+      else d + math.min(math.min(c(i - 1, j), c(i, j - 1)), c(i - 1, j - 1))
+    })
+    c(xa.length - 1, xb.length - 1)
+  }
+
+  def discreteFrechetNaive(xa: Array[Double], ya: Array[Double],
+                           xb: Array[Double], yb: Array[Double]): Double = {
+    val memo = collection.mutable.HashMap.empty[(Int, Int), Double]
+    def c(i: Int, j: Int): Double = memo.getOrElseUpdate((i, j), {
+      val d = d2(xa(i), ya(i), xb(j), yb(j))
+      if (i == 0 && j == 0) d
+      else if (i == 0) math.max(c(0, j - 1), d)
+      else if (j == 0) math.max(c(i - 1, 0), d)
+      else math.max(math.min(math.min(c(i - 1, j), c(i, j - 1)), c(i - 1, j - 1)), d)
+    })
+    math.sqrt(c(xa.length - 1, xb.length - 1))
+  }
+
+  def lcssCountNaive(xa: Array[Double], ya: Array[Double],
+                     xb: Array[Double], yb: Array[Double],
+                     ex: Double, ey: Double): Int = {
+    val memo = collection.mutable.HashMap.empty[(Int, Int), Int]
+    def c(i: Int, j: Int): Int = if (i < 0 || j < 0) 0 else memo.getOrElseUpdate((i, j), {
+      if (matches(xa(i), ya(i), xb(j), yb(j), ex, ey)) c(i - 1, j - 1) + 1
+      else math.max(c(i - 1, j), c(i, j - 1))
+    })
+    c(xa.length - 1, xb.length - 1)
+  }
+
+  def edrNaive(xa: Array[Double], ya: Array[Double],
+               xb: Array[Double], yb: Array[Double],
+               ex: Double, ey: Double): Int = {
+    val memo = collection.mutable.HashMap.empty[(Int, Int), Int]
+    def c(i: Int, j: Int): Int = memo.getOrElseUpdate((i, j), {
+      if (i == 0) j
+      else if (j == 0) i
+      else {
+        val sub = if (matches(xa(i - 1), ya(i - 1), xb(j - 1), yb(j - 1), ex, ey)) 0 else 1
+        math.min(math.min(c(i - 1, j) + 1, c(i, j - 1) + 1), c(i - 1, j - 1) + sub)
+      }
+    })
+    c(xa.length, xb.length)
+  }
+
+  /** ERP against the gap point (gx, gy), the origin by default. */
+  def erpNaive(xa: Array[Double], ya: Array[Double],
+               xb: Array[Double], yb: Array[Double],
+               gx: Double = 0.0, gy: Double = 0.0): Double = {
+    def d(px: Double, py: Double, qx: Double, qy: Double): Double = math.sqrt(d2(px, py, qx, qy))
+    val memo = collection.mutable.HashMap.empty[(Int, Int), Double]
+    def c(i: Int, j: Int): Double = memo.getOrElseUpdate((i, j), {
+      if (i == 0 && j == 0) 0.0
+      else if (i == 0) c(0, j - 1) + d(xb(j - 1), yb(j - 1), gx, gy)
+      else if (j == 0) c(i - 1, 0) + d(xa(i - 1), ya(i - 1), gx, gy)
+      else math.min(
+        c(i - 1, j - 1) + d(xa(i - 1), ya(i - 1), xb(j - 1), yb(j - 1)),
+        math.min(c(i - 1, j) + d(xa(i - 1), ya(i - 1), gx, gy),
+          c(i, j - 1) + d(xb(j - 1), yb(j - 1), gx, gy)))
+    })
+    c(xa.length, xb.length)
+  }
+}

@@ -38,7 +38,7 @@ class MetricPropertiesTest extends AnyFunSuite {
   test("frechet DP equals naive memoized recursion") {
     cases.foreach { case ((xa, ya), (xb, yb)) =>
       val dp = Metrics.discreteFrechet(xa, ya, xb, yb)
-      val naive = Metrics.discreteFrechetNaive(xa, ya, xb, yb)
+      val naive = MetricOracles.discreteFrechetNaive(xa, ya, xb, yb)
       assert(dp == naive, s"DP $dp != naive $naive")
     }
   }
@@ -112,7 +112,7 @@ class MetricPropertiesTest extends AnyFunSuite {
   test("dtw: DP equals naive recursion; identity/symmetry; >= hausdorff never claimed") {
     cases.foreach { case ((xa, ya), (xb, yb)) =>
       val dp = Metrics.dtw(xa, ya, xb, yb)
-      assert(math.abs(dp - Metrics.dtwNaive(xa, ya, xb, yb)) < 1e-9)
+      assert(math.abs(dp - MetricOracles.dtwNaive(xa, ya, xb, yb)) < 1e-9)
       assert(Metrics.dtw(xa, ya, xa, ya) == 0.0)
       assert(Metrics.dtw(xa, ya, xb, yb) == Metrics.dtw(xb, yb, xa, ya))
       // DTW sums step costs, so it dominates the single worst aligned step:
@@ -126,7 +126,7 @@ class MetricPropertiesTest extends AnyFunSuite {
     cases.take(100).foreach { case ((xa, ya), (xb, yb)) =>
       eps.foreach { case (ex, ey) =>
         val dp = Metrics.lcssCount(xa, ya, xb, yb, ex, ey)
-        assert(dp == Metrics.lcssCountNaive(xa, ya, xb, yb, ex, ey))
+        assert(dp == MetricOracles.lcssCountNaive(xa, ya, xb, yb, ex, ey))
         assert(dp >= 0 && dp <= math.min(xa.length, xb.length))
         assert(dp == Metrics.lcssCount(xb, yb, xa, ya, ex, ey), "lcss symmetric")
       }
@@ -147,7 +147,7 @@ class MetricPropertiesTest extends AnyFunSuite {
     cases.take(100).foreach { case ((xa, ya), (xb, yb)) =>
       val (ex, ey) = (2.0, 25.0)
       val dp = Metrics.edr(xa, ya, xb, yb, ex, ey)
-      assert(dp == Metrics.edrNaive(xa, ya, xb, yb, ex, ey))
+      assert(dp == MetricOracles.edrNaive(xa, ya, xb, yb, ex, ey))
       assert(Metrics.edr(xa, ya, xa, ya, ex, ey) == 0, "edr self-distance 0")
       assert(dp == Metrics.edr(xb, yb, xa, ya, ex, ey), "edr symmetric")
       val (n, m) = (xa.length, xb.length)
@@ -165,7 +165,7 @@ class MetricPropertiesTest extends AnyFunSuite {
     // random triples, not just pairs.
     cases.take(100).foreach { case ((xa, ya), (xb, yb)) =>
       val dp = Metrics.erp(xa, ya, xb, yb)
-      assert(math.abs(dp - Metrics.erpNaive(xa, ya, xb, yb)) < 1e-9)
+      assert(math.abs(dp - MetricOracles.erpNaive(xa, ya, xb, yb)) < 1e-9)
       assert(Metrics.erp(xa, ya, xa, ya) == 0.0, "erp self-distance 0")
       assert(math.abs(dp - Metrics.erp(xb, yb, xa, ya)) < 1e-9, "erp symmetric")
       // deleting everything: cost is the sum of distances to the gap point
@@ -214,6 +214,8 @@ class MetricPropertiesTest extends AnyFunSuite {
         val dx = px - xs(i); val dy = py - ys(i); math.sqrt(dx * dx + dy * dy)
       }.min
       assert(poly(px, py) <= minVertex + 1e-12)
+      // the kernel behind t24 is this same min over segments
+      assert(Metrics.polylineDist(px, py, xs, ys) == poly(px, py))
       // midpoint of a segment is also on the polyline
       val mi = rnd.nextInt(n - 1)
       val (mx, my) = ((xs(mi) + xs(mi + 1)) / 2, (ys(mi) + ys(mi + 1)) / 2)

@@ -76,11 +76,27 @@ class StaticChecksTest extends AnyFunSuite {
     // pitch of the broadcast-side blocking grid) — JsonDocs
     // .bm25QueryConsts' ≤|query terms|-row constants collect (memoized per
     // session+dir; replayed as the d20/d21 broadcast LocalRelation) — and
-    // Probe's two MaxMaskVocab+1-bounded vocabulary collects (d12ab /
-    // d12cold — diagnostic mains, never on a query path).
+    // Probe's MaxMaskVocab+1-bounded vocabulary collect (d12cold — a
+    // diagnostic main, never on a query path).
     // Each allowed site must mention its bound nearby; this guard just
     // keeps the count from silently growing.
     val n = mainSources.map(_._2.sliding("collect()".length).count(_ == "collect()")).sum
     assert(n <= 41, s"collect() call count grew to $n — audit new driver-side collects")
+  }
+
+  test("no boxed Scala UDF wraps a trajectory metric kernel in src/main") {
+    // A UDF over Seq[Double] boxes every coordinate of every pair; the
+    // metric kernels are reached through graft.functions.MetricCol's
+    // static calls instead. Flags any `udf(` / `udf {` with a `Metrics.`
+    // call on its line or the 8 lines after it.
+    val offenders = mainSources.flatMap { case (path, text) =>
+      val lines = text.split("\n", -1)
+      lines.zipWithIndex.collect {
+        case (l, i) if (l.contains("udf(") || l.contains("udf {")) &&
+          lines.slice(i, i + 9).exists(_.contains("Metrics.")) =>
+          s"$path:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty, s"boxed metric UDFs in: $offenders")
   }
 }

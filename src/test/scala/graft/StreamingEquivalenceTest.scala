@@ -486,7 +486,7 @@ class StreamingEquivalenceTest extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
     // batch truth: naive cross pairs under the rounded threshold
-    val fn = graft.functions.MetricUdfs.hausdorff
+    val fn = MetricOracles.hausdorffUdf
     val expected = corpus
       .select(col("user_id").as("cu"), col("xs").as("cxs"), col("ys").as("cys"))
       .crossJoin(batch

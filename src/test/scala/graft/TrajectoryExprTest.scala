@@ -1,13 +1,15 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{HausdorffCodegen, SlicedBoxLb}
+import graft.functions.{MetricCol, SlicedBoxLb}
 import graft.geo.Metrics
 
-/** The native trajectory expressions (graft_boxlb, graft_hausdorff_bounded)
-  * must equal their JVM kernels exactly and must actually participate in
+/** The native trajectory expressions (graft_boxlb and the MetricCol
+  * kernels) must equal their JVM kernels exactly and must actually participate in
   * codegen (no silent interpreted fallback). */
 class TrajectoryExprTest extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -51,7 +53,7 @@ class TrajectoryExprTest extends AnyFunSuite {
     val b = df.select($"id".as("i2"), $"xs".as("xs2"), $"ys".as("ys2"), $"boxes".as("b2"))
     val rows = a.join(broadcast(b), $"i1" < $"i2")
       .select($"i1", $"i2", expr("graft_boxlb(b1, b2)").as("lb"),
-        graft.functions.MetricUdfs.hausdorff($"xs1", $"ys1", $"xs2", $"ys2").as("h"))
+        MetricOracles.hausdorffUdf($"xs1", $"ys1", $"xs2", $"ys2").as("h"))
       .collect()
     assert(rows.length == 30 * 29 / 2)
     val byId = trajs.map(t => t._1 -> t).toMap
@@ -62,27 +64,118 @@ class TrajectoryExprTest extends AnyFunSuite {
     }
   }
 
+  /** One generated kernel input: two trajectories, an abandon bound, the
+    * LCSS/EDR ε box and a point for the polyline distance. */
+  private case class PairCase(xa: Seq[Double], ya: Seq[Double], xb: Seq[Double],
+                              yb: Seq[Double], bound: Double, ex: Double, ey: Double,
+                              px: Double, py: Double)
+
+  private val pairCases: Gen[PairCase] = {
+    // coarse steps make equal coordinates and duplicate points common
+    val coord = Gen.frequency(12 -> Gen.choose(0, 8).map(_ * 0.5),
+      1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity))
+    val traj = for {
+      n <- Gen.frequency(1 -> Gen.const(0), 2 -> Gen.const(1), 5 -> Gen.choose(2, 12))
+      pts <- Gen.listOfN(n, Gen.zip(coord, coord))
+      // now and then a point repeats right after itself
+      dup <- Gen.frequency(3 -> Gen.const(false), 1 -> Gen.const(true))
+      all = if (dup && pts.nonEmpty) pts.head +: pts else pts
+    } yield (all.map(_._1), all.map(_._2))
+    for {
+      (xa, ya) <- traj
+      (xb, yb) <- traj
+      bound <- Gen.oneOf(Gen.const(0.0), Gen.choose(0.0, 6.0), Gen.const(Double.MaxValue))
+      ex <- Gen.choose(0, 4).map(_ * 0.5)
+      ey <- Gen.choose(0, 4).map(_ * 0.5)
+      px <- coord
+      py <- coord
+    } yield PairCase(xa, ya, xb, yb, bound, ex, ey, px, py)
+  }
+
   test("graft_hausdorff_bounded equals Metrics.hausdorffBounded through the SQL path") {
-    HausdorffCodegen.register(spark)
-    val rnd = new scala.util.Random(17)
-    val rows = (0 until 60).map { _ =>
-      val n = 1 + rnd.nextInt(25)
-      val m = 1 + rnd.nextInt(25)
-      (Seq.fill(n)(rnd.nextDouble() * 30), Seq.fill(n)(rnd.nextDouble() * 200),
-        Seq.fill(m)(rnd.nextDouble() * 30), Seq.fill(m)(rnd.nextDouble() * 200),
-        rnd.nextDouble() * 150)
+    // Every MetricKernel entry point (the two SQL names included), with and
+    // without whole-stage codegen and with the interpreted fallback off,
+    // is bit-identical to a direct call of its Metrics kernel.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    MetricCol.register(spark)
+    val coords = ArrayType(DoubleType)
+    val schema = StructType(Seq("xa", "ya", "xb", "yb").map(StructField(_, coords)) ++
+      Seq("bound", "ex", "ey", "px", "py").map(StructField(_, DoubleType)))
+    val (xa, ya, xb, yb) = ($"xa", $"ya", $"xb", $"yb")
+    val cols = Seq(
+      expr("graft_hausdorff_bounded(xa, ya, xb, yb, bound)"),
+      expr("graft_frechet_bounded(xa, ya, xb, yb, bound)"),
+      MetricCol("hausdorff", xa, ya, xb, yb, $"bound"),
+      MetricCol("frechet", xa, ya, xb, yb, $"bound"),
+      MetricCol("hausdorff", xa, ya, xb, yb),
+      MetricCol("frechet", xa, ya, xb, yb),
+      MetricCol.dtw(xa, ya, xb, yb),
+      MetricCol.lcssCount(xa, ya, xb, yb, $"ex", $"ey"),
+      MetricCol.edr(xa, ya, xb, yb, $"ex", $"ey"),
+      MetricCol.erp(xa, ya, xb, yb),
+      MetricCol.closestApproach(xa, ya, xb, yb),
+      MetricCol.polylineDist($"px", $"py", xa, ya))
+    def expected(c: PairCase): Seq[Any] = {
+      val (a, b, d, e) = (c.xa.toArray, c.ya.toArray, c.xb.toArray, c.yb.toArray)
+      Seq[Any](Metrics.hausdorffBounded(a, b, d, e, c.bound), Metrics.frechetBounded(a, b, d, e, c.bound),
+        Metrics.hausdorffBounded(a, b, d, e, c.bound), Metrics.frechetBounded(a, b, d, e, c.bound),
+        Metrics.hausdorff(a, b, d, e), Metrics.discreteFrechet(a, b, d, e),
+        Metrics.dtw(a, b, d, e), Metrics.lcssCount(a, b, d, e, c.ex, c.ey),
+        Metrics.edr(a, b, d, e, c.ex, c.ey), Metrics.erp(a, b, d, e),
+        Metrics.closestApproach(a, b, d, e), Metrics.polylineDist(c.px, c.py, a, b))
     }
-    val out = rows.toDF("xa", "ya", "xb", "yb", "bound")
-      .select(HausdorffCodegen($"xa", $"ya", $"xb", $"yb", $"bound").as("v"))
-      .collect().map(_.getDouble(0))
-    rows.zip(out).foreach { case ((xa, ya, xb, yb, bound), v) =>
-      assert(v == Metrics.hausdorffBounded(xa.toArray, ya.toArray, xb.toArray, yb.toArray, bound))
+    def same(x: Any, y: Any): Boolean = (x, y) match {
+      case (p: Double, q: Double) => java.lang.Double.compare(p, q) == 0
+      case (p: Int, q: Int) => p == q
+      case _ => false
     }
+    def evaluated(cases: Seq[PairCase], conf: (String, String)): Seq[Seq[Any]] = {
+      val prev = spark.conf.getOption(conf._1)
+      spark.conf.set(conf._1, conf._2)
+      try {
+        val rows = cases.zipWithIndex.map { case (c, i) =>
+          Row(c.xa, c.ya, c.xb, c.yb, c.bound, c.ex, c.ey, c.px, c.py, i.toLong) }
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+            schema.add("i", LongType))
+          .select(cols :+ $"i": _*).collect().sortBy(_.getLong(cols.length))
+          .map(r => cols.indices.map(r.get)).toSeq
+      } finally prev match {
+        case Some(v) => spark.conf.set(conf._1, v)
+        case None => spark.conf.unset(conf._1)
+      }
+    }
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val prop = Prop.forAllNoShrink(Gen.listOfN(40, pairCases)) { cases =>
+      val want = cases.map(expected)
+      val bad = for {
+        conf <- Seq("spark.sql.codegen.fallback" -> "false",
+          "spark.sql.codegen.wholeStage" -> "false")
+        (got, (w, c)) <- evaluated(cases, conf).zip(want.zip(cases))
+        k <- cols.indices if !same(got(k), w(k))
+      } yield s"$conf, column $k: ${got(k)} != ${w(k)} for $c"
+      cases.foreach { c =>
+        val pts = c.xa ++ c.ya ++ c.xb ++ c.yb
+        Seq("empty" -> (c.xa.isEmpty || c.xb.isEmpty), "1-point" -> (c.xa.size == 1),
+          "NaN" -> pts.exists(_.isNaN), "Inf" -> pts.exists(_.isInfinite),
+          "duplicate point" -> (c.xa.zip(c.ya).distinct.size < c.xa.size),
+          "bound 0" -> (c.bound == 0.0), "bound max" -> (c.bound == Double.MaxValue),
+          "finite bound" -> (c.bound > 0.0 && c.bound < 10.0))
+          .foreach { case (what, hit) => if (hit) seen(what) += 1 }
+      }
+      bad.isEmpty :| bad.take(3).mkString("\n")
+    }
+    val res = org.scalacheck.Test.check(org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(8).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261017L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    for (what <- Seq("empty", "1-point", "NaN", "Inf", "duplicate point", "bound 0",
+        "bound max", "finite bound"))
+      assert(seen(what) > 0, s"no generated case covered '$what': $seen")
   }
 
   test("both expressions compile under codegen (fallback disabled)") {
     SlicedBoxLb.register(spark)
-    HausdorffCodegen.register(spark)
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val ta = Tables.trajArrays(spark, TestSpark.sf0001)
@@ -90,7 +183,7 @@ class TrajectoryExprTest extends AnyFunSuite {
       val b = ta.select($"user_id".as("u2"), $"boxes".as("b2"), $"xs".as("xs2"), $"ys".as("ys2"))
       val n = a.join(broadcast(b), $"u1" < $"u2")
         .select(expr("graft_boxlb(b1, b2)").as("lb"),
-          HausdorffCodegen($"xs1", $"ys1", $"xs2", $"ys2", lit(1e18)).as("h"))
+          MetricCol("hausdorff", $"xs1", $"ys1", $"xs2", $"ys2", lit(1e18)).as("h"))
         .filter($"lb" >= 0 && $"h" >= $"lb" - 1e-9)
         .count()
       val users = ta.count()
@@ -234,24 +327,6 @@ class TrajectoryExprTest extends AnyFunSuite {
     val (px, py) = graft.operators.GeofenceJoin
       .derivePitch(spark.createDataFrame(pointFence))
     assert(px == 1.0 && py == 1.0)
-  }
-
-  test("Hausdorff computeNoCopy == copy kernel on randomized trajectories and bounds") {
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    val rnd = new scala.util.Random(1714)
-    def traj(n: Int): (Array[Double], Array[Double]) =
-      (Array.fill(n)(rnd.nextDouble() * 40 - 20), Array.fill(n)(rnd.nextDouble() * 40 - 20))
-    for (_ <- 0 until 300) {
-      val (xa, ya) = traj(rnd.nextInt(20))
-      val (xb, yb) = traj(rnd.nextInt(20))
-      val bound = Seq(0.0, 0.5, 5.0, 50.0, Double.MaxValue)(rnd.nextInt(5))
-      val ref = graft.geo.Metrics.hausdorffBounded(xa, ya, xb, yb, bound)
-      val got = graft.functions.HausdorffKernelStatic.computeNoCopy(
-        ArrayData.toArrayData(xa), ArrayData.toArrayData(ya),
-        ArrayData.toArrayData(xb), ArrayData.toArrayData(yb), bound)
-      // bit-identical, including the early-abandon certificate values
-      assert(java.lang.Double.compare(ref, got) == 0, s"$ref != $got (bound=$bound)")
-    }
   }
 
   test("GeofenceJoin.derivePitch: memoized per fence table — a fresh frame with " +

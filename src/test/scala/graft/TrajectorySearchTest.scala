@@ -158,7 +158,7 @@ class TrajectorySearchTest extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
 
       // naive: exact kernel on EVERY cross pair, no bound
-      val fn = graft.functions.MetricUdfs.hausdorff
+      val fn = MetricOracles.hausdorffUdf
       val c = corpus.select(col("user_id").as("cu"),
         col("xs").as("cxs"), col("ys").as("cys"))
       val b = batch.select(col("user_id").as("bu"),
@@ -205,7 +205,7 @@ class TrajectorySearchTest extends AnyFunSuite {
   }
 
   test("allPairsTopK (t2 surface) equals the unpruned all-pairs top-k at two SFs") {
-    val h = graft.functions.MetricUdfs.hausdorff
+    val h = MetricOracles.hausdorffUdf
     for (dir <- Seq(TestSpark.sf0001, TestSpark.sf001)) {
       val ta = Tables.trajArrays(spark, dir)
       val pruned = TrajectorySearch.allPairsTopK(ta, 20, "hausdorff")
