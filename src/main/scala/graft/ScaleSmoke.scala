@@ -217,8 +217,7 @@ object ScaleSmoke {
     // the components machinery alone (pair set memoized).
     if (mode == "all" || mode == "cc") for (f <- Seq(1, 3, 10)) {
       val dir = if (f == 1) Base else scaledDir(spark, f)
-      graft.operators.DocSimilarity.resetCaches()
-      graft.operators.Components.clearMemo()
+      graft.util.Memo.clearAll()
       val (bSec, pairRows) = time(
         graft.operators.DocSimilarity.nearDupPairs(spark, dir).count())
       report("d3_pair_build", s"x$f", bSec, pairRows)
@@ -264,7 +263,7 @@ object ScaleSmoke {
           GraftTable.manifest(tdir, 1).files.size.toLong)
         val (rSec, rRows) = time(GraftTable.readChanges(spark, tdir, 0, 1).count())
         report("table_changelog", s"x$f", rSec, rRows)
-        graft.operators.DocSimilarity.resetCaches()
+        graft.util.Memo.clearAll()
         val (pSec, pRows) = time(graft.operators.DocSimilarity
           .incrementalNearDupsTable(spark, tdir, 0, 1).count())
         report("table_probe", s"x$f", pSec, pRows)
@@ -357,7 +356,7 @@ object ScaleSmoke {
     // the full cold cost, not a memoized token frame.
     if (mode == "all" || mode == "bm25") for (f <- Seq(1, 3, 10)) {
       val dir = if (f == 1) Base else scaledDir(spark, f)
-      Tables.resetCaches()
+      graft.util.Memo.clearAll()
       val (sec, rows) = time(SparkEntry.queries("d20_bm25_topk")(spark, dir).count())
       report("bm25_topk", s"x$f", sec, rows)
     }
@@ -417,7 +416,7 @@ object ScaleSmoke {
       var base: Map[Int, Long] = Map.empty
       for (f <- Seq(1, 3, 10)) {
         val dir = if (f == 1) Base else scaledDir(spark, f)
-        Tables.resetCaches()
+        graft.util.Memo.clearAll()
         val (sec, rows) = time {
           // only n_inside is clone-invariant under ×k (event ids are
           // shifted per clone, so id-derived checksums cannot scale)

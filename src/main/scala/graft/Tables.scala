@@ -4,6 +4,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
+
 /** Table loaders + derived trajectory views for the declared query contract
   * (SURVEY.md §1.2, FIXTURES.md).
   *
@@ -22,19 +24,11 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   // Memoization contract: inputs under sfDir are immutable for the life of
-  // the session (true for the driver's fixtures). resetCaches() exists for
-  // tests that need to force re-execution.
-  // bounded at 256 entries (~23 keys per data dir → ~11 dirs warm at once)
-  // with unpersist-on-evict, so a service session over many dirs cannot
-  // accumulate storage without end
-  private val cache = new graft.util.Memo[(SparkSession, String, String), DataFrame](
-    maxEntries = 256)(graft.util.Memo.unpersistDf)
-
-  /** Drop all memoized/persisted frames, releasing executor storage. */
-  def resetCaches(): Unit = cache.clear()
+  // the session (true for the fixtures); `Memo.clearAll()` forces
+  // re-execution.
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, name)) {
+    Memo(spark, "table", sfDir, name) { _ =>
       if (name == "events") {
         // The fixture has shipped events.ts under two physical layouts:
         // TIMESTAMP(NANOS) (Spark 4.x refuses it unless the legacy flag maps
@@ -99,18 +93,15 @@ object Tables {
     * exact for the declared oracles.
     */
   def trajArrays(spark: SparkSession, sfDir: String, eventType: String = "purchase"): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, s"trajArrays:$eventType")) {
-      // persisted index artifact (arrays + slice boxes): a later session
-      // reads the parquet instead of re-aggregating the event stream
-      // name carries the layout version (f4 = flat 4-double boxes) so a code
-      // change can never read an old-layout artifact
-      graft.sources.IndexStore
-        .materialize(spark, sfDir, s"traj_${eventType}_f4") {
-          trajArraysOf(pts(spark, sfDir, eventType))
-        }._1
-        // tiny (one row per user); shared by t2 (self-join both sides) and t3
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    // persisted index artifact (arrays + slice boxes): a later session
+    // reads the parquet instead of re-aggregating the event stream; the
+    // name carries the layout version (f4 = flat 4-double boxes) so a code
+    // change can never read an old-layout artifact. Tiny (one row per
+    // user); shared by t2 (self-join both sides) and t3.
+    Memo(spark, "trajArrays", sfDir, eventType)(_.persist(
+      graft.sources.IndexStore.materialize(spark, sfDir, s"traj_${eventType}_f4") {
+        trajArraysOf(pts(spark, sfDir, eventType))
+      }._1))
 
   /** Core of [[trajArrays]] over any (user_id, ts_us, event_id, x, y) frame —
     * exposed so tests can drive synthetic (e.g. mega-user) trajectories. */
@@ -151,12 +142,10 @@ object Tables {
     * across the document-pipeline queries so the corpus is exploded once
     * per session, not once per query. */
   def docTokens(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, "docTokens")) {
+    Memo(spark, "docTokens", sfDir)(_.persist(
       table(spark, sfDir, "documents")
         .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("tok"))
-        .filter(col("tok") =!= "")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+        .filter(col("tok") =!= "")))
 
   /** Per-(doc, token) term frequency over [[docTokens]] — the posting-list
     * base frame of p18 (TF-IDF) and d20 (BM25). Memoized + persisted so
@@ -165,11 +154,9 @@ object Tables {
     * is the materialized inverted-index fact table a search tier maintains
     * incrementally, not a per-query recompute. */
   def docTermFreq(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, "docTermFreq")) {
+    Memo(spark, "docTermFreq", sfDir)(_.persist(
       docTokens(spark, sfDir)
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))))
 
   /** Per-(doc, bigram) term frequency — the n=2 posting frame of the
     * bigram language-model family (p21 surprisal + p25 argmax), memoized +
@@ -180,7 +167,7 @@ object Tables {
     * the read side (guide §2.3 — shuffle narrower rows). Documents shorter
     * than 2 tokens yield no rows (same as the shingle form). */
   def docBigramTf(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, "docBigramTf")) {
+    Memo(spark, "docBigramTf", sfDir)(_.persist(
       table(spark, sfDir, "documents")
         .select(col("doc_id"), expr("filter(split(text, ' '), t -> t <> '')").as("ts"))
         .filter(size(col("ts")) >= 2)
@@ -188,9 +175,7 @@ object Tables {
           "transform(sequence(0, size(ts) - 2), i -> named_struct('w1', ts[i], 'w2', ts[i + 1]))"))
           .as("bg"))
         .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-        .groupBy(col("doc_id"), col("w1"), col("w2")).agg(count(lit(1)).as("tf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+        .groupBy(col("doc_id"), col("w1"), col("w2")).agg(count(lit(1)).as("tf"))))
 
   /** Per-doc token count over [[docTermFreq]] — the BM25 document-length
     * frame (d20 + d21 both consume it per call), memoized + persisted so
@@ -198,11 +183,9 @@ object Tables {
     * session. Corpus-side only (query-independent) — the same
     * materialized-index story as [[docTermFreq]]. */
   def docLengths(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, "docLengths")) {
+    Memo(spark, "docLengths", sfDir)(_.persist(
       docTermFreq(spark, sfDir)
-        .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+        .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))))
 
   /** Per-token document frequency over [[docTermFreq]] — the IDF side of
     * the retrieval index (vocabulary-sized), memoized + persisted: d20/d21
@@ -210,11 +193,9 @@ object Tables {
     * query terms; the full df table is query-independent and is exactly
     * what a search tier persists beside its postings. */
   def tokenDocFreq(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, "tokenDocFreq")) {
+    Memo(spark, "tokenDocFreq", sfDir)(_.persist(
       docTermFreq(spark, sfDir)
-        .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+        .groupBy(col("tok")).agg(count(lit(1)).as("df"))))
 
   /** [[docTermFreq]] widened with the per-doc length — the BM25 scoring
     * fact frame (r14): a search index stores dl beside its postings
@@ -223,21 +204,17 @@ object Tables {
     * every invocation. Query-independent, memoized + persisted like its
     * two inputs (which it is derived from, one pass each). */
   def bm25Postings(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, "bm25Postings")) {
+    Memo(spark, "bm25Postings", sfDir)(_.persist(
       docTermFreq(spark, sfDir)
-        .join(docLengths(spark, sfDir), "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+        .join(docLengths(spark, sfDir), "doc_id")))
 
   /** One-row corpus stats frame (n_docs, total token occurrences) — the
     * BM25 normalization scalars, memoized + persisted (query-independent;
     * d20/d21 re-aggregated documents AND the posting frame per call). */
   def corpusTokenStats(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, "corpusTokenStats")) {
+    Memo(spark, "corpusTokenStats", sfDir)(_.persist(
       table(spark, sfDir, "documents").agg(count(lit(1)).as("n_docs"))
-        .crossJoin(docTermFreq(spark, sfDir).agg(sum(col("tf")).as("total")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+        .crossJoin(docTermFreq(spark, sfDir).agg(sum(col("tf")).as("total")))))
 
   /** Corpus bigram counts (w1, w2, n) over [[docBigramTf]] — the
     * vocabulary²-bounded fact frame of the bigram-LM family (r14): p21 and
@@ -245,11 +222,9 @@ object Tables {
     * the same query-independent counts; the aggregation now runs once per
     * session (Σ per-doc tf ≡ the raw bigram count — exact integers). */
   def bigramCounts(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, "bigramCounts")) {
+    Memo(spark, "bigramCounts", sfDir)(_.persist(
       docBigramTf(spark, sfDir)
-        .groupBy(col("w1"), col("w2")).agg(sum(col("tf")).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+        .groupBy(col("w1"), col("w2")).agg(sum(col("tf")).as("n"))))
 
   /** Measured vocabulary size = rows of [[tokenDocFreq]] — one cheap count
     * over the persisted sidecar, memoized per (session, dir). Gates the
@@ -258,11 +233,15 @@ object Tables {
     * forced driver OOM, not a plan — so the hint applies only while the
     * measured size fits the broadcast cap; past it the join falls back to
     * the planner/AQE. */
-  private val vocabSizeMemo =
-    new graft.util.Memo[(SparkSession, String), Long]()(_ => ())
   def vocabSize(spark: SparkSession, sfDir: String): Long =
-    vocabSizeMemo.getOrElseUpdate((spark, sfDir))(
-      tokenDocFreq(spark, sfDir).count())
+    Memo(spark, "vocabSize", sfDir)(_ => tokenDocFreq(spark, sfDir).count())
+
+  /** Measured distinct (tok, lang) count = rows of p3's per-language
+    * frequency frame, memoized like [[vocabSize]]: gates that frame's
+    * broadcast hint on its own size, not on an assumed language count. */
+  def tokLangPairs(spark: SparkSession, sfDir: String): Long =
+    Memo(spark, "tokLangPairs", sfDir)(
+      _ => docTokens(spark, sfDir).select(col("tok"), col("lang")).distinct().count())
 
   /** Benchmark-decontamination hit list (doc_id, n_hits) under the
     * fixture's declared split (benchmark = doc_id % 50 == 0, 3-gram
@@ -273,13 +252,12 @@ object Tables {
     * the build-once blocklist artifact a real pipeline would persist
     * beside the corpus. */
   def decontamHits(spark: SparkSession, sfDir: String): DataFrame =
-    cache.getOrElseUpdate((spark, sfDir, "decontamHits")) {
+    Memo(spark, "decontamHits", sfDir) { m =>
       val sh = graft.operators.Decontaminate.wordShingles(
         table(spark, sfDir, "documents").select(col("doc_id"), col("text")), 3)
-      graft.operators.Decontaminate.hitsBloom(
+      m.persist(graft.operators.Decontaminate.hitsBloom(
           sh.filter(col("doc_id") % 50 =!= 0),
-          sh.filter(col("doc_id") % 50 === 0))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          sh.filter(col("doc_id") % 50 === 0)))
     }
 
   /** Cache the frequently-scanned fact tables in memory — called by Bench
@@ -287,8 +265,7 @@ object Tables {
     * analog is a shared InMemoryRelation / warmed storage layer, not a
     * correctness dependency; Verify runs uncached.
     */
-  def cacheHot(spark: SparkSession, sfDir: String): Unit = {
+  def cacheHot(spark: SparkSession, sfDir: String): Unit =
     Seq("lineitem", "orders", "customer", "part", "events", "documents", "embeddings")
-      .foreach(n => table(spark, sfDir, n).cache().count())
-  }
+      .foreach(n => Memo(spark, "hotTable", sfDir, n)(_.persist(table(spark, sfDir, n)).count()))
 }

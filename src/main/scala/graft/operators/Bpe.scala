@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
+
 /** Byte-pair-encoding MERGE TRAINING (Sennrich et al., ACL 2016) — the
   * operator that LEARNS a subword vocabulary from the corpus (p10 only
   * segments by fixed char classes; a pretraining pipeline tokenizes with a
@@ -113,13 +115,12 @@ object Bpe {
     * name because oracle-SQL call sites splice it into SQL text. */
   val PretokenPatternSql: String = PretokenPattern
 
-  /** Memo of (merge table, post-merge segmented vocabulary) per (session,
-    * dir-key, k, batchM): the merge table is a ≤K-row LOCAL frame; the
-    * vocabulary frame is persisted and released on eviction. */
-  private val memo =
-    new graft.util.Memo[(SparkSession, String, Int, Int), (DataFrame, DataFrame)](
-    )(v => graft.util.Memo.releaseCheckpoint(v._2)) // checkpoint-backed: plain
-    // unpersist() is a no-op on a LogicalRDD-rooted frame
+  /** The trained (merge table, post-merge segmented vocabulary) per
+    * (caller key, k, batchM): the merge table is a ≤K-row LOCAL frame; the
+    * vocabulary frame is snapped and released with the entry. */
+  private def trained(spark: SparkSession, words: DataFrame, cacheKey: String,
+                      k: Int, batchM: Int): (DataFrame, DataFrame) =
+    Memo(spark, "bpe", cacheKey, k, batchM)(train(spark, words, k, batchM, _))
 
   /** Learn the top-`k` merges over the `words` vocabulary, `batchM` per
     * round (see the batched-rounds contract above; 1 = pure sequential).
@@ -131,9 +132,7 @@ object Bpe {
     * and a segmentation missing the new words. */
   def learnMerges(spark: SparkSession, words: DataFrame, cacheKey: String,
                   k: Int, batchM: Int = 1): DataFrame =
-    memo.getOrElseUpdate((spark, cacheKey, k, batchM)) {
-      train(spark, words, k, batchM)
-    }._1
+    trained(spark, words, cacheKey, k, batchM)._1
 
   /** The vocabulary AFTER the `k` learned merges: (word, freq,
     * syms ARRAY<STRING>) — the trained tokenizer's segmentation of every
@@ -142,9 +141,7 @@ object Bpe {
     * training. */
   def segmentedVocabulary(spark: SparkSession, words: DataFrame,
                           cacheKey: String, k: Int, batchM: Int = 1): DataFrame =
-    memo.getOrElseUpdate((spark, cacheKey, k, batchM)) {
-      train(spark, words, k, batchM)
-    }._2
+    trained(spark, words, cacheKey, k, batchM)._2
 
   /** (word, freq BIGINT) vocabulary of [[PretokenPattern]] pretokens of
     * `textCol`. */
@@ -179,7 +176,7 @@ object Bpe {
   }
 
   private def train(spark: SparkSession, words: DataFrame, k: Int,
-                    batchM: Int): (DataFrame, DataFrame) = {
+                    batchM: Int, frames: Memo.Frames): (DataFrame, DataFrame) = {
     import spark.implicits._
     require(batchM >= 1, s"batchM must be >= 1: $batchM")
     // initial symbols: the word's codepoints — regexp_extract_all('(?s).')
@@ -198,12 +195,8 @@ object Bpe {
     // Fine on local[n] smoke runs; for a long-K run on a real cluster,
     // set `sc.setCheckpointDir(...)` BEFORE training and rounds snapshot
     // to reliable storage instead (recoverable across executor loss, at
-    // one distributed write per round). The choice is made per round off
-    // the session's checkpoint-dir config.
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def snap(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
-    var syms = snap(words.select(col("word"), col("freq"),
+    // one distributed write per round) — [[Snap]]'s checkpoint-dir switch.
+    var syms = frames.snap(words.select(col("word"), col("freq"),
       regexp_extract_all(col("word"), lit("(?s)."), lit(0)).as("syms")))
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long, Long)]
     var done = false
@@ -239,22 +232,22 @@ object Bpe {
                 array(concat(last, x))))
               .otherwise(concat(acc, array(x)))
           })
-        val next = snap(
+        val next = frames.snap(
           syms.select(col("word"), col("freq"), mergeFold.as("syms")))
         val nSymbols = next.agg(sum(col("freq") * size(col("syms"))))
           .collect()(0).getLong(0) // bounded: one scalar
         // checkpointed blocks have no CacheManager entry — release the
         // round's RDD storage EAGERLY (at K=32k, waiting for driver GC
         // would stack thousands of vocabulary copies on the executors)
-        graft.util.Memo.releaseCheckpoint(syms)
+        graft.util.Snap.release(syms)
         syms = next
         admitted.foreach { case (lhs, rhs, cnt) =>
           out += ((out.size + 1, lhs, rhs, cnt, nSymbols))
         }
       }
     }
-    // the final vocabulary stays persisted — it IS the trained tokenizer's
-    // segmentation table; released by the memo's eviction hook
+    // the final vocabulary stays materialized — it IS the trained
+    // tokenizer's segmentation table; released with the registry entry
     (out.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count", "n_symbols_after"),
       syms)
   }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
+import graft.util.Snap.Ops
+
 /** Connected components over an undirected edge list — the grouping step of
   * near-duplicate deduplication: near-dup PAIRS (from the Jaccard / MinHash
   * / SimHash joins) become dedup GROUPS, each keeping one canonical document
@@ -28,24 +31,19 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
-  /** Converged component labelings memoized per (session, caller key) —
-    * the labeling is a shared derived artifact (d6 group stats and d9
+  /** [[connectedComponents]] snapped and registered under the caller's
+    * key — the labeling is a shared derived artifact (d6 group stats and d9
     * keep-one filtering both consume the SAME labels over the same memoized
     * pair set), so a warm session runs the contraction loop once. */
-  private val memo =
-    new graft.util.Memo[(org.apache.spark.sql.SparkSession, String), DataFrame]()(
-      graft.util.Memo.releaseCheckpoint)
-
-  /** Drop memoized labelings, releasing their checkpoint storage. */
-  def clearMemo(): Unit = memo.clear()
-
-  /** [[connectedComponents]] with the result memoized + materialized per
-    * (session, cacheKey). */
   def connectedComponentsCached(edges: DataFrame, cacheKey: String,
                                 maxIter: Int = 30,
                                 assumeCanonical: Boolean = false): DataFrame =
-    memo.getOrElseUpdate((edges.sparkSession, cacheKey))(
-      connectedComponents(edges, maxIter, assumeCanonical).localCheckpoint())
+    labels(edges, Some(cacheKey), maxIter, assumeCanonical)
+
+  private def labels(edges: DataFrame, cacheKey: Option[String], maxIter: Int,
+                     assumeCanonical: Boolean): DataFrame =
+    Memo.get(edges.sparkSession, "components", cacheKey, maxIter, assumeCanonical)(
+      _.snap(connectedComponents(edges, maxIter, assumeCanonical)))
 
   /** One contraction round over canonical (u > v) edges: rewire either the
     * larger-than-x neighbors (large-star) or the ≤-x neighbors plus x itself
@@ -85,7 +83,7 @@ object Components {
         edges.select(col("b").as("u"), col("a").as("v"))
       else
         edges.select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-          .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+          .filter(col("u") =!= col("v")).distinct().snap()
     var geN = ge.count()
     var iter = 0
     var converged = false
@@ -101,9 +99,9 @@ object Components {
         println(f"CCDBG $label: ${(System.nanoTime()-t0)/1e9}%.2f s"); r }
     while (!converged && iter < maxIter) {
       val mid = tdbg(s"iter$iter-large") { round(ge, largeStar = true)
-        .localCheckpoint() } // truncate lineage — the loop must not build a deep plan
+        .snap() } // truncate lineage — the loop must not build a deep plan
       val midN = mid.count()
-      val next = tdbg(s"iter$iter-small") { round(mid, largeStar = false).localCheckpoint() }
+      val next = tdbg(s"iter$iter-small") { round(mid, largeStar = false).snap() }
       val nextN = next.count()
       // converged when NEITHER round changes the edge set (the published
       // stopping condition — the graph is then a star per component). After
@@ -130,11 +128,8 @@ object Components {
                   cacheKey: Option[String] = None): DataFrame = {
     // similarity joins emit distinct pairs with d1 < d2 — already canonical
     val edges = pairs.select(col(d1).as("a"), col(d2).as("b"))
-    val labels = cacheKey match {
-      case Some(key) => connectedComponentsCached(edges, key, assumeCanonical = true)
-      case None => connectedComponents(edges, assumeCanonical = true)
-    }
-    labels.groupBy(col("comp").as("group_id"))
+    labels(edges, cacheKey, maxIter = 30, assumeCanonical = true)
+      .groupBy(col("comp").as("group_id"))
       .agg(count(lit(1)).as("n_docs"))
   }
 }

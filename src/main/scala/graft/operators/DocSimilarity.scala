@@ -3,9 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
+import graft.util.Memo
 import graft.util.Snap.Ops
 
 /** Exact token-set (Jaccard) near-duplicate detection over `documents`
@@ -28,18 +28,6 @@ import graft.util.Snap.Ops
   */
 object DocSimilarity {
 
-  /** Memo entry: the pair-set frame plus any persisted intermediates it was
-    * built over (e.g. the distinct-token frame) — eviction releases ALL of
-    * them, not just the result. */
-  private case class Cached(result: DataFrame, deps: Seq[DataFrame] = Nil)
-  private val memo = new graft.util.Memo[(SparkSession, String), Cached]()(
-    c => (c.result +: c.deps).foreach(df =>
-      try df.unpersist() catch { case _: Throwable => () }))
-
-  /** Drop memoized pair sets, releasing their executor storage (inputs are
-    * immutable per session). */
-  def resetCaches(): Unit = memo.clear()
-
   /** Vocabulary bound for the bitmap strategy: 64 words × 64 bits. Above
     * this the dictionary stops being a cheap broadcast and the prefix-
     * filtered inverted index takes over. */
@@ -48,12 +36,10 @@ object DocSimilarity {
   /** All same-lang doc pairs (d1 < d2) with 5·|∩| ≥ 3·|∪| (Jaccard ≥ 0.6
     * in exact integer arithmetic): columns (d1, d2, lang, jaccard). */
   def nearDupPairs(s: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((s, dir)) {
+    Memo(s, "nearDupPairs", dir) { m =>
       // persisted: consumed by the vocab probe plus two branches of the DAG
-      val toks = distinctTokens(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      Cached(jaccardPairs(toks, 3, 5).persist(StorageLevel.MEMORY_AND_DISK),
-        deps = Seq(toks))
-    }.result
+      m.persist(jaccardPairs(m.persist(distinctTokens(s, dir)), 3, 5))
+    }
 
   /** [[jaccardPairs]] memoized + persisted per (session, caller key) — for
     * a token frame that is itself a build-once artifact (p8's shingle
@@ -64,17 +50,13 @@ object DocSimilarity {
     * Session-scoped only — nothing persists across JVMs. */
   def jaccardPairsCached(toks: DataFrame, num: Int, den: Int,
                          cacheKey: String): DataFrame =
-    memo.getOrElseUpdate((toks.sparkSession, s"$cacheKey#jaccard:$num:$den")) {
-      Cached(jaccardPairs(toks, num, den).persist(StorageLevel.MEMORY_AND_DISK))
-    }.result
+    Memo(toks.sparkSession, "jaccardPairs", cacheKey, num, den)(
+      _.persist(jaccardPairs(toks, num, den)))
 
   /** All ordered same-lang containment pairs at 10·|∩| ≥ 9·|S(d1)| —
     * memoized + persisted per (session, dir) like [[nearDupPairs]]. */
   def containmentNearDups(s: SparkSession, dir: String): DataFrame =
-    memo.getOrElseUpdate((s, s"$dir#containment")) {
-      Cached(containmentPairs(distinctTokens(s, dir), 9, 10)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    }.result
+    Memo(s, "containmentPairs", dir)(_.persist(containmentPairs(distinctTokens(s, dir), 9, 10)))
 
   /** Incremental-ingestion near-dup probe: CROSS pairs only, between the
     * existing corpus (docs whose `source` is in `oldSources`) and the new
@@ -121,8 +103,8 @@ object DocSimilarity {
 
   def incrementalNearDups(s: SparkSession, dir: String,
                           oldSources: Seq[String]): DataFrame =
-    memo.getOrElseUpdate((s, s"$dir#incr:${oldSources.sorted.mkString(",")}")) {
-      val toks = distinctTokens(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
+    Memo(s, "incrementalNearDups", dir, oldSources.sorted) { m =>
+      val toks = m.persist(distinctTokens(s, dir))
       val srcMap = Tables.table(s, dir, "documents")
         .select(col("doc_id"), col("source"))
       val oldIds = srcMap.filter(col("source").isin(oldSources: _*))
@@ -133,8 +115,8 @@ object DocSimilarity {
       val toksB = toks.join(newIds, Seq("doc_id"), "left_semi")
       val pairs = incrementalPairsOver(s, toksA, toksB,
         Some(incrCorpusKey(s, dir, oldSources)))
-      Cached(pairs.persist(StorageLevel.MEMORY_AND_DISK), deps = Seq(toks))
-    }.result
+      m.persist(pairs)
+    }
 
   /** The incremental-probe core, over pre-tokenized corpus/batch sides:
     * CORPUS-side vocabulary ONLY (bounded probe, MaxMaskVocab+1 rows) — a
@@ -182,18 +164,17 @@ object DocSimilarity {
     * itself rolls forward. */
   def incrementalNearDupsTable(s: SparkSession, tableDir: String,
                                corpusVersion: Int, batchVersion: Int): DataFrame =
-    memo.getOrElseUpdate((s, s"$tableDir#tincr:$corpusVersion:$batchVersion")) {
+    Memo(s, "incrementalNearDupsTable", tableDir, corpusVersion, batchVersion) { m =>
       val toksOf = (df: DataFrame) => df
         .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("tok"))
         .filter(col("tok") =!= "").distinct()
       val corpus = graft.sources.GraftTable.read(s, tableDir, Some(corpusVersion))
       val batch = graft.sources.GraftTable
         .readChanges(s, tableDir, corpusVersion, batchVersion)
-      val toksA = toksOf(corpus).persist(StorageLevel.MEMORY_AND_DISK)
+      val toksA = m.persist(toksOf(corpus))
       val key = tableSnapshotKey(tableDir, corpusVersion)
-      Cached(incrementalPairsOver(s, toksA, toksOf(batch), Some(key))
-        .persist(StorageLevel.MEMORY_AND_DISK), deps = Seq(toksA))
-    }.result
+      m.persist(incrementalPairsOver(s, toksA, toksOf(batch), Some(key)))
+    }
 
   /** Snapshot-version validity key: immutable snapshot ⇒ the version pins
     * the corpus content with zero scanning. The table identity is a 64-bit

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Memo
+
 /** Shared geofence-attribution builder (round-12 directive #2): points ×
   * a polygon-fence TABLE, blocked by a bbox grid whose cell pitch is
   * DERIVED from the fence extents — no fixture-tuned constants. One
@@ -46,8 +48,7 @@ object GeofenceJoin {
     * pitch, which stays CORRECT by the prune-only invariant — blocking
     * granularity is the only thing at stake. */
   def derivePitch(fences: DataFrame): (Double, Double) = {
-    val key = (fences.sparkSession, fences.queryExecution.analyzed.semanticHash())
-    pitchMemo.getOrElseUpdate(key) {
+    Memo(fences.sparkSession, "fencePitch", fences.queryExecution.analyzed.semanticHash()) { _ =>
       val r = fences.agg(
         max(col("maxx") - col("minx")), max(col("maxy") - col("miny"))).collect()(0)
       require(!r.isNullAt(0), "geofence join: empty fence table")
@@ -55,9 +56,6 @@ object GeofenceJoin {
       (pos(r.getDouble(0)), pos(r.getDouble(1)))
     }
   }
-
-  private val pitchMemo =
-    new graft.util.Memo[(org.apache.spark.sql.SparkSession, Int), (Double, Double)]()(_ => ())
 
   /** The fence table exploded to its ≤4 covering grid cells, keyed
     * (cx, cy) — the broadcast build side. `fences` must carry

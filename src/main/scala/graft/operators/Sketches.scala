@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
+import graft.util.Memo
 
 /** Randomized/sketch-based near-duplicate and similarity operators
   * (SURVEY §2.8; LLM-pipeline dedup surface). All seeds are fixed, so runs
@@ -34,14 +35,11 @@ object Sketches {
   /** Embedding dimensionality, inferred FROM THE DATA in one place (one
     * bounded 1-row read — round-11 directive #4): 64 is a property of the
     * shipped fixture, not of the sketch family, so every index build
-    * threads this through instead of assuming it. A bounded session Memo
-    * like every other per-(session, dir) cache — cleared by
-    * [[resetCaches]], so a rewritten fixture re-probes. */
-  private val dimMemo = new graft.util.Memo[(SparkSession, String), Int]()(_ => ())
+    * threads this through instead of assuming it. A registered artifact
+    * like every other per-(session, dir) cache — `Memo.clearAll()` makes a
+    * rewritten fixture re-probe. */
   private[graft] def embeddingDim(s: SparkSession, dir: String): Int =
-    dimMemo.getOrElseUpdate((s, dir)) {
-      embeddingDimOf(Tables.table(s, dir, "embeddings"))
-    }
+    Memo(s, "embeddingDim", dir)(_ => embeddingDimOf(Tables.table(s, dir, "embeddings")))
   private[graft] def embeddingDimOf(vecs: DataFrame): Int =
     vecs.limit(1).select(size(col("embedding"))).collect().headOption
       .map(_.getInt(0))
@@ -124,15 +122,10 @@ object Sketches {
     * params) — a deterministic derived artifact (seeded hashes) consumed by
     * p6 and by any downstream near-dup verify, so a warm session builds the
     * ~|near-dup-pairs|-row candidate set once (the d3-pair-set precedent). */
-  private val mhMemo =
-    new graft.util.Memo[(SparkSession, String, Int, Int, Int), DataFrame]()(graft.util.Memo.unpersistDf)
-
   def minhashCandidates(s: SparkSession, dir: String, k: Int = 16, bands: Int = 8,
                         maxBucketSize: Int = Int.MaxValue): DataFrame =
-    mhMemo.getOrElseUpdate((s, dir, k, bands, maxBucketSize)) {
-      minhashCandidatesUncached(s, dir, k, bands, maxBucketSize)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    Memo(s, "minhashCandidates", dir, k, bands, maxBucketSize)(
+      _.persist(minhashCandidatesUncached(s, dir, k, bands, maxBucketSize)))
 
   private def minhashCandidatesUncached(s: SparkSession, dir: String, k: Int, bands: Int,
                                         maxBucketSize: Int): DataFrame = {
@@ -173,9 +166,6 @@ object Sketches {
     * the d14 `incrMaskBuilds` precedent). */
   private[graft] val mhIndexBuilds = new java.util.concurrent.atomic.AtomicLong
 
-  private val mhGateMemo =
-    new graft.util.Memo[(SparkSession, String, String), DataFrame]()(graft.util.Memo.unpersistDf)
-
   /** d18: MinHash-LSH INCREMENTAL ingest gate — the lexical-sketch member
     * of the incremental-dedup trilogy (d14/d16 exact token-set probe, v11
     * semantic gate, this). The corpus's banded signature rows
@@ -201,16 +191,15 @@ object Sketches {
     * planted-twin catch, and build-once artifact reuse instead). */
   def minhashIngestGate(s: SparkSession, dir: String, oldSources: Seq[String],
                         k: Int = 16, bands: Int = 8): DataFrame =
-    mhGateMemo.getOrElseUpdate((s, dir, oldSources.sorted.mkString(","))) {
+    Memo(s, "minhashIngestGate", dir, oldSources.sorted, k, bands) { m =>
       val docs = Tables.table(s, dir, "documents")
       // build-once corpus index: keyed by roster + corpus content (append
       // of NEW sources leaves it valid — the d14 keying contract) + params
       val key = DocSimilarity.incrCorpusKey(s, dir, oldSources) + s"-mh$k-$bands"
-      minhashCrossGate(s,
+      m.persist(minhashCrossGate(s,
         docs.filter(col("source").isin(oldSources: _*)),
         docs.filter(!col("source").isin(oldSources: _*)),
-        DocSimilarity.distinctTokens(s, dir), Some(key), k, bands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        DocSimilarity.distinctTokens(s, dir), Some(key), k, bands))
     }
 
   /** The d18 core over explicit corpus/batch document frames (ScaleSmoke
@@ -402,9 +391,6 @@ object Sketches {
     * params), NOT by the DataFrame, so passing a different `vecs` under a
     * reused key returns the first call's persisted candidate set. Pass None
     * to disable memoization for ad-hoc inputs. */
-  private val lshCandMemo =
-    new graft.util.Memo[(SparkSession, String, Int, Int), DataFrame]()(graft.util.Memo.unpersistDf)
-
   def lshRefinedPairs(vecs: DataFrame, nPlanes: Int = 8, tables: Int = 12,
                       cacheKey: Option[String] = None): DataFrame = {
     val s = vecs.sparkSession
@@ -443,11 +429,7 @@ object Sketches {
           col("id1") < col("id2"))
         .select(col("id1"), col("id2")).distinct()
     }
-    val cand = cacheKey match {
-      case Some(key) => lshCandMemo.getOrElseUpdate((s, key, nPlanes, tables))(
-        buildCand().persist(StorageLevel.MEMORY_AND_DISK))
-      case None => buildCand()
-    }
+    val cand = Memo.get(s, "lshCandidates", cacheKey, nPlanes, tables)(_.persist(buildCand()))
     // the candidate set (~collision pairs) vastly outnumbers the base rows at
     // any scale where LSH pays, so the rejoin streams candidates against the
     // slim (id, emb, nrm) side — AQE broadcasts it when it fits
@@ -476,23 +458,12 @@ object Sketches {
   final case class IvfIndex(centers: Array[Array[Double]], assigned: DataFrame,
                             fromArtifact: Boolean)
 
-  private val ivfMemo = new graft.util.Memo[(SparkSession, String, Int), IvfIndex]()(
-    ix => ix.assigned.unpersist())
-
-  /** Evict every memoized index/candidate set, releasing executor storage
-    * (disk IndexStore artifacts stay). */
-  def resetCaches(): Unit = {
-    ivfMemo.clear(); mhMemo.clear(); lshCandMemo.clear()
-    pqMemo.clear(); hamMemo.clear(); ivfOverMemo.clear(); mhGateMemo.clear()
-    sqMemo.clear(); dimMemo.clear()
-  }
-
   /** Build (or load) the IVF index: if the (centers, assigned) parquet
     * artifacts are complete, read them — no k-means scan at all; otherwise
     * run the seeded k-means fit once, assign each vector to its list, and
     * write both artifacts for the next session. */
   def buildIvfIndex(s: SparkSession, dir: String, nlist: Int = 16): IvfIndex =
-    ivfMemo.getOrElseUpdate((s, dir, nlist)) {
+    Memo(s, "ivfIndex", dir, nlist) { m =>
       import graft.sources.IndexStore
       val cPath = IndexStore.artifactPath(s, dir, s"ivf${nlist}_centers")
       val aPath = IndexStore.artifactPath(s, dir, s"ivf${nlist}_assigned")
@@ -501,8 +472,7 @@ object Sketches {
       if (canLoad) {
         val centers = s.read.parquet(cPath).orderBy(col("list_id")).collect()
           .map(_.getSeq[Double](1).toArray)
-        val assigned = s.read.parquet(aPath).persist(StorageLevel.MEMORY_AND_DISK)
-        IvfIndex(centers, assigned, fromArtifact = true)
+        IvfIndex(centers, m.persist(s.read.parquet(aPath)), fromArtifact = true)
       } else {
         import org.apache.spark.ml.clustering.KMeans
         import org.apache.spark.ml.linalg.Vectors
@@ -523,8 +493,7 @@ object Sketches {
           assigned.write.mode("overwrite").parquet(aPath)
           assigned = s.read.parquet(aPath)
         }
-        IvfIndex(centers, assigned.persist(StorageLevel.MEMORY_AND_DISK),
-          fromArtifact = false)
+        IvfIndex(centers, m.persist(assigned), fromArtifact = false)
       }
     }
 
@@ -622,9 +591,6 @@ object Sketches {
     * artifact-served / append paths never refit). */
   private[graft] val ivfFits = new java.util.concurrent.atomic.AtomicLong
 
-  private val ivfOverMemo = new graft.util.Memo[(SparkSession, String, Int), IvfIndex]()(
-    ix => ix.assigned.unpersist())
-
   /** [[buildIvfIndex]] generalized to an ARBITRARY vector frame under an
     * explicit artifact name prefix: the seeded k-means fits ONCE over
     * `vecs`, the assignment is the relational [[ivfRoute]] (so corpus
@@ -632,12 +598,12 @@ object Sketches {
     * function), and both artifacts persist per (data dir, name). */
   def buildIvfIndexOver(s: SparkSession, dir: String, name: String,
                         vecs: => DataFrame, nlist: Int = 16): IvfIndex =
-    ivfOverMemo.getOrElseUpdate((s, s"$dir#$name", nlist)) {
+    Memo(s, "ivfIndexOver", dir, name, nlist) { m =>
       import graft.sources.IndexStore
       buildIvfIndexAt(s,
         IndexStore.artifactPath(s, dir, s"$name${nlist}_centers"),
         IndexStore.artifactPath(s, dir, s"$name${nlist}_assigned"),
-        vecs, nlist)
+        vecs, nlist, m)
     }
 
   /** [[buildIvfIndexOver]] under an EXPLICIT validity key (the
@@ -646,16 +612,16 @@ object Sketches {
     * fingerprint — e.g. a [[graft.sources.GraftTable]] snapshot version. */
   def buildIvfIndexKeyed(s: SparkSession, key: String,
                          vecs: => DataFrame, nlist: Int = 16): IvfIndex =
-    ivfOverMemo.getOrElseUpdate((s, s"k:$key", nlist)) {
+    Memo(s, "ivfIndexKeyed", key, nlist) { m =>
       import graft.sources.IndexStore
       buildIvfIndexAt(s,
         IndexStore.artifactPathKeyed(s, key, s"ivf${nlist}_centers"),
         IndexStore.artifactPathKeyed(s, key, s"ivf${nlist}_assigned"),
-        vecs, nlist)
+        vecs, nlist, m)
     }
 
   private def buildIvfIndexAt(s: SparkSession, cPath: String, aPath: String,
-                              vecs: => DataFrame, nlist: Int): IvfIndex = {
+                              vecs: => DataFrame, nlist: Int, m: Memo.Frames): IvfIndex = {
     {
       import graft.sources.IndexStore
       val canLoad = IndexStore.persistEnabled(s) &&
@@ -663,8 +629,7 @@ object Sketches {
       if (canLoad) {
         val centers = s.read.parquet(cPath).orderBy(col("list_id")).collect()
           .map(_.getSeq[Double](1).toArray)
-        val assigned = s.read.parquet(aPath).persist(StorageLevel.MEMORY_AND_DISK)
-        IvfIndex(centers, assigned, fromArtifact = true)
+        IvfIndex(centers, m.persist(s.read.parquet(aPath)), fromArtifact = true)
       } else {
         import org.apache.spark.ml.clustering.KMeans
         import org.apache.spark.ml.linalg.Vectors
@@ -684,8 +649,7 @@ object Sketches {
           assigned.write.mode("overwrite").parquet(aPath)
           assigned = s.read.parquet(aPath)
         }
-        IvfIndex(centers, assigned.persist(StorageLevel.MEMORY_AND_DISK),
-          fromArtifact = false)
+        IvfIndex(centers, m.persist(assigned), fromArtifact = false)
       }
     }
   }
@@ -1135,8 +1099,6 @@ object Sketches {
     * encoded codes table (vec_id, codes, embedding). */
   final case class PqIndex(codebooks: Array[Array[Array[Double]]], codes: DataFrame,
                            fromArtifact: Boolean)
-  private val pqMemo = new graft.util.Memo[(SparkSession, String, Int, Int), PqIndex]()(
-    ix => ix.codes.unpersist())
 
   /** Build (or load) the PQ index: the 64-dim space splits into `m`
     * subspaces; each gets its own seeded k-means codebook (k centroids of
@@ -1147,7 +1109,7 @@ object Sketches {
     * that lets a 100 TB corpus's shortlist scan fit in memory. Artifacts
     * persist via IndexStore like the IVF index (construct-once). */
   def buildPqIndex(s: SparkSession, dir: String, m: Int = 16, k: Int = 16): PqIndex =
-    pqMemo.getOrElseUpdate((s, dir, m, k)) {
+    Memo(s, "pqIndex", dir, m, k) { frames =>
       import graft.sources.IndexStore
       val dim = embeddingDim(s, dir)
       require(dim % m == 0,
@@ -1163,8 +1125,7 @@ object Sketches {
         s.read.parquet(cPath).collect().foreach { r =>
           books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
         }
-        val codes = s.read.parquet(ePath).persist(StorageLevel.MEMORY_AND_DISK)
-        PqIndex(books.map(_.toArray), codes, fromArtifact = true)
+        PqIndex(books.map(_.toArray), frames.persist(s.read.parquet(ePath)), fromArtifact = true)
       } else {
         import org.apache.spark.ml.clustering.KMeans
         import org.apache.spark.ml.linalg.Vectors
@@ -1214,7 +1175,7 @@ object Sketches {
           codes = s.read.parquet(ePath)
         }
         unit.unpersist()
-        PqIndex(books, codes.persist(StorageLevel.MEMORY_AND_DISK), fromArtifact = false)
+        PqIndex(books, frames.persist(codes), fromArtifact = false)
       }
     }
 
@@ -1308,11 +1269,9 @@ object Sketches {
     * float32); finer than PQ's m·log₂k bits, coarser than raw. */
   final case class SqIndex(lo: Array[Double], hi: Array[Double],
                            codes: DataFrame, fromArtifact: Boolean)
-  private val sqMemo = new graft.util.Memo[(SparkSession, String), SqIndex]()(
-    ix => ix.codes.unpersist())
 
   def buildSqIndex(s: SparkSession, dir: String): SqIndex =
-    sqMemo.getOrElseUpdate((s, dir)) {
+    Memo(s, "sqIndex", dir) { m =>
       import graft.sources.IndexStore
       val dim = embeddingDim(s, dir)
       val bPath = IndexStore.artifactPath(s, dir, "sq8_bounds")
@@ -1324,8 +1283,7 @@ object Sketches {
         s.read.parquet(bPath).collect().foreach { r =>
           lo(r.getInt(0)) = r.getDouble(1); hi(r.getInt(0)) = r.getDouble(2)
         }
-        val codes = s.read.parquet(cPath).persist(StorageLevel.MEMORY_AND_DISK)
-        SqIndex(lo, hi, codes, fromArtifact = true)
+        SqIndex(lo, hi, m.persist(s.read.parquet(cPath)), fromArtifact = true)
       } else {
         val toUnit = udf { (emb: Seq[Float]) =>
           val a = emb.map(_.toDouble).toArray
@@ -1361,8 +1319,7 @@ object Sketches {
           codes = s.read.parquet(cPath)
         }
         unit.unpersist()
-        SqIndex(lo, hi, codes.persist(StorageLevel.MEMORY_AND_DISK),
-          fromArtifact = false)
+        SqIndex(lo, hi, m.persist(codes), fromArtifact = false)
       }
     }
 
@@ -1403,9 +1360,6 @@ object Sketches {
       .limit(k)
   }
 
-  private val hamMemo = new graft.util.Memo[(SparkSession, String), (DataFrame, Boolean)]()(
-    v => v._1.unpersist())
-
   /** Sign-quantized Hamming pack (v8's index): (vec_id, h1, h2) with the
     * 64 sign bits in two 32-bit BIGINT halves (bit 63 avoided — engines
     * disagree on 1<<63 overflow). A build-once IndexStore artifact like the
@@ -1413,7 +1367,7 @@ object Sketches {
     * number of Hamming queries to amortize it over.
     * @return (packed frame, served-from-artifact flag) */
   def hammingPack(s: SparkSession, dir: String): (DataFrame, Boolean) =
-    hamMemo.getOrElseUpdate((s, dir)) {
+    Memo(s, "hammingPack", dir) { m =>
       def half(off: Int) =
         s"aggregate(sequence(0, 31), 0L, (s, i) -> s + CASE WHEN " +
           s"element_at(embedding, i + ${off + 1}) >= 0 THEN shiftleft(1L, i) ELSE 0L END)"
@@ -1421,7 +1375,7 @@ object Sketches {
         graft.Tables.table(s, dir, "embeddings")
           .select(col("vec_id"), expr(half(0)).as("h1"), expr(half(32)).as("h2"))
       }
-      (df.persist(StorageLevel.MEMORY_AND_DISK), fromArtifact)
+      (m.persist(df), fromArtifact)
     }
 
   /** IVF-PQ composite ANN — the production index shape (coarse quantizer

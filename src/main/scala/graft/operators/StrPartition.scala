@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.MetricCol
-import graft.util.Snap.Ops
+import graft.util.Memo
 
 /** Reference O8 — STR (Sort-Tile-Recursive) spatial partitioning — carried
   * into the dataflow engine as a PRE-FILTER on the all-pairs trajectory
@@ -99,18 +99,6 @@ object StrPartition {
   private case class TiledScan(taT: DataFrame, r: Double, tilePairs: Seq[(Int, Int)],
                                hintFat: Boolean = true, hintSlim: Boolean = true)
 
-  /** Prepared scans (checkpointed slim frame + seed threshold + surviving
-    * tile pairs) memoized per (session, caller key, params) — the seed pass
-    * is a build-once index step like the tile assignment itself, so a warm
-    * session answering many top-k calls pays it once (the reference's
-    * construct-once / query-many loop). Inputs are immutable per session. */
-  private val scanMemo =
-    new graft.util.Memo[(org.apache.spark.sql.SparkSession, String, Int, String, Int, Int, Int), Option[TiledScan]]()(
-      _.foreach(ts => graft.util.Memo.releaseCheckpoint(ts.taT)))
-
-  /** Drop memoized scans, releasing their checkpoint storage. */
-  def clearMemo(): Unit = { scanMemo.clear(); knnScanMemo.clear() }
-
   /** Slim tiled frame (user_id, tile, boxes, whole MBR) — the STR index
     * artifact. Pass it pre-built (e.g. via `sources.IndexStore`) to skip the
     * quantile passes on a warm session; `allPairsTopKStr` accepts a frame
@@ -120,18 +108,26 @@ object StrPartition {
       .select(col("user_id"), col("tile"), col("boxes"),
         col("mnx"), col("mxx"), col("mny"), col("mxy"))
 
-  private def prepareScan(ta0: DataFrame, k: Int, metric: String,
-                          nx: Int, ny: Int, seedFactor: Int): Option[TiledScan] = {
+  /** The prepared scan, registered under the caller's key: the seed pass
+    * is a build-once index step like the tile assignment itself, so a warm
+    * session answering many top-k calls pays it once (the reference's
+    * construct-once / query-many loop). */
+  private def prepareScan(ta0: DataFrame, k: Int, metric: String, nx: Int, ny: Int,
+                          seedFactor: Int, cacheKey: Option[String] = None): Option[TiledScan] =
+    Memo.get(ta0.sparkSession, "strScan", cacheKey, k, metric, nx, ny, seedFactor)(
+      buildScan(ta0, k, metric, nx, ny, seedFactor, _))
+
+  private def buildScan(ta0: DataFrame, k: Int, metric: String, nx: Int, ny: Int,
+                        seedFactor: Int, m: Memo.Frames): Option[TiledScan] = {
     val s = ta0.sparkSession
     graft.functions.SlicedBoxLb.register(s)
     val ta = TrajectorySearch.ensureBoxes(ta0)
     // slim per-trajectory frame: id, tile, slice boxes, whole MBR — the fat
     // coordinate arrays never enter the pair scan (round-2 BNLJ lesson)
-    val taT = (if (ta.columns.contains("tile")) ta.select(col("user_id"),
+    val taT = m.snap((if (ta.columns.contains("tile")) ta.select(col("user_id"),
         col("tile"), col("boxes"), col("mnx"), col("mxx"), col("mny"), col("mxy"))
       else tiledFrame(ta, nx, ny))
-      .repartition(s.sparkContext.defaultParallelism, col("user_id"))
-      .snap()
+      .repartition(s.sparkContext.defaultParallelism, col("user_id")))
 
     // bounded tile summaries: union MBR + member count per tile
     val tiles = taT.groupBy(col("tile"))
@@ -209,14 +205,7 @@ object StrPartition {
   def allPairsTopKStr(ta0: DataFrame, k: Int, metric: String = "hausdorff",
                       nx: Int = 4, ny: Int = 4, seedFactor: Int = 3,
                       cacheKey: Option[String] = None): DataFrame = {
-    val scan = cacheKey match {
-      case Some(key) =>
-        scanMemo.getOrElseUpdate(
-          (ta0.sparkSession, key, k, metric, nx, ny, seedFactor))(
-          prepareScan(ta0, k, metric, nx, ny, seedFactor))
-      case None => prepareScan(ta0, k, metric, nx, ny, seedFactor)
-    }
-    scan match {
+    prepareScan(ta0, k, metric, nx, ny, seedFactor, cacheKey) match {
       case None => TrajectorySearch.allPairsTopK(ta0, k, metric, seedFactor)
       case Some(scan) =>
         val ta = TrajectorySearch.ensureBoxes(ta0)
@@ -269,17 +258,22 @@ object StrPartition {
   private def hinted(df: DataFrame, hint: Boolean): DataFrame =
     TrajectorySearch.hinted(df, hint)
 
-  private def prepareKnnScan(ta0: DataFrame, k: Int, metric: String,
-                             nx: Int, ny: Int, seedFactor: Int): Option[KnnScan] = {
+  /** [[prepareScan]]'s contract for the tiled kNN join's seed pass. */
+  private def prepareKnnScan(ta0: DataFrame, k: Int, metric: String, nx: Int, ny: Int,
+                             seedFactor: Int, cacheKey: Option[String] = None): Option[KnnScan] =
+    Memo.get(ta0.sparkSession, "strKnnScan", cacheKey, k, metric, nx, ny, seedFactor)(
+      buildKnnScan(ta0, k, metric, nx, ny, seedFactor, _))
+
+  private def buildKnnScan(ta0: DataFrame, k: Int, metric: String, nx: Int, ny: Int,
+                           seedFactor: Int, m: Memo.Frames): Option[KnnScan] = {
     import org.apache.spark.sql.expressions.Window
     val s = ta0.sparkSession
     graft.functions.SlicedBoxLb.register(s)
     val ta = TrajectorySearch.ensureBoxes(ta0)
-    val taT = (if (ta.columns.contains("tile")) ta.select(col("user_id"),
+    val taT = m.snap((if (ta.columns.contains("tile")) ta.select(col("user_id"),
         col("tile"), col("boxes"), col("mnx"), col("mxx"), col("mny"), col("mxy"))
       else tiledFrame(ta, nx, ny))
-      .repartition(s.sparkContext.defaultParallelism, col("user_id"))
-      .snap()
+      .repartition(s.sparkContext.defaultParallelism, col("user_id")))
 
     // bounded tile summaries: union MBR + member count per occupied tile
     val tiles = taT.groupBy(col("tile"))
@@ -316,13 +310,13 @@ object StrPartition {
 
     // 2. per-query threshold r_q = k-th smallest exact seed distance
     val wSeed = Window.partitionBy(col("q_user")).orderBy(col("dist"), col("user_id"))
-    val rq = seeds
+    // consumed by the tile-radius collect AND the refine
+    val rq = m.snap(seeds
       .join(hinted(fat, hintFat), "user_id").join(hinted(qFat, hintFat), "q_user")
       .select(col("q_user"), col("user_id"), exact.as("dist"))
       .withColumn("srn", row_number().over(wSeed))
       .filter(col("srn") <= k)
-      .groupBy(col("q_user")).agg(max(col("dist")).as("r"))
-      .snap() // consumed by the tile-radius collect AND the refine
+      .groupBy(col("q_user")).agg(max(col("dist")).as("r")))
 
     // 3. tile radii + surviving directed tile pairs (driver arithmetic over
     // <= (nx*ny)^2 bounded summaries)
@@ -374,29 +368,12 @@ object StrPartition {
     * cap the joins plan as shuffle equi-joins keyed by tile / user_id /
     * q_user - the enumeration bound over surviving |tile_q|*|tile_c| is the
     * same either way, and the driver never ships a 10^8-row build side. */
-  /** Prepared kNN scans memoized per (session, caller key, params) — the
-    * within-tile seed pass is a build-once index step like the t11 scan
-    * memo, so a warm session answering many kNN-join calls pays it once.
-    * Inputs are immutable per session; eviction releases both checkpoints. */
-  private val knnScanMemo =
-    new graft.util.Memo[(org.apache.spark.sql.SparkSession, String, Int, String, Int, Int, Int), Option[KnnScan]]()(
-      _.foreach { scan =>
-        graft.util.Memo.releaseCheckpoint(scan.taT)
-        graft.util.Memo.releaseCheckpoint(scan.rq)
-      })
-
   def knnJoinStr(ta0: DataFrame, k: Int, metric: String = "hausdorff",
                  nx: Int = 4, ny: Int = 4, seedFactor: Int = 3,
                  cacheKey: Option[String] = None): DataFrame = {
     val s = ta0.sparkSession
     val ta = TrajectorySearch.ensureBoxes(ta0)
-    val scan = cacheKey match {
-      case Some(key) => knnScanMemo.getOrElseUpdate(
-        (s, key, k, metric, nx, ny, seedFactor))(
-        prepareKnnScan(ta, k, metric, nx, ny, seedFactor))
-      case None => prepareKnnScan(ta, k, metric, nx, ny, seedFactor)
-    }
-    scan match {
+    prepareKnnScan(ta, k, metric, nx, ny, seedFactor, cacheKey) match {
       case None =>
         TrajectorySearch.knnJoin(ta, k, metric, seedFactor,
           TrajectorySearch.KnnPath.Seeded)

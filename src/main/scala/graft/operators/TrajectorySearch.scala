@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.{BoxLbKernel, MetricCol}
 import graft.geo.Metrics
+import graft.util.Memo
 import graft.util.Snap.Ops
 
 /** Reference O15 — the flagship query of the DFT system: given a query
@@ -109,15 +110,6 @@ object TrajectorySearch {
     allPairsTopKOf(ta, trajStats(ta), k, metric, seedFactor, cacheKey = None)
   }
 
-  /** All-pairs bound frames memoized per (session, caller key) — the
-    * [[trajStatsCached]] contract: (u1, u2, lb) is a deterministic,
-    * query-independent artifact of the immutable-per-session trajectory
-    * table, and its checkpoint build (the |users|²/2 box scan) cost ~0.7 s
-    * per t2 call at sf0.1. Memoized only when the caller supplies a key;
-    * checkpoint blocks are reclaimed by the ContextCleaner on eviction. */
-  private val lbsMemo =
-    new graft.util.Memo[(SparkSession, String), DataFrame]()(_ => ())
-
   /** [[allPairsTopK]] with the stats precomputed — the Auto dispatcher
     * already paid the count/median aggregate; don't run it twice. */
   private def allPairsTopKOf(ta: DataFrame, st: TrajStats, k: Int,
@@ -133,15 +125,13 @@ object TrajectorySearch {
     def withArrays(pairs: DataFrame): DataFrame =
       pairs.join(hinted(fat1, hintFat), "u1").join(hinted(fat2, hintFat), "u2")
 
-    // ONE pair scan: the 24-byte (u1, u2, lb) rows are materialized via
-    // Snap and serve both the seed TakeOrdered and the refine filter (the
-    // executor-storage copy is GC-cleaned with the plan); keyed callers
-    // (t2) reuse the frame across calls via lbsMemo.
-    val lbs = cacheKey match {
-      case Some(key) => lbsMemo.getOrElseUpdate((ta.sparkSession, s"$key#lb"))(
-        graft.util.Snap(allPairsLbOf(ta, st)))
-      case None => graft.util.Snap(allPairsLbOf(ta, st))
-    }
+    // ONE pair scan: the 24-byte (u1, u2, lb) rows are snapped and serve
+    // both the seed TakeOrdered and the refine filter. Keyed callers (t2)
+    // reuse the frame across calls — the [[trajStatsCached]] contract: a
+    // query-independent artifact of the immutable-per-session table, whose
+    // |users|²/2 box scan cost ~0.7 s per t2 call at sf0.1.
+    val lbs = Memo.get(ta.sparkSession, "allPairsLb", cacheKey)(
+      _.snap(allPairsLbOf(ta, st)))
 
     val seeds = withArrays(
       lbs.orderBy(col("lb"), col("u1"), col("u2")).limit(seedFactor * k))
@@ -304,20 +294,13 @@ object TrajectorySearch {
     TrajStats(r.getLong(0), r.getDouble(1))
   }
 
-  /** [[trajStats]] memoized per (session, caller key) — same contract as
-    * [[clusterStatMemo]]: a deterministic stat of an immutable-per-session
-    * table, so a warm session answering repeated Auto dispatches must not
-    * re-pay its aggregation job each call (measured 0.7–1.2 s per call on
-    * the bench box; guide §1.2 — don't compute things you throw away). */
-  private val trajStatsMemo =
-    new graft.util.Memo[(SparkSession, String), TrajStats]()(_ => ())
-
+  /** [[trajStats]] memoized per (session, caller key): a deterministic
+    * stat of an immutable-per-session table, so a warm session answering
+    * repeated Auto dispatches must not re-pay its aggregation job each
+    * call (measured 0.7–1.2 s per call on the bench box; guide §1.2 —
+    * don't compute things you throw away). */
   private[graft] def trajStatsCached(ta: DataFrame, cacheKey: Option[String]): TrajStats =
-    cacheKey match {
-      case Some(key) =>
-        trajStatsMemo.getOrElseUpdate((ta.sparkSession, key))(trajStats(ta))
-      case None => trajStats(ta)
-    }
+    Memo.get(ta.sparkSession, "trajStats", cacheKey)(_ => trajStats(ta))
 
   /** Data-driven regime choice for [[knnJoin]] (the reference's O11 bound
     * seeding made a measured decision, not a flag): brute only when the
@@ -382,19 +365,6 @@ object TrajectorySearch {
     1.0 - occupied.toDouble / (g.toLong * g)
   }
 
-  /** Cluster statistics memoized per (session, caller key) — the stat is a
-    * deterministic property of an immutable-per-session table, and a warm
-    * session answering repeated Auto kNN calls must not re-pay its two
-    * Spark jobs each time (the scanMemo/knnScanMemo precedent). Values are
-    * plain doubles — eviction releases nothing. */
-  private val clusterStatMemo =
-    new graft.util.Memo[(SparkSession, String), Double]()(_ => ())
-
-  private[graft] def clearStatMemo(): Unit = {
-    clusterStatMemo.clear()
-    trajStatsMemo.clear()
-  }
-
   /** Full `Auto` dispatch, in measured order of dominance:
     *  1. past [[TiledFlatKnee]] users, Tiled unconditionally — it beats
     *     both flat paths there even on uniform data (no stat jobs needed);
@@ -411,11 +381,9 @@ object TrajectorySearch {
     else choosePath(st, cap) match {
       case KnnPath.Brute => KnnPath.Brute
       case _ =>
-        val stat = cacheKey match {
-          case Some(key) => clusterStatMemo.getOrElseUpdate(
-            (ta.sparkSession, key))(clusterStat(ta))
-          case None => clusterStat(ta)
-        }
+        // memoized like [[trajStatsCached]]: a warm session answering
+        // repeated Auto kNN calls must not re-pay its two jobs each time
+        val stat = Memo.get(ta.sparkSession, "clusterStat", cacheKey)(_ => clusterStat(ta))
         if (st.users >= TiledMinUsers && stat >= ClusterEmptyFrac)
           KnnPath.Tiled
         else KnnPath.Seeded

@@ -82,13 +82,9 @@ object JsonDocs {
     * as before, just staged — identical doubles, oracle hash unchanged.
     * Bounded driver collect: ≤ |query terms| rows (see StaticChecksTest
     * allowlist). */
-  private val bm25ConstsMemo =
-    new graft.util.Memo[(org.apache.spark.sql.SparkSession, String),
-      Seq[(Int, String, Double, Double)]]()(_ => ())
-
   private def bm25QueryConsts(s: org.apache.spark.sql.SparkSession,
                               dir: String): Seq[(Int, String, Double, Double)] =
-    bm25ConstsMemo.getOrElseUpdate((s, dir)) {
+    graft.util.Memo(s, "bm25QueryConsts", dir) { _ =>
       val q = s.createDataFrame(bm25QuerySet).toDF("query_id", "qtext")
       val qt = q.select(col("query_id"),
           explode(split(col("qtext"), " ")).as("tok"))

@@ -177,11 +177,11 @@ object TextPipeline {
         // r13 (guide §3.1): freq is vocabulary×lang-sized (a derived frame,
         // so the planner has no size estimate and was shuffling BOTH sides
         // by tok) — broadcast it and the doc-token side never shuffles
-        // before its (doc, lang, cand) score aggregation. r14: hint bounded
-        // by the measured vocabulary × a generous lang-count allowance
-        // (16 × ~56 B/row) — an unbounded vocabulary must not be forced
-        // into a driver-OOM broadcast.
-        val freqH = if (Tables.vocabSize(s, dir) * 16L * 56L <=
+        // before its (doc, lang, cand) score aggregation. The hint is
+        // bounded by freq's measured row count (~56 B/row) — an unbounded
+        // vocabulary or language set must not be forced into a driver-OOM
+        // broadcast.
+        val freqH = if (Tables.tokLangPairs(s, dir) * 56L <=
             graft.operators.TrajectorySearch.broadcastCap(s)) broadcast(freq) else freq
         val scores = docTok.join(freqH, col("tok") === col("ftok"))
           .groupBy(col("doc_id"), col("lang"), col("cand"))

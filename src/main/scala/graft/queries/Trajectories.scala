@@ -552,7 +552,7 @@ object Trajectories {
          |ORDER BY q_user, dist, user_id""".stripMargin) {
       (s, dir) =>
         // scan memoized per (session, dir): the within-tile seed pass is a
-        // build-once index step (t11's scanMemo precedent)
+        // build-once index step (t11's prepared-scan precedent)
         graft.operators.StrPartition.knnJoinStr(
           Tables.trajArrays(s, dir, "purchase"), 3, "hausdorff",
           cacheKey = Some(s"$dir#purchase#knn"))

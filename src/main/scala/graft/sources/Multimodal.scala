@@ -23,21 +23,6 @@ import org.apache.spark.sql.functions._
   * see the generator, only the bytes.
   */
 object Multimodal {
-  /** Decoded-fingerprint frames of [[nearDupMediaPairs]], keyed by the
-    * input's canonicalized analyzed plan (structural equality — no hash
-    * collisions): bounded LRU, unpersist-on-evict. Same memoization
-    * contract as [[graft.Tables]]: the data UNDER an input is immutable
-    * for the session — after rewriting files in place, call
-    * [[resetCaches]] (or `Memo.clearAll()`). A lost cold-key race leaks
-    * only a CacheManager METADATA entry, not executor storage: the
-    * loser's persist is lazy and its frame is discarded unmaterialized. */
-  private val hashedMemo = new graft.util.Memo[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan),
-    DataFrame]()(graft.util.Memo.unpersistDf)
-
-  /** Drop the memoized fingerprint frames, releasing executor storage. */
-  def resetCaches(): Unit = hashedMemo.clear()
-
   final case class MediaRow(media_id: Long, kind: String, media: Array[Byte],
       n_bytes: Long, lang: String)
   final case class MediaFeatures(media_id: Long, kind: String, lang: String,
@@ -599,15 +584,10 @@ object Multimodal {
     }.toDF("media_id", "kind", "phash")
     val canon = media.queryExecution.analyzed.canonicalized
     // a driver-local input (LocalRelation) would pin its full blob payload
-    // inside the memo KEY — and is cheap to re-decode anyway: skip the memo
-    val hashed =
-      if (canon.exists(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
-        fingerprint()
-      else Multimodal.hashedMemo.getOrElseUpdate((spark, canon)) {
-        fingerprint()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+    // inside the registry KEY — and is cheap to re-decode anyway: unkeyed
+    val source = Some(canon).filterNot(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+    val hashed = graft.util.Memo.get(spark, "mediaFingerprints", source)(_.persist(fingerprint()))
     val banded = hashed.select(col("media_id"), col("kind"), col("phash"),
         explode(sequence(lit(0), lit(3))).as("band"))
       .withColumn("bkey",

@@ -1,98 +1,128 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Bounded LRU session memo with an unpersist-on-evict hook.
+/** The session artifact registry: the one place that knows how a derived
+  * artifact (pair set, index frame, prepared scan, table stat) is keyed,
+  * materialized, bounded and released.
   *
-  * Session memos cache derived artifacts (pair sets, index frames, prepared
-  * scans) keyed by (session, data dir, params). An unbounded map is harmless
-  * in a per-round driver, but a long-lived service session iterating over
-  * many data dirs would accumulate persisted frames without end — so every
-  * memo is bounded: past `maxEntries` the LEAST-RECENTLY-USED entry is
-  * evicted (access-order LinkedHashMap — a hot entry created early is kept,
-  * FIFO would evict it first) and its `onEvict` hook releases its executor
-  * storage; `clear()` evicts everything.
+  * KEY. An entry is keyed by (session, artifact name, source identity,
+  * params). The source is what the artifact is derived from — a data dir,
+  * a caller key, `table@version`, a canonical plan — and the params are
+  * everything else the build reads. Call sites pass the parts, never a
+  * pre-joined string, so two artifacts differing in any part can never
+  * share an entry.
   *
-  * Concurrency: map reads/writes are synchronized, but the `build` closure
-  * runs OUTSIDE the lock — it launches full Spark jobs and driver collects,
-  * and holding the monitor across it would serialize every query touching
-  * the memo behind one build (and nest locks when one memoized build calls
-  * another). Two threads racing the same cold key may both build; the
-  * winner's value is returned so all callers see one canonical artifact.
-  * The loser's value is NOT released: Spark's CacheManager keys cached data
-  * by logical plan, so the loser's frames usually have plans IDENTICAL to
-  * the winner's — running `onEvict` on them would silently drop the
-  * winner's shared cache entries (its persisted result and deps). Keeping
-  * the loser costs nothing for plan-keyed persists (same cache entry);
-  * checkpoint-backed values (distinct RDDs per call) are reclaimed by the
-  * ContextCleaner once the loser's references go out of scope. Memo traffic
-  * is driver-side query planning — a handful of lookups per query, never
-  * per-row.
+  * RELEASE FOLLOWS MATERIALIZATION. A build receives a [[Frames]] handle
+  * and materializes through it: `persist` (MEMORY_AND_DISK) or `snap`
+  * ([[Snap]]). The registry records exactly the frames the build
+  * materialized and releases exactly those when the entry is evicted or
+  * cleared, whatever shape the value has — one frame, a composite of
+  * several, or a plain driver value that recorded nothing. Under a
+  * reliable checkpoint dir the release frees nothing: a checkpoint's
+  * files stay on disk until Spark's ContextCleaner deletes them
+  * (`spark.cleaner.referenceTracking.cleanCheckpoints`).
+  *
+  * UNCACHED CALLS. [[get]] with no source builds without registering: its
+  * `persist` is the identity (nothing would ever release it) and its
+  * `snap` still truncates lineage, reclaimed by the ContextCleaner.
+  *
+  * BOUND. One access-order LRU over all artifacts ([[MaxEntries]]): a hot
+  * entry created early survives, and a service session iterating over
+  * many data dirs cannot accumulate storage without end. [[clearAll]]
+  * releases everything (disk `IndexStore` artifacts stay).
+  *
+  * CONCURRENCY. Map reads/writes are synchronized, but a build runs
+  * OUTSIDE the lock — it launches Spark jobs and may build other
+  * artifacts, and holding the monitor across it would serialize every
+  * query behind one build. Two threads racing the same cold key may both
+  * build; the winner's value is returned to both. The loser's frames are
+  * NOT released: Spark's CacheManager keys cached data by logical plan,
+  * so a loser's persisted frames usually alias the winner's cache entries
+  * and releasing them would drop the canonical artifact's storage; a
+  * loser's checkpoints are distinct RDDs the ContextCleaner reclaims.
+  * Registry traffic is driver-side planning — a handful of lookups per
+  * query, never per row.
   */
-final class Memo[K, V](maxEntries: Int = 64)(onEvict: V => Unit) {
-  Memo.register(this)
-  // access-order = true: get() touches an entry, eviction order is LRU
-  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true)
-
-  private def release(v: V): Unit = try onEvict(v) catch { case _: Throwable => () }
-
-  def getOrElseUpdate(k: K)(build: => V): V = {
-    val hit = synchronized {
-      if (m.containsKey(k)) Some(m.get(k)) else None
-    }
-    hit.getOrElse {
-      val v = build // outside the lock — may run Spark jobs / nested memos
-      synchronized {
-        if (m.containsKey(k)) {
-          // Lost the race: keep the canonical value and DON'T release the
-          // loser — its persisted plans alias the winner's CacheManager
-          // entries, so onEvict here would de-cache the canonical artifact
-          // (checkpoint RDDs fall to the ContextCleaner instead).
-          m.get(k)
-        } else {
-          m.put(k, v)
-          while (m.size > maxEntries) {
-            val it = m.entrySet().iterator()
-            release(it.next().getValue)
-            it.remove()
-          }
-          v
-        }
-      }
-    }
-  }
-
-  /** Evict every entry, running the release hook on each. */
-  def clear(): Unit = synchronized {
-    m.values.forEach(v => release(v))
-    m.clear()
-  }
-
-  def size: Int = synchronized(m.size)
-}
-
 object Memo {
-  private val all = new java.util.concurrent.CopyOnWriteArrayList[Memo[_, _]]()
-  private def register(memo: Memo[_, _]): Unit = all.add(memo)
+  /** Entries kept across all artifacts. Measured peaks: 46 for a full
+    * `graft.Verify` over one data dir (sf0.01, all 191 queries), 2 for the
+    * perfbench topk-search workload and 5 for pair-joins — so 128 keeps
+    * two data dirs' full traffic warm with room to spare. */
+  val MaxEntries: Int = 128
 
-  /** Evict every registered session memo in the engine (service-session
-    * housekeeping between data dirs; disk IndexStore artifacts stay). */
-  def clearAll(): Unit = all.forEach(_.clear())
+  private final case class Key(session: SparkSession, name: String,
+                               source: Any, params: Seq[Any])
 
-  /** Release hook for plain `.persist()`ed frames. */
-  val unpersistDf: DataFrame => Unit = df => df.unpersist()
-
-  /** Release hook for `localCheckpoint()`ed frames: the checkpoint's RDD is
-    * persisted at the RDD layer (not the SQL CacheManager), so
-    * `df.unpersist()` is a no-op on it — dig the RDD out of the LogicalRDD
-    * leaf and unpersist that. Reflection keeps us off the private
-    * constructor surface; a plan without a LogicalRDD leaf is left alone
-    * (the ContextCleaner reclaims it after GC as before). */
-  val releaseCheckpoint: DataFrame => Unit = df =>
-    df.queryExecution.analyzed.collectLeaves().foreach { leaf =>
-      if (leaf.getClass.getSimpleName == "LogicalRDD")
-        try leaf.getClass.getMethod("rdd").invoke(leaf)
-          .asInstanceOf[org.apache.spark.rdd.RDD[_]].unpersist(false)
-        catch { case _: Throwable => () }
+  /** What a build may materialize; registered builds record each frame. */
+  final class Frames private[Memo] (register: Boolean) {
+    private var releases = List.empty[() => Unit]
+    private def kept(df: DataFrame)(release: () => Unit): DataFrame = {
+      if (register) synchronized { releases ::= release }
+      df
     }
+
+    /** `df.persist(MEMORY_AND_DISK)`, released by `unpersist`. */
+    def persist(df: DataFrame): DataFrame =
+      if (!register) df
+      else {
+        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+        kept(p)(() => p.unpersist())
+      }
+
+    /** [[Snap]]`(df)`, released by unpersisting its checkpoint RDD. */
+    def snap(df: DataFrame): DataFrame = {
+      val c = Snap(df)
+      kept(c)(() => Snap.release(c))
+    }
+
+    private[Memo] def release(): Unit = synchronized(releases).foreach { r =>
+      try r() catch { case _: Throwable => () }
+    }
+  }
+
+  private final class Entry(val value: Any, val frames: Frames)
+
+  // access-order = true: get() touches an entry, eviction order is LRU
+  private val entries = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true)
+
+  /** The artifact `name` of `source` under `params`: a hit returns the
+    * registered value, a miss runs `build` and registers its result. */
+  def apply[V](s: SparkSession, name: String, source: Any, params: Any*)(
+      build: Frames => V): V =
+    get(s, name, Some(source), params: _*)(build)
+
+  /** [[apply]] for an optional source: `None` builds without registering. */
+  def get[V](s: SparkSession, name: String, source: Option[Any], params: Any*)(
+      build: Frames => V): V = source match {
+    case None => build(new Frames(register = false))
+    case Some(src) =>
+      val k = Key(s, name, src, params)
+      val hit = entries.synchronized(Option(entries.get(k)))
+      hit.getOrElse {
+        val frames = new Frames(register = true)
+        val v = build(frames) // outside the lock — may run jobs / nested builds
+        entries.synchronized {
+          Option(entries.get(k)).getOrElse { // a racing winner stays canonical
+            val e = new Entry(v, frames)
+            entries.put(k, e)
+            while (entries.size > MaxEntries) {
+              val it = entries.values.iterator()
+              it.next().frames.release()
+              it.remove()
+            }
+            e
+          }
+        }
+      }.value.asInstanceOf[V]
+  }
+
+  /** Evict every artifact, releasing what each build materialized. */
+  def clearAll(): Unit = entries.synchronized {
+    entries.values.forEach(_.frames.release())
+    entries.clear()
+  }
+
+  def size: Int = entries.synchronized(entries.size)
 }

@@ -13,8 +13,7 @@ class DeterminismTest extends AnyFunSuite {
     val spark = TestSpark.spark
     // memoized persisted frames would otherwise serve partition-4 results to
     // the partition-7 run, hiding exactly the bugs this test exists to catch
-    Tables.resetCaches()
-    graft.operators.DocSimilarity.resetCaches()
+    graft.util.Memo.clearAll()
     spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     try
       SparkEntry.queries.map { case (name, fn) =>

@@ -663,7 +663,7 @@ class GraftTableTest extends AnyFunSuite {
     spark.conf.set("graft.index.dir", tmp)
     val tdir = freshDir("incr")
     try {
-      DocSimilarity.resetCaches()
+      graft.util.Memo.clearAll()
       val oldS = (0 to 9).map(i => s"src$i")
       val all = docs(TestSpark.sf0001)
       GraftTable.create(spark, tdir,
@@ -696,7 +696,7 @@ class GraftTableTest extends AnyFunSuite {
         "a corpus snapshot roll must key (and build) a fresh index")
     } finally {
       spark.conf.unset("graft.index.dir")
-      DocSimilarity.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -705,7 +705,7 @@ class GraftTableTest extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-ivftbl-idx").toString
     spark.conf.set("graft.index.dir", tmp)
     try {
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val em = Tables.table(spark, TestSpark.sf0001, "embeddings")
       val tdir = freshDir("ivftbl")
       GraftTable.create(spark, tdir, em.filter(col("vec_id") % 10 =!= 0), Seq("vec_id"))
@@ -739,7 +739,7 @@ class GraftTableTest extends AnyFunSuite {
       assert(Sketches.ivfFits.get() == fits1 + 1, "corpus roll keys a fresh fit")
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -755,7 +755,7 @@ class GraftTableTest extends AnyFunSuite {
     spark.conf.set("graft.index.dir", tmp)
     val tdir = freshDir("ivfdrift")
     try {
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val rnd = new scala.util.Random(17)
       def cluster(base: Array[Double], n: Int, from: Long, spread: Double) =
         (0 until n).map { i =>
@@ -825,7 +825,7 @@ class GraftTableTest extends AnyFunSuite {
 
       // warm re-serve: both quantizer artifacts (old + new version) stand;
       // nothing refits again
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val fits2 = Sketches.ivfFits.get()
       val (_, _, refit2) = Sketches.ivfServeTable(spark, tdir, 0, 1, nlist = 4)
       assert(refit2 && Sketches.ivfFits.get() == fits2,
@@ -842,7 +842,7 @@ class GraftTableTest extends AnyFunSuite {
         s"scaled re-key must fit nlistFor(200)=14 lists, got ${scaled.centers.length}")
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -852,7 +852,7 @@ class GraftTableTest extends AnyFunSuite {
     spark.conf.set("graft.index.dir", tmp)
     val tdir = freshDir("mhincr")
     try {
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val oldS = (0 to 9).map(i => s"src$i")
       val all = docs(TestSpark.sf0001)
       GraftTable.create(spark, tdir,
@@ -883,7 +883,7 @@ class GraftTableTest extends AnyFunSuite {
         "a corpus snapshot roll must key (and build) a fresh index")
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -891,7 +891,7 @@ class GraftTableTest extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-table-d16").toString
     spark.conf.set("graft.index.dir", tmp)
     try {
-      DocSimilarity.resetCaches()
+      graft.util.Memo.clearAll()
       val d16 = SparkEntry.queries("d16_table_ingest_dedup")(spark, TestSpark.sf0001)
       val plan = d16.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), "ingest gate must never go all-pairs")
@@ -900,7 +900,7 @@ class GraftTableTest extends AnyFunSuite {
         "table-path gate must produce d14's exact per-source admit/reject summary")
     } finally {
       spark.conf.unset("graft.index.dir")
-      DocSimilarity.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 

@@ -22,14 +22,14 @@ class IndexStoreTest extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-idx").toString
     spark.conf.set("graft.index.dir", tmp)
     try {
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val (idx1, cold) = timed {
         val i = Sketches.buildIvfIndex(spark, TestSpark.sf001)
         i.assigned.count() // force the assignment pass
         i
       }
       assert(!idx1.fromArtifact, "first build must fit")
-      Sketches.resetCaches() // simulate a new session: in-memory memo gone
+      graft.util.Memo.clearAll() // simulate a new session: in-memory memo gone
       val (idx2, warm) = timed {
         val i = Sketches.buildIvfIndex(spark, TestSpark.sf001)
         i.assigned.count()
@@ -50,7 +50,7 @@ class IndexStoreTest extends AnyFunSuite {
       assert(Sketches.buildIvfIndex(spark, TestSpark.sf001) eq idx2, "memo reused across queries")
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -58,11 +58,11 @@ class IndexStoreTest extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-idx-ham").toString
     spark.conf.set("graft.index.dir", tmp)
     try {
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val (p1, from1) = Sketches.hammingPack(spark, TestSpark.sf001)
       val rows1 = p1.orderBy("vec_id").collect().map(_.toString).toSeq
       assert(!from1, "first call must build")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val (p2, from2) = Sketches.hammingPack(spark, TestSpark.sf001)
       assert(from2, "second session must load the artifact")
       assert(p2.orderBy("vec_id").collect().map(_.toString).toSeq == rows1)
@@ -70,7 +70,7 @@ class IndexStoreTest extends AnyFunSuite {
       assert(knn.length == 10)
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -78,18 +78,18 @@ class IndexStoreTest extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-idx2").toString
     spark.conf.set("graft.index.dir", tmp)
     try {
-      Tables.resetCaches()
+      graft.util.Memo.clearAll()
       val t1 = Tables.trajArrays(spark, TestSpark.sf0001).orderBy("user_id")
         .collect().map(_.toString).toSeq
       assert(IndexStore.exists(spark,
         IndexStore.artifactPath(spark, TestSpark.sf0001, "traj_purchase_f4")))
-      Tables.resetCaches()
+      graft.util.Memo.clearAll()
       val t2 = Tables.trajArrays(spark, TestSpark.sf0001).orderBy("user_id")
         .collect().map(_.toString).toSeq
       assert(t1 == t2)
     } finally {
       spark.conf.unset("graft.index.dir")
-      Tables.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -107,17 +107,17 @@ class IndexStoreTest extends AnyFunSuite {
           Paths.get(s"$data/$t.parquet"))
 
       // hamming pack over embeddings
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val (p1, from1) = Sketches.hammingPack(spark, data)
       val rows1 = p1.orderBy("vec_id").collect().map(_.toString).toSeq
       assert(!from1, "first build must run")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val (p2, from2) = Sketches.hammingPack(spark, data)
       assert(from2, "untouched source dir must serve the artifact")
       assert(p2.orderBy("vec_id").collect().map(_.toString).toSeq == rows1)
 
       // trajArrays (slice-box / tile feed) over events
-      Tables.resetCaches()
+      graft.util.Memo.clearAll()
       val u1 = Tables.trajArrays(spark, data).count()
       assert(IndexStore.exists(spark,
         IndexStore.artifactPath(spark, data, "traj_purchase_f4")))
@@ -127,7 +127,7 @@ class IndexStoreTest extends AnyFunSuite {
         Files.copy(Paths.get(s"${TestSpark.sf001}/$t.parquet"),
           Paths.get(s"$data/$t.parquet"), StandardCopyOption.REPLACE_EXISTING)
 
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val (p3, from3) = Sketches.hammingPack(spark, data)
       assert(!from3, "mutated source must REBUILD, never serve the stale artifact")
       // both SFs hold 500 vectors — the CONTENT differs, and the rebuilt
@@ -135,13 +135,12 @@ class IndexStoreTest extends AnyFunSuite {
       assert(p3.orderBy("vec_id").collect().map(_.toString).toSeq != rows1,
         "rebuilt artifact must reflect the new source content")
 
-      Tables.resetCaches()
+      graft.util.Memo.clearAll()
       val u2 = Tables.trajArrays(spark, data).count()
       assert(u2 != u1, "trajArrays artifact must rebuild from the new events")
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
-      Tables.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -157,7 +156,7 @@ class IndexStoreTest extends AnyFunSuite {
         .sorted
     try {
       val olds = (0 to 9).map(i => s"src$i")
-      DocSimilarity.resetCaches()
+      graft.util.Memo.clearAll()
       val p1 = DocSimilarity.incrementalNearDups(spark, TestSpark.sf0001, olds)
         .orderBy("old_id", "new_id").collect().map(_.toString).toSeq
       assert(p1.nonEmpty)
@@ -166,20 +165,20 @@ class IndexStoreTest extends AnyFunSuite {
 
       // a fresh "session" (memo cleared) must serve identical pairs from the
       // persisted corpus index
-      DocSimilarity.resetCaches()
+      graft.util.Memo.clearAll()
       val p2 = DocSimilarity.incrementalNearDups(spark, TestSpark.sf0001, olds)
         .orderBy("old_id", "new_id").collect().map(_.toString).toSeq
       assert(p2 == p1)
       assert(artifacts() == a1, "rebuild must reuse the artifact, not write a second one")
 
       // a different corpus roster is a DIFFERENT index artifact
-      DocSimilarity.resetCaches()
+      graft.util.Memo.clearAll()
       DocSimilarity.incrementalNearDups(spark, TestSpark.sf0001,
         (0 to 4).map(i => s"src$i")).count()
       assert(artifacts().size == 2, "roster change must key a new artifact")
     } finally {
       spark.conf.unset("graft.index.dir")
-      DocSimilarity.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -200,7 +199,7 @@ class IndexStoreTest extends AnyFunSuite {
     spark.conf.set("graft.index.dir", tmpIdx)
     try {
       val olds = (0 to 9).map(i => s"src$i")
-      def reset(): Unit = { DocSimilarity.resetCaches(); Tables.resetCaches() }
+      def reset(): Unit = graft.util.Memo.clearAll()
 
       reset()
       val builds0 = DocSimilarity.incrMaskBuilds.get()
@@ -249,8 +248,7 @@ class IndexStoreTest extends AnyFunSuite {
         "a corpus-row change must REBUILD the index, never serve it stale")
     } finally {
       spark.conf.unset("graft.index.dir")
-      DocSimilarity.resetCaches()
-      Tables.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 

@@ -113,7 +113,7 @@ class SketchesTest extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-idx-ivfapp").toString
     spark.conf.set("graft.index.dir", tmp)
     try {
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val fits0 = Sketches.ivfFits.get()
       val (idx, delta, all) = Sketches.ivfIncremental(spark, TestSpark.sf0001)
       assert(Sketches.ivfFits.get() == fits0 + 1, "cold build fits exactly once")
@@ -133,7 +133,7 @@ class SketchesTest extends AnyFunSuite {
 
       // (c) warm "next session": both artifacts serve — no k-means refit,
       // no corpus rescan
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val (idx2, _, all2) = Sketches.ivfIncremental(spark, TestSpark.sf0001)
       assert(Sketches.ivfFits.get() == fits0 + 1, "artifact reload must not refit")
       assert(idx2.fromArtifact)
@@ -179,7 +179,7 @@ class SketchesTest extends AnyFunSuite {
       assert(q1 == q2 && q1.nonEmpty)
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -221,7 +221,7 @@ class SketchesTest extends AnyFunSuite {
     assert(moved.nonEmpty,
       "the affine shift should move at least one re-embedded vector's list")
     // warm path: index reloads from the artifact, no re-fit
-    Sketches.resetCaches()
+    graft.util.Memo.clearAll()
     val (idx2, served2) = Sketches.ivfServeTableCdc(spark, tdir, 0, head)
     assert(idx2.fromArtifact, "warm serve must reload the corpus artifact")
     assert(served2.select($"vec_id", $"list_id").collect()
@@ -303,7 +303,7 @@ class SketchesTest extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft-idx-v11").toString
     spark.conf.set("graft.index.dir", tmp)
     try {
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val q1 = SparkEntry.queries("v11_semantic_gate")(spark, TestSpark.sf0001)
         .collect()
       val q2 = SparkEntry.queries("v11_semantic_gate")(spark, TestSpark.sf0001)
@@ -315,7 +315,7 @@ class SketchesTest extends AnyFunSuite {
       assert(nNew == wantNew, s"summary must cover the whole batch: $nNew != $wantNew")
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -451,17 +451,17 @@ class SketchesTest extends AnyFunSuite {
     val tmpIdx = java.nio.file.Files.createTempDirectory("graft-idx-sq").toString
     spark.conf.set("graft.index.dir", tmpIdx)
     try {
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val built = Sketches.annSqKnn(spark, TestSpark.sf0001).collect().map(_.toString).toSeq
       assert(!Sketches.buildSqIndex(spark, TestSpark.sf0001).fromArtifact)
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val loaded = Sketches.annSqKnn(spark, TestSpark.sf0001).collect().map(_.toString).toSeq
       assert(Sketches.buildSqIndex(spark, TestSpark.sf0001).fromArtifact,
         "second session must load the artifact, not rebuild")
       assert(built == loaded)
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -502,7 +502,7 @@ class SketchesTest extends AnyFunSuite {
     val tmpIdx = Files.createTempDirectory("graft-idx-d18").toString
     spark.conf.set("graft.index.dir", tmpIdx)
     try {
-      def reset(): Unit = { Sketches.resetCaches(); Tables.resetCaches() }
+      def reset(): Unit = graft.util.Memo.clearAll()
       reset()
       val builds0 = Sketches.mhIndexBuilds.get()
       val rejected1 = Sketches.minhashIngestGate(spark, data, olds)
@@ -530,8 +530,7 @@ class SketchesTest extends AnyFunSuite {
         "appended twins rejected too, earlier verdicts unchanged")
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
-      Tables.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 
@@ -593,7 +592,7 @@ class SketchesTest extends AnyFunSuite {
           Sketches.buildPqIndex(spark, dir, m = 5, k = 8)
         }
         assert(e.getMessage.contains("must divide"), e.getMessage)
-      } finally { Sketches.resetCaches(); Tables.resetCaches() }
+      } finally graft.util.Memo.clearAll()
     }
   }
 }

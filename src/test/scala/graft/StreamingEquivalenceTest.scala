@@ -419,7 +419,7 @@ class StreamingEquivalenceTest extends AnyFunSuite {
     val tmp = Files.createTempDirectory("graft-semgate-idx").toString
     spark.conf.set("graft.index.dir", tmp)
     try {
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
       val (idx, delta, _) = Sketches.ivfIncremental(spark, TestSpark.sf0001)
       // replay the new batch (vec_id % 10 == 0) as 3 micro-batch files
       val em = Tables.table(spark, TestSpark.sf0001, "embeddings")
@@ -453,7 +453,7 @@ class StreamingEquivalenceTest extends AnyFunSuite {
       assert(got.nonEmpty, "threshold 0.25 must fire on the fixture")
     } finally {
       spark.conf.unset("graft.index.dir")
-      Sketches.resetCaches()
+      graft.util.Memo.clearAll()
     }
   }
 

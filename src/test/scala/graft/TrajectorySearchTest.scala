@@ -370,7 +370,7 @@ class TrajectorySearchTest extends AnyFunSuite {
     }.toDF("user_id", "xs", "ys"))
     val st = TrajectorySearch.trajStats(clustered)
     val cap = TrajectorySearch.BruteBroadcastMaxBytes
-    TrajectorySearch.clearStatMemo()
+    graft.util.Memo.clearAll()
     assert(TrajectorySearch.chooseAutoPath(clustered, st, cap,
       Some("memo-test")) == TrajectorySearch.KnnPath.Tiled)
     val boom = udf { (_: Long) =>
@@ -383,7 +383,7 @@ class TrajectorySearchTest extends AnyFunSuite {
     // same key → memo hit → the poisoned frame is never evaluated
     assert(TrajectorySearch.chooseAutoPath(poisoned, st, cap,
       Some("memo-test")) == TrajectorySearch.KnnPath.Tiled)
-    TrajectorySearch.clearStatMemo()
+    graft.util.Memo.clearAll()
   }
 
   test("brute knnJoin drops the broadcast hint past the size cap (plan fallback, not OOM)") {
