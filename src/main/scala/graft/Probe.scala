@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.util.Snap.Ops
+
 /** Round-13 measurement scratchpad (guide §1: measure first). Times the
   * component stages of the heavy trajectory-search queries in isolation so
   * the optimization targets the stage that actually costs, not a guess.
@@ -46,7 +48,7 @@ object Probe {
         time("half join noop") {
           half.write.format("noop").mode("overwrite").save()
         }
-        val ck = time("half join localCheckpoint")(half.localCheckpoint())
+        val ck = time("half join snap")(half.snap())
         val sym = ck.unionAll(ck.select(col("u2").as("u1"), col("u1").as("u2"), col("dist")))
           .select(col("u1").as("q_user"), col("u2").as("user_id"), col("dist"))
         for (i <- 1 to 2) {
@@ -175,8 +177,8 @@ object Probe {
         val vocab = time("vocab probe collect")(
           toks.select(col("tok")).distinct()
             .limit(DocSimilarity.MaxMaskVocab + 1).collect().map(_.getString(0)))
-        val groups = time("maskGroups build (localCheckpoint)")(
-          DocSimilarity.corpusMaskGroups(toks, vocab).localCheckpoint())
+        val groups = time("maskGroups build (snap)")(
+          DocSimilarity.corpusMaskGroups(toks, vocab).snap())
         time("pair join + persist + count")(
           DocSimilarity.maskPairs(toks, vocab, 3, 5)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count())

@@ -10,23 +10,32 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * class) so the generated Java can call it as a static method. */
 object BoxLbKernel {
 
+  /** Largest box coordinate magnitude the bound trusts: below it no squared
+    * point distance overflows, so the metric kernels (which skip points at
+    * infinite distance) never fall below the box bound. */
+  val TameLimit = 1e150
+
   /** Directed bound max(seed, max_i min_j boxdist²(x_i, y_j)) over flat
     * [minx,maxx,miny,maxy]×k arrays, with the classic early break: once a
-    * y-box is nearer than the current max, x_i cannot raise it. */
+    * y-box is nearer than the current max, x_i cannot raise it. Every
+    * x-box is read once, and -1 reports one that is not tame (a NaN, ±Inf
+    * or overflowing coordinate). */
   private def directedSq(x: ArrayData, n: Int, y: ArrayData, m: Int,
                          seed: Double): Double = {
     var acc = seed
     var i = 0
     while (i < n) {
+      val loX = x.getDouble(i * 4)
+      val hiX = x.getDouble(i * 4 + 1)
+      val loY = x.getDouble(i * 4 + 2)
+      val hiY = x.getDouble(i * 4 + 3)
+      if (!(math.abs(loX) <= TameLimit && math.abs(hiX) <= TameLimit &&
+            math.abs(loY) <= TameLimit && math.abs(hiY) <= TameLimit)) return -1.0
       var mn = Double.PositiveInfinity
       var j = 0
       while (j < m && mn > acc) {
-        val dx = math.max(0.0, math.max(
-          x.getDouble(i * 4) - y.getDouble(j * 4 + 1),
-          y.getDouble(j * 4) - x.getDouble(i * 4 + 1)))
-        val dy = math.max(0.0, math.max(
-          x.getDouble(i * 4 + 2) - y.getDouble(j * 4 + 3),
-          y.getDouble(j * 4 + 2) - x.getDouble(i * 4 + 3)))
+        val dx = math.max(0.0, math.max(loX - y.getDouble(j * 4 + 1), y.getDouble(j * 4) - hiX))
+        val dy = math.max(0.0, math.max(loY - y.getDouble(j * 4 + 3), y.getDouble(j * 4 + 2) - hiY))
         val d = dx * dx + dy * dy
         if (d < mn) mn = d
         j += 1
@@ -38,12 +47,17 @@ object BoxLbKernel {
   }
 
   /** Sliced-box lower bound: max over both directed bounds, in distance
-    * units. Empty box arrays yield 0 (no bound). */
+    * units. Empty box arrays yield 0 (no bound), and so does a side with a
+    * box that is not tame: there the box arithmetic can exceed the
+    * kernel's value. Every operation on tame boxes is monotone, so the
+    * bound is ≤ the kernel even in floating point. */
   def compute(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements() / 4
     val m = b.numElements() / 4
     if (n == 0 || m == 0) return 0.0
-    math.sqrt(directedSq(b, m, a, n, directedSq(a, n, b, m, 0.0)))
+    val ab = directedSq(a, n, b, m, 0.0)
+    val lb = if (ab < 0) ab else directedSq(b, m, a, n, ab)
+    if (lb < 0) 0.0 else math.sqrt(lb)
   }
 }
 

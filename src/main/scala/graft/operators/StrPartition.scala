@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.MetricCol
+import graft.functions.{BoxLbKernel, MetricCol}
 import graft.util.Memo
 
 /** Reference O8 — STR (Sort-Tile-Recursive) spatial partitioning — carried
@@ -27,17 +27,20 @@ import graft.util.Memo
   * (a union box contains every member box, and growing boxes can only shrink
   * their separation). A tile pair with union separation > r — the k-th exact
   * distance of the seed pairs — therefore cannot contain a top-k pair and is
-  * never enumerated. Within surviving tile pairs the per-pair sliced-box
-  * bound (`graft_boxlb`) and the early-abandoning exact kernel run unchanged
-  * (TrajectorySearch.allPairsTopK's refine), so the result is exactly the
-  * unpruned top-k (asserted in StrPartitionTest at two SFs, and that tile
-  * pruning fires on spatially clustered data).
+  * never enumerated. The chain holds only for tame boxes (finite, no
+  * overflowing coordinate), so a non-tame union box prunes nothing
+  * ([[boxDist]]). Within surviving tile pairs the per-pair sliced-box bound
+  * (`graft_boxlb`) and the early-abandoning exact kernel decide, so the
+  * result is exactly the unpruned top-k (StrPartitionTest and the
+  * adversarial property in TrajectorySearchTest check it against the naive
+  * all-pairs join, and that tile pruning fires on clustered data).
   *
-  * On the bench fixture every user spans the same date range, so union boxes
-  * all overlap and no tile pair is pruned — the declared query t11 then
-  * degrades gracefully to the bound-then-refine scan with partitioned
-  * enumeration. The pruning power appears exactly when data is spatially
-  * clustered — the 10⁸-trajectory OSM/taxi case the reference targets.
+  * This is the one all-pairs top-k operator: t2 and t11 both run it. On the
+  * bench fixture every user spans the same date range, so union boxes all
+  * overlap and no tile pair is pruned — the scan then degrades gracefully to
+  * the bound-then-refine scan with partitioned enumeration. The pruning
+  * power appears exactly when data is spatially clustered — the
+  * 10⁸-trajectory OSM/taxi case the reference targets.
   */
 object StrPartition {
 
@@ -74,7 +77,8 @@ object StrPartition {
       else slabbed.groupBy(col("slab"))
         .agg(percentile_approx(col("cy"), typedLit(yProbs), lit(10000)).as("cuts"))
         .collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1))
+        // a slab whose centroids are all null (empty trajectories) has no cuts
+        .map(r => r.getInt(0) -> Option(r.getSeq[Double](1)).getOrElse(Nil))
         .toMap
     val yBucket = yCutsBySlab.foldLeft(lit(0)) { case (acc, (slab, cuts)) =>
       when(col("slab") === slab, bucketOf(col("cy"), cuts)).otherwise(acc)
@@ -83,21 +87,45 @@ object StrPartition {
       .drop("slab", "cx", "cy")
   }
 
-  /** Separation distance between two boxes (driver-side tile arithmetic). */
-  private def boxDist(a: (Double, Double, Double, Double),
-                      b: (Double, Double, Double, Double)): Double = {
+  /** Tile grid and seed size of the all-pairs scan. */
+  private val Nx = 4
+  private val Ny = 4
+  private val SeedFactor = 3
+
+  private type Box = (Double, Double, Double, Double)
+
+  /** Separation distance between two boxes (driver-side tile arithmetic).
+    * 0 — prune nothing — unless every coordinate of both is finite and
+    * within [[BoxLbKernel.TameLimit]]: a union box holding a NaN, ±Inf or
+    * overflowing member coordinate bounds nothing, since the metric kernels
+    * skip points at infinite distance. */
+  private def boxDist(a: Box, b: Box): Double = {
+    def tame(x: Box) = Seq(x._1, x._2, x._3, x._4).forall(v => math.abs(v) <= BoxLbKernel.TameLimit)
+    if (!tame(a) || !tame(b)) return 0.0
     val dx = math.max(0.0, math.max(a._1 - b._2, b._1 - a._2))
     val dy = math.max(0.0, math.max(a._3 - b._4, b._3 - a._4))
     math.sqrt(dx * dx + dy * dy)
   }
 
-  /** Tiled pair scan state: the slim checkpointed tile frame, the seed
-    * threshold r, and the surviving ORDERED tile pairs (diagonal once, each
+  /** Bounded tile summaries (tile, union MBR, member count): ≤ nx·ny rows.
+    * A tile of empty trajectories only has a null union, read as NaN. */
+  private def tileSummaries(taT: DataFrame): Array[(Int, Box, Long)] =
+    taT.groupBy(col("tile"))
+      .agg(min(col("mnx")), max(col("mxx")), min(col("mny")), max(col("mxy")), count(lit(1)))
+      .collect()
+      .map { r =>
+        def c(i: Int) = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+        (r.getInt(0), (c(1), c(2), c(3), c(4)), r.getLong(5))
+      }
+
+  /** The prepared all-pairs scan: the snapped tile frame, the seed
+    * threshold r, the surviving ORDERED tile pairs (diagonal once, each
     * surviving off-diagonal pair in both orders so `u1 < u2` enumerates every
-    * cross pair exactly once). `None` when the data is too small to seed k
-    * pairs from within tiles — callers fall back to the unpartitioned scan. */
+    * cross pair exactly once), and the snapped pairs (r1, r2, u1, u2) the
+    * bound keeps at r — the refine's input, so a warm call never
+    * re-enumerates the tile pairs. */
   private case class TiledScan(taT: DataFrame, r: Double, tilePairs: Seq[(Int, Int)],
-                               hintFat: Boolean = true, hintSlim: Boolean = true)
+                               survivors: DataFrame, hintFat: Boolean, hintSlim: Boolean)
 
   /** Slim tiled frame (user_id, tile, boxes, whole MBR) — the STR index
     * artifact. Pass it pre-built (e.g. via `sources.IndexStore`) to skip the
@@ -112,33 +140,34 @@ object StrPartition {
     * is a build-once index step like the tile assignment itself, so a warm
     * session answering many top-k calls pays it once (the reference's
     * construct-once / query-many loop). */
-  private def prepareScan(ta0: DataFrame, k: Int, metric: String, nx: Int, ny: Int,
-                          seedFactor: Int, cacheKey: Option[String] = None): Option[TiledScan] =
-    Memo.get(ta0.sparkSession, "strScan", cacheKey, k, metric, nx, ny, seedFactor)(
-      buildScan(ta0, k, metric, nx, ny, seedFactor, _))
+  private def prepareScan(ta0: DataFrame, k: Int, metric: String,
+                          cacheKey: Option[String] = None): TiledScan =
+    Memo.get(ta0.sparkSession, "strScan", cacheKey, k, metric)(buildScan(ta0, k, metric, _))
 
-  private def buildScan(ta0: DataFrame, k: Int, metric: String, nx: Int, ny: Int,
-                        seedFactor: Int, m: Memo.Frames): Option[TiledScan] = {
+  /** Pair-side projections of the scan frame: the slim one for the pair
+    * scan (row id, user, tile, boxes) and the coordinates by row id. */
+  private def slim(taT: DataFrame, side: String): DataFrame =
+    taT.select(col("rid").as(s"r$side"), col("user_id").as(s"u$side"),
+      col("tile").as(s"t$side"), col("boxes").as(s"boxes$side"))
+  private def fat(taT: DataFrame, side: String): DataFrame =
+    taT.select(col("rid").as(s"r$side"), col("xs").as(s"xs$side"), col("ys").as(s"ys$side"))
+
+  private def buildScan(ta0: DataFrame, k: Int, metric: String, m: Memo.Frames): TiledScan = {
     val s = ta0.sparkSession
     graft.functions.SlicedBoxLb.register(s)
     val ta = TrajectorySearch.ensureBoxes(ta0)
-    // slim per-trajectory frame: id, tile, slice boxes, whole MBR — the fat
-    // coordinate arrays never enter the pair scan (round-2 BNLJ lesson)
-    val taT = m.snap((if (ta.columns.contains("tile")) ta.select(col("user_id"),
-        col("tile"), col("boxes"), col("mnx"), col("mxx"), col("mny"), col("mxy"))
-      else tiledFrame(ta, nx, ny))
+    // one snapped row per input row under a row id: copies of a duplicated
+    // user_id stay apart, and the coordinates ride along for the seed and
+    // refine joins — the pair scan itself projects them away
+    val taT0 = m.snap((if (ta.columns.contains("tile")) ta else assignTiles(ta, Nx, Ny))
+      .select(monotonically_increasing_id().as("rid"), col("user_id"), col("tile"),
+        col("boxes"), col("mnx"), col("mxx"), col("mny"), col("mxy"), col("xs"), col("ys"))
       .repartition(s.sparkContext.defaultParallelism, col("user_id")))
-
-    // bounded tile summaries: union MBR + member count per tile
-    val tiles = taT.groupBy(col("tile"))
-      .agg(min(col("mnx")).as("mnx"), max(col("mxx")).as("mxx"),
-        min(col("mny")).as("mny"), max(col("mxy")).as("mxy"),
-        count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getInt(0),
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)), r.getLong(5)))
-    val withinPairs = tiles.map { case (_, _, n) => n * (n - 1) / 2 }.sum
-    if (withinPairs < k) return None // tiny data: seed cannot fill k
+    val tiles = tileSummaries(taT0)
+    // too few within-tile pairs to seed k: scan ONE tile, the whole table,
+    // whose within-tile seed is the global best-bound seed
+    val oneTile = tiles.map { case (_, _, n) => n * (n - 1) / 2 }.sum < k
+    val taT = if (oneTile) taT0.withColumn("tile", lit(0)) else taT0
 
     // size-guard the broadcast hints (same guard as bruteKnnJoin)
     val st = TrajectorySearch.trajStats(ta)
@@ -146,100 +175,108 @@ object StrPartition {
     val hintSlim = st.estSlimBytes <= TrajectorySearch.broadcastCap(s)
 
     // SEED from within-tile pairs (spatial neighbors → tight r): best-bound
-    // seedFactor·k pairs get the exact kernel; k-th exact distance = r
-    val a = taT.select(col("user_id").as("u1"), col("tile").as("t1"), col("boxes").as("boxes1"))
-    val b = taT.select(col("user_id").as("u2"), col("tile").as("t2"), col("boxes").as("boxes2"))
-    val fat1 = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
-    val fat2 = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
+    // SeedFactor·k pairs get the exact kernel; k-th exact distance = r.
+    // Stream one side across all cores, broadcast the slim other side while
+    // it fits: a 16-key shuffle join would serialize the scan onto ≤ nx·ny
+    // tasks
     val exact = round(MetricCol(metric, col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6)
-    // stream a across all cores, broadcast the slim b side while it fits: a
-    // 16-key shuffle join would serialize the scan onto ≤ nx·ny tasks
-    val seeds = a.join(hinted(b, hintSlim), col("t1") === col("t2") && col("u1") < col("u2"))
-      .select(col("u1"), col("u2"),
+    val seeds = slim(taT, "1")
+      .join(hinted(slim(taT, "2"), hintSlim), col("t1") === col("t2") && col("u1") < col("u2"))
+      .select(col("r1"), col("r2"), col("u1"), col("u2"),
         TrajectorySearch.slicedBoxLb("boxes1", "boxes2").as("lb"))
-      .orderBy(col("lb"), col("u1"), col("u2")).limit(seedFactor * k)
-      .join(hinted(fat1, hintFat), "u1").join(hinted(fat2, hintFat), "u2")
+      .orderBy(col("lb"), col("u1"), col("u2")).limit(SeedFactor * k)
+      .join(hinted(fat(taT, "1"), hintFat), "r1").join(hinted(fat(taT, "2"), hintFat), "r2")
       .select(exact.as("d"))
       .orderBy(col("d")).limit(k)
-      .collect()
-    if (seeds.length < k) return None
-    val r = seeds.last.getDouble(0)
+      .collect() // ≤ k rows
+    // fewer than k seed pairs, or a NaN k-th (NaN ranks last): no bound —
+    // nothing is pruned and every pair is computed exactly
+    val r = seeds.lastOption.map(_.getDouble(0))
+      .filter(d => seeds.length == k && !d.isNaN).getOrElse(Double.MaxValue)
 
     // tile-level prune (driver arithmetic over ≤ nx·ny summaries)
-    val ids = tiles.map(_._1)
-    val boxOf = tiles.map(t => t._1 -> t._2).toMap
-    val tilePairs = (for {
-      i <- ids; j <- ids
-      if i < j && boxDist(boxOf(i), boxOf(j)) <= r + 1e-6
-      p <- Seq((i, j), (j, i))
-    } yield p) ++ ids.map(i => (i, i))
-    Some(TiledScan(taT, r, tilePairs.toSeq, hintFat, hintSlim))
+    val tilePairs =
+      if (oneTile) Seq((0, 0))
+      else {
+        val ids = tiles.map(_._1)
+        val boxOf = tiles.map(t => t._1 -> t._2).toMap
+        (for {
+          i <- ids; j <- ids
+          if i < j && boxDist(boxOf(i), boxOf(j)) <= r + 1e-6
+          p <- Seq((i, j), (j, i))
+        } yield p).toSeq ++ ids.map(i => (i, i))
+      }
+    val survivors = m.snap(candidates(taT, tilePairs, hintSlim)
+      .filter(col("lb") <= r + 1e-6)
+      .select(col("r1"), col("r2"), col("u1"), col("u2")))
+    TiledScan(taT, r, tilePairs, survivors, hintFat, hintSlim)
   }
 
-  /** Candidate pairs (u1, u2, lb) enumerated via the tile-pair equi-join —
-    * the quadratic scan replaced by `Σ |tile_i|·|tile_j|` over surviving tile
-    * pairs. Exposed for the plan-shape and pruning tests. */
-  private def candidates(scan: TiledScan): DataFrame = {
-    val s = scan.taT.sparkSession
+  /** Candidate pairs (r1, r2, u1, u2, lb) enumerated via the tile-pair
+    * equi-join — the quadratic scan replaced by `Σ |tile_i|·|tile_j|` over
+    * surviving tile pairs. */
+  private def candidates(taT: DataFrame, tilePairs: Seq[(Int, Int)],
+                         hintSlim: Boolean): DataFrame = {
+    val s = taT.sparkSession
     import s.implicits._
-    val tp = broadcast(scan.tilePairs.toDF("ti", "tj"))
-    val a = scan.taT.select(col("user_id").as("u1"), col("tile").as("t1"),
-      col("boxes").as("boxes1"))
-    val b = scan.taT.select(col("user_id").as("u2"), col("tile").as("t2"),
-      col("boxes").as("boxes2"))
+    val tp = broadcast(tilePairs.toDF("ti", "tj"))
     // equi-joins on tile id, but keyed JOINS must not key the PARTITIONING:
-    // the streamed a side stays partitioned by user (all cores busy) while
-    // the tile-pair list and, while it fits the size guard, the slim b side
-    // broadcast — past the guard this becomes a shuffle join on tile id;
-    // the enumeration bound Σ|tile_i|·|tile_j| is the same either way
-    a.join(tp, col("t1") === col("ti"))
-      .join(hinted(b, scan.hintSlim), col("t2") === col("tj") && col("u1") < col("u2"))
-      .select(col("u1"), col("u2"),
+    // the streamed side stays partitioned by user (all cores busy) while
+    // the tile-pair list and, while it fits the size guard, the slim other
+    // side broadcast — past the guard this becomes a shuffle join on tile
+    // id; the enumeration bound Σ|tile_i|·|tile_j| is the same either way
+    slim(taT, "1").join(tp, col("t1") === col("ti"))
+      .join(hinted(slim(taT, "2"), hintSlim),
+        col("t2") === col("tj") && col("u1") < col("u2"))
+      .select(col("r1"), col("r2"), col("u1"), col("u2"),
         TrajectorySearch.slicedBoxLb("boxes1", "boxes2").as("lb"))
   }
 
-  /** STR-partitioned all-pairs top-k — identical results to
-    * [[TrajectorySearch.allPairsTopK]] (asserted at two SFs), with the pair
-    * enumeration bounded by surviving tile pairs instead of n²/2. Falls back
-    * to the unpartitioned scan when the data is too small to seed. */
+  /** The all-pairs top-k (t2, t11): the k smallest-distance pairs (u1 < u2)
+    * by (distance, u1, u2), one row per pair of input rows.
+    *
+    *  1. TILES: STR tile ids ([[assignTiles]], 4×4), unless the frame
+    *     carries them; a table too small to seed k within-tile pairs is one
+    *     tile.
+    *  2. SEED: the 3·k within-tile pairs with the smallest sliced-box bound
+    *     get the exact kernel; the k-th exact distance r bounds the
+    *     answer's k-th distance.
+    *  3. PRUNE: tile pairs whose union boxes lie > r apart are never
+    *     enumerated; enumerated pairs with `graft_boxlb` > r are dropped.
+    *  4. REFINE: the surviving pairs get the early-abandoning exact kernel.
+    *
+    * Every discarded pair has distance ≥ its bound > r, and ≥ k seed pairs
+    * sit at ≤ r, so the result is exactly the unpruned top-k. The margins
+    * (bound r + 1e-6, abandon r + 1e-5) sit well above the 6-dp rounding,
+    * so every pair that could tie at rounded r is computed exactly. The
+    * prepared scan (steps 1-3) is registered under `cacheKey`. */
   def allPairsTopKStr(ta0: DataFrame, k: Int, metric: String = "hausdorff",
-                      nx: Int = 4, ny: Int = 4, seedFactor: Int = 3,
                       cacheKey: Option[String] = None): DataFrame = {
-    prepareScan(ta0, k, metric, nx, ny, seedFactor, cacheKey) match {
-      case None => TrajectorySearch.allPairsTopK(ta0, k, metric, seedFactor)
-      case Some(scan) =>
-        val ta = TrajectorySearch.ensureBoxes(ta0)
-        val fat1 = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
-        val fat2 = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
-        val refine = round(MetricCol(metric,
-          col("xs1"), col("ys1"), col("xs2"), col("ys2"), lit(scan.r + 1e-5)), 6)
-        candidates(scan)
-          .filter(col("lb") <= scan.r + 1e-6)
-          .select(col("u1"), col("u2"))
-          .join(hinted(fat1, scan.hintFat), "u1").join(hinted(fat2, scan.hintFat), "u2")
-          .select(col("u1"), col("u2"), refine.as(metric))
-          .orderBy(col(metric), col("u1"), col("u2"))
-          .limit(k)
-    }
+    val scan = prepareScan(ta0, k, metric, cacheKey)
+    // Codegen static call — a UDF here would box 4 × |traj| doubles per pair
+    val refine = round(MetricCol(metric,
+      col("xs1"), col("ys1"), col("xs2"), col("ys2"), lit(scan.r + 1e-5)), 6)
+    scan.survivors
+      .join(hinted(fat(scan.taT, "1"), scan.hintFat), "r1")
+      .join(hinted(fat(scan.taT, "2"), scan.hintFat), "r2")
+      .select(col("u1"), col("u2"), refine.as(metric))
+      .orderBy(col(metric), col("u1"), col("u2"))
+      .limit(k)
   }
 
   /** (enumerated candidate pairs, total pairs) for the same plan — lets
     * tests assert that tile pruning actually fires on clustered data. */
-  def candidateStats(ta0: DataFrame, k: Int, metric: String = "hausdorff",
-                     nx: Int = 4, ny: Int = 4, seedFactor: Int = 3): (Long, Long) = {
+  def candidateStats(ta0: DataFrame, k: Int, metric: String = "hausdorff"): (Long, Long) = {
     val n = ta0.count()
-    val total = n * (n - 1) / 2
-    prepareScan(ta0, k, metric, nx, ny, seedFactor) match {
-      case None => (total, total)
-      case Some(scan) => (candidates(scan).count(), total)
-    }
+    (candidateFrame(ta0, k, metric).count(), n * (n - 1) / 2)
   }
 
   /** The candidate-enumeration frame for plan-shape assertions (equi-join on
     * tile ids — never a cartesian/nested-loop product). */
-  def candidateFrame(ta0: DataFrame, k: Int, metric: String = "hausdorff",
-                     nx: Int = 4, ny: Int = 4, seedFactor: Int = 3): Option[DataFrame] =
-    prepareScan(ta0, k, metric, nx, ny, seedFactor).map(candidates)
+  def candidateFrame(ta0: DataFrame, k: Int, metric: String = "hausdorff"): DataFrame = {
+    val scan = prepareScan(ta0, k, metric)
+    candidates(scan.taT, scan.tilePairs, scan.hintSlim)
+  }
 
   /** Prepared tiled-kNN scan: slim checkpointed tile frame, per-query
     * thresholds, surviving directed tile pairs. `None` when any tile is too
@@ -275,14 +312,7 @@ object StrPartition {
       else tiledFrame(ta, nx, ny))
       .repartition(s.sparkContext.defaultParallelism, col("user_id")))
 
-    // bounded tile summaries: union MBR + member count per occupied tile
-    val tiles = taT.groupBy(col("tile"))
-      .agg(min(col("mnx")).as("mnx"), max(col("mxx")).as("mxx"),
-        min(col("mny")).as("mny"), max(col("mxy")).as("mxy"),
-        count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getInt(0),
-        (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)), r.getLong(5)))
+    val tiles = tileSummaries(taT)
     // every query must find k within-tile candidates, else seeds underflow
     if (tiles.exists(_._3 < k + 1)) return None
 

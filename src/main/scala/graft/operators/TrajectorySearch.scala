@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -55,29 +54,22 @@ object TrajectorySearch {
   def slicedBoxLb(boxes1: String, boxes2: String): org.apache.spark.sql.Column =
     expr(s"graft_boxlb($boxes1, $boxes2)")
 
-  /** Slim all-pairs bound frame (u1, u2, lb): the nested-loop pair scan
-    * runs over (user_id, boxes) ONLY — 4k doubles a side, never the full
-    * coordinate arrays — with the codegen'd `graft_boxlb` bound in the
-    * join projection and the streamed side repartitioned so the scan
-    * parallelizes across all cores. Exposed for the plan-shape test. */
+  /** Slim all-pairs bound frame (u1, u2, lb) over every pair — a
+    * measurement surface (pruning probes, [[allPairsSurvivorCount]]), not a
+    * search path: the pair scan runs over (user_id, boxes) only, with the
+    * codegen'd `graft_boxlb` bound in the join projection and the streamed
+    * side repartitioned so the scan parallelizes across all cores. */
   def allPairsLb(ta0: DataFrame): DataFrame = {
     val ta = ensureBoxes(ta0)
-    allPairsLbOf(ta, trajStats(ta))
-  }
-
-  private def allPairsLbOf(ta: DataFrame, st: TrajStats): DataFrame = {
     graft.functions.SlicedBoxLb.register(ta.sparkSession)
     // explicit partition count: AQE would coalesce this ~50 KB shuffle to
-    // ONE partition and serialize the whole quadratic scan; the join OUTPUT
-    // is |users|² rows, so fan the streamed side to every core
+    // ONE partition and serialize the whole quadratic scan
     val sa = ta.select(col("user_id").as("u1"), col("boxes").as("boxes1"))
       .repartition(ta.sparkSession.sparkContext.defaultParallelism, col("u1"))
     val sb = ta.select(col("user_id").as("u2"), col("boxes").as("boxes2"))
-    // size-guarded hint: past the cap the slim frame no longer ships to
-    // every task — the non-equi scan plans as a partitioned cartesian
-    // instead of a forced driver-OOM broadcast (the SCALE route for big
-    // tables is allPairsTopKAuto's STR dispatch, not this flat scan)
-    sa.join(hinted(sb, st.estSlimBytes <= broadcastCap(ta.sparkSession)),
+    // size-guarded hint: past the cap the non-equi scan plans as a
+    // partitioned cartesian instead of a forced driver-OOM broadcast
+    sa.join(hinted(sb, trajStats(ta).estSlimBytes <= broadcastCap(ta.sparkSession)),
         col("u1") < col("u2"))
       .select(col("u1"), col("u2"), slicedBoxLb("boxes1", "boxes2").as("lb"))
   }
@@ -89,100 +81,15 @@ object TrajectorySearch {
   private[operators] def hinted(df: DataFrame, hint: Boolean): DataFrame =
     if (hint) broadcast(df) else df
 
-  /** The k smallest-distance pairs over ALL trajectory pairs (t2 surface),
-    * bound-then-refine:
-    *
-    *  1. SEED: exact kernel on the `seedFactor·k` pairs with the smallest
-    *     sliced-box lower bound → the k-th exact distance is an upper bound
-    *     `r` on the answer's k-th distance.
-    *  2. REFINE: pairs surviving `lb ≤ r` (read back from the checkpointed
-    *     bound frame) get the early-abandoning exact kernel. Every discarded
-    *     pair has distance ≥ lb > r, so the result is exactly the unpruned
-    *     top-k (OperatorsTest asserts equality at two SFs and that pruning
-    *     fires).
-    *
-    * The seed collect is k bounded rows — the reference's bound-seeding
-    * driver footprint.
-    */
-  def allPairsTopK(ta0: DataFrame, k: Int, metric: String = "hausdorff",
-                   seedFactor: Int = 3): DataFrame = {
-    val ta = ensureBoxes(ta0)
-    allPairsTopKOf(ta, trajStats(ta), k, metric, seedFactor, cacheKey = None)
-  }
+  /** The k smallest-distance pairs over ALL trajectory pairs (t2 surface):
+    * [[StrPartition.allPairsTopKStr]], the one all-pairs operator. */
+  def allPairsTopK(ta0: DataFrame, k: Int, metric: String = "hausdorff"): DataFrame =
+    StrPartition.allPairsTopKStr(ta0, k, metric)
 
-  /** [[allPairsTopK]] with the stats precomputed — the Auto dispatcher
-    * already paid the count/median aggregate; don't run it twice. */
-  private def allPairsTopKOf(ta: DataFrame, st: TrajStats, k: Int,
-                             metric: String, seedFactor: Int,
-                             cacheKey: Option[String]): DataFrame = {
-    val hintFat = st.estArrayBytes <= broadcastCap(ta.sparkSession)
-    val fat1 = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
-    val fat2 = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
-    val exact = round(MetricCol(metric, col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6)
-    // fat coordinate arrays ride equi-joins on u1/u2: hinted while they
-    // fit the cap, plain shuffle equi-joins past it (the bounded pair list
-    // is the small side the planner then broadcasts on its own)
-    def withArrays(pairs: DataFrame): DataFrame =
-      pairs.join(hinted(fat1, hintFat), "u1").join(hinted(fat2, hintFat), "u2")
-
-    // ONE pair scan: the 24-byte (u1, u2, lb) rows are snapped and serve
-    // both the seed TakeOrdered and the refine filter. Keyed callers (t2)
-    // reuse the frame across calls — the [[trajStatsCached]] contract: a
-    // query-independent artifact of the immutable-per-session table, whose
-    // |users|²/2 box scan cost ~0.7 s per t2 call at sf0.1.
-    val lbs = Memo.get(ta.sparkSession, "allPairsLb", cacheKey)(
-      _.snap(allPairsLbOf(ta, st)))
-
-    val seeds = withArrays(
-      lbs.orderBy(col("lb"), col("u1"), col("u2")).limit(seedFactor * k))
-      .select(exact.as("d"))
-      .orderBy(col("d")).limit(k)
-      .collect()
-    if (seeds.length < k) // tiny data: fewer pairs than k — no bound needed
-      return withArrays(lbs.select(col("u1"), col("u2")))
-        .select(col("u1"), col("u2"), exact.as(metric))
-        .orderBy(col(metric), col("u1"), col("u2"))
-        .limit(k)
-    val r = seeds.last.getDouble(0)
-
-    // Refinement kernel abandons once a pair is provably beyond r — such a
-    // pair cannot enter the top-k (≥ k seed pairs sit at ≤ r). The abandon
-    // margin 1e-5 ≫ the 6-dp rounding granularity, so every pair that could
-    // tie at rounded r is still computed exactly. Codegen static call — a
-    // UDF here would box 4 × |traj| doubles per pair, dominating the kernel.
-    val refine = round(MetricCol(metric,
-      col("xs1"), col("ys1"), col("xs2"), col("ys2"), lit(r + 1e-5)), 6)
-    withArrays(lbs.filter(col("lb") <= r + 1e-6).select(col("u1"), col("u2")))
-      .select(col("u1"), col("u2"), refine.as(metric))
-      .orderBy(col(metric), col("u1"), col("u2"))
-      .limit(k)
-  }
-
-  /** All-pairs regime predicate, mirror of [[chooseAutoPath]] for the t2
-    * surface: the flat bound scan ([[allPairsTopK]]) is right only while
-    * the pair space is small AND the slim boxes frame broadcasts — past
-    * [[TiledFlatKnee]] users (measured: tiled 5–6× ahead at ×10) or past
-    * the cap (the flat scan would degrade to a partitioned cartesian of
-    * the FULL pair space) the STR tile enumeration replaces the pair scan
-    * itself. */
-  private[graft] def allPairsUseTiled(st: TrajStats, cap: Long): Boolean =
-    st.users >= TiledFlatKnee || st.estSlimBytes > cap
-
-  /** Auto-dispatched all-pairs top-k (the t2 surface at any scale): flat
-    * bound-then-refine below the tiled knee, STR tile enumeration
-    * ([[StrPartition.allPairsTopKStr]], the t11 machinery) past it or
-    * whenever the slim bound frame outgrows [[broadcastCap]]. Identical
-    * results on both paths (asserted in StrPartitionTest). */
+  /** [[allPairsTopK]] with the prepared scan registered under `cacheKey`. */
   def allPairsTopKAuto(ta0: DataFrame, k: Int, metric: String = "hausdorff",
-                       seedFactor: Int = 3,
-                       cacheKey: Option[String] = None): DataFrame = {
-    val ta = ensureBoxes(ta0)
-    val st = trajStatsCached(ta, cacheKey)
-    if (allPairsUseTiled(st, broadcastCap(ta.sparkSession)))
-      StrPartition.allPairsTopKStr(ta, k, metric, seedFactor = seedFactor,
-        cacheKey = cacheKey)
-    else allPairsTopKOf(ta, st, k, metric, seedFactor, cacheKey)
-  }
+                       cacheKey: Option[String] = None): DataFrame =
+    StrPartition.allPairsTopKStr(ta0, k, metric, cacheKey)
 
   /** Reference-workload batch form of O15: top-k most similar trajectories
     * for EACH query in a query set, one job. The bounded query set is
@@ -291,7 +198,7 @@ object TrajectorySearch {
 
   private[graft] def trajStats(ta: DataFrame): TrajStats = {
     val r = ta.agg(count(lit(1)), median(size(col("xs")))).head()
-    TrajStats(r.getLong(0), r.getDouble(1))
+    TrajStats(r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1)) // null: empty table
   }
 
   /** [[trajStats]] memoized per (session, caller key): a deterministic
@@ -439,7 +346,7 @@ object TrajectorySearch {
     * the final query plan only shows the checkpointed ExistingRDD. */
   private[graft] def bruteHalfBuild(ta: DataFrame, metric: String,
                                     hintBroadcast: Boolean): DataFrame = {
-    // explicit fan-out of the STREAMED side (the allPairsLbOf rule): the
+    // explicit fan-out of the STREAMED side (the allPairsLb rule): the
     // per-user array table is physically a FEW small partitions (AQE
     // coalesces its build shuffle), so without this the entire |users|²/2
     // kernel scan runs in ONE task — measured 1 partition / one 1.5 s
@@ -699,12 +606,11 @@ object TrajectorySearch {
     *    ≤ the exact distance (or the exact distance is NaN, which ranks
     *    last), so the candidate ranks after the k-th either way and is
     *    discarded either way; below the bound the kernel is exact.
-    * The box bound is only trusted where both sides' boxes are finite and
-    * small enough that squared distances cannot overflow; there it is ≤ the
-    * kernel's value even in floating point, since every operation it takes
-    * is monotone. Any other pair (NaN or ±Inf coordinates) gets bound 0 and
-    * is always evaluated. A NaN k-th (empty trajectories rank last) never
-    * stops or abandons the scan.
+    * The box bound ([[graft.functions.BoxLbKernel.compute]]) is ≤ the
+    * kernel's value even in floating point; a pair with NaN, ±Inf or
+    * overflowing box coordinates gets bound 0 and is always evaluated. A
+    * NaN k-th (empty trajectories rank last) never stops or abandons the
+    * scan.
     */
   def topKPruned(ta0: DataFrame, queryUser: Long, k: Int, metric: String): DataFrame = {
     require(k >= 0, s"k must be non-negative, got $k")
@@ -755,30 +661,16 @@ object TrajectorySearch {
     if (d.isNaN || d.isInfinite) d
     else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** True when every box coordinate is finite and below 1e150, so no
-    * squared point distance between two such trajectories overflows. */
-  private def tameBoxes(b: ArrayData): Boolean = {
-    var i = 0
-    while (i < b.numElements()) {
-      if (!(math.abs(b.getDouble(i)) <= 1e150)) return false
-      i += 1
-    }
-    true
-  }
-
   /** One partition's branch-and-bound top-k (see [[topKPruned]]). */
   private def searchPartition(it: Iterator[InternalRow], c: SearchCols, queryUser: Long,
                               qs: Array[QueryTraj], k: Int,
                               frechet: Boolean): Iterator[Hit] = {
     val qBoxes = qs.map(q => UnsafeArrayData.fromPrimitiveArray(q.boxes))
-    val qTame = qBoxes.map(tameBoxes)
     // rows are reused by the scan: keep a copy of every candidate
     val cands = it.filter(c.isOther(_, queryUser)).flatMap { r =>
       val row = r.copy()
       val boxes = row.getArray(c.boxes)
-      val tame = tameBoxes(boxes)
-      qs.indices.map(i => (if (tame && qTame(i)) BoxLbKernel.compute(boxes, qBoxes(i)) else 0.0,
-        row, qs(i)))
+      qs.indices.map(i => (BoxLbKernel.compute(boxes, qBoxes(i)), row, qs(i)))
     }.toArray.sortBy(_._1)(Ordering.Double.TotalOrdering)
 
     val top = new Array[Hit](k) // ascending by HitOrder, first `held` slots used

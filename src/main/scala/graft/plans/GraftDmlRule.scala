@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.graftshim.GraftShims
 
 import graft.sources.{GraftTable, GraftTableRelation}
+import graft.util.Snap
 
 /** SQL DML over `graft-table` views (round-9 directive 6): analyzer
   * post-hoc rule routing `DELETE FROM` / `MERGE INTO` on a view backed by
@@ -169,23 +170,25 @@ case class GraftMergeCommand(dir: String, keyCol: String, source: LogicalPlan)
     // the same rows (a non-deterministic or concurrently-changing source
     // could otherwise pass the probe yet deliver duplicates), and the
     // source plan executes once, not twice
-    val src = GraftShims.ofRows(s, source).localCheckpoint()
-    // SQL MERGE semantics: multiple source rows per NON-NULL key must
-    // RAISE, not silently land duplicate rows (the programmatic upsert
-    // documents its keep-both behavior; the SQL surface keeps the
-    // standard's contract). NULL keys are exempt — ON equality never
-    // matches them, so they are all legal unmatched inserts. The aggregate
-    // is aliased: a key column literally named `count` must not collide.
-    val dup = src.filter(col(keyCol).isNotNull)
-      .groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > 1)
-      .limit(1).collect() // bounded collect: at most 1 row
-    if (dup.nonEmpty) throw new IllegalArgumentException(
-      s"MERGE source has multiple rows for $keyCol=${dup.head.get(0)} — " +
-        "SQL MERGE requires at most one source match per target row; " +
-        "dedupe the source (or use GraftTable.upsert, which documents " +
-        "keep-both batch semantics)")
-    GraftTable.upsert(s, dir, keyCol, src, GraftDmlStats.headStatsCols(dir))
+    val src = Snap(GraftShims.ofRows(s, source))
+    try {
+      // SQL MERGE semantics: multiple source rows per NON-NULL key must
+      // RAISE, not silently land duplicate rows (the programmatic upsert
+      // documents its keep-both behavior; the SQL surface keeps the
+      // standard's contract). NULL keys are exempt — ON equality never
+      // matches them, so they are all legal unmatched inserts. The aggregate
+      // is aliased: a key column literally named `count` must not collide.
+      val dup = src.filter(col(keyCol).isNotNull)
+        .groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
+        .filter(col("__n") > 1)
+        .limit(1).collect() // bounded collect: at most 1 row
+      if (dup.nonEmpty) throw new IllegalArgumentException(
+        s"MERGE source has multiple rows for $keyCol=${dup.head.get(0)} — " +
+          "SQL MERGE requires at most one source match per target row; " +
+          "dedupe the source (or use GraftTable.upsert, which documents " +
+          "keep-both batch semantics)")
+      GraftTable.upsert(s, dir, keyCol, src, GraftDmlStats.headStatsCols(dir))
+    } finally Snap.release(src) // the commit has written its files
     Seq.empty
   }
 }

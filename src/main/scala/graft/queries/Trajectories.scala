@@ -78,11 +78,11 @@ object Trajectories {
          |FROM hab JOIN hba ON hab.u1=hba.u1 AND hab.u2=hba.u2
          |ORDER BY ROUND(GREATEST(hab.h, hba.h),6) ASC, hab.u1, hab.u2 LIMIT 20""".stripMargin) {
       (s, dir) =>
-        // Bound-then-refine all-pairs search: the time-sliced MBR lower
-        // bound sits in the join condition; the exact Hausdorff kernel runs
-        // only on surviving pairs (~1/3 of the pair space on this fixture).
-        // Auto dispatch: past the tiled knee (or past the broadcast cap on
-        // the slim frame) the STR tile enumeration replaces the pair scan.
+        // Bound-then-refine all-pairs search over STR tiles (the one
+        // all-pairs operator, StrPartition.allPairsTopKStr): the time-sliced
+        // MBR lower bound filters the tile-pair enumeration; the exact
+        // Hausdorff kernel runs only on surviving pairs. Shares its prepared
+        // scan with t11 (same cacheKey, k and metric).
         graft.operators.TrajectorySearch.allPairsTopKAuto(
           Tables.trajArrays(s, dir, "purchase"), 20, "hausdorff",
           cacheKey = Some(s"$dir#purchase"))
@@ -253,7 +253,8 @@ object Trajectories {
     },
 
     // Reference O8 (STR partitioner) as a tile-level pre-filter on the
-    // all-pairs search: same answer as t2 (same oracle), but the pair
+    // all-pairs search: the same operator and answer as t2 (same oracle),
+    // with the tiles read from a stored index artifact. The pair
     // enumeration is an equi-join on surviving STR tile pairs — the scan
     // shape that survives 10⁸ spatially clustered trajectories. On this
     // fixture all tile union-MBRs overlap (every user spans the same date
@@ -282,8 +283,8 @@ object Trajectories {
             graft.operators.StrPartition.tiledFrame(ta, 4, 4)
               .drop("boxes")
           }._1
-        // seed threshold + surviving tile pairs memoized per (session, dir):
-        // the second query against a warm session probes the tiles directly
+        // seed threshold + surviving tile pairs memoized per (session, dir)
+        // and shared with t2: a warm session probes the tiles directly
         graft.operators.StrPartition.allPairsTopKStr(
           ta.join(tiles, "user_id"), 20, "hausdorff",
           cacheKey = Some(s"$dir#purchase"))

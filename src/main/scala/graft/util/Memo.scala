@@ -20,9 +20,8 @@ import org.apache.spark.storage.StorageLevel
   * materialized and releases exactly those when the entry is evicted or
   * cleared, whatever shape the value has — one frame, a composite of
   * several, or a plain driver value that recorded nothing. Under a
-  * reliable checkpoint dir the release frees nothing: a checkpoint's
-  * files stay on disk until Spark's ContextCleaner deletes them
-  * (`spark.cleaner.referenceTracking.cleanCheckpoints`).
+  * reliable checkpoint dir the release deletes the checkpoint's files
+  * ([[Snap.release]]).
   *
   * UNCACHED CALLS. [[get]] with no source builds without registering: its
   * `persist` is the identity (nothing would ever release it) and its

@@ -28,13 +28,20 @@ object Snap {
       df.checkpoint(eager = true)
     else df.localCheckpoint(true)
 
-  /** Free a snapped frame's executor blocks now instead of at GC. The
-    * checkpoint RDD is persisted at the RDD layer, not in the SQL
-    * CacheManager, so `df.unpersist()` would be a no-op: unpersist the RDD
-    * under the LogicalRDD leaf. A reliable checkpoint keeps its files. */
+  /** Free a snapped frame's storage now instead of at GC. The checkpoint
+    * RDD is persisted at the RDD layer, not in the SQL CacheManager, so
+    * `df.unpersist()` would be a no-op: unpersist the RDD under the
+    * LogicalRDD leaf, and delete a reliable checkpoint's files (Spark's
+    * ContextCleaner leaves them by default). The frame is unreadable
+    * afterwards. */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case l: LogicalRDD =>
+        l.rdd.unpersist(blocking = false)
+        l.rdd.getCheckpointFile.foreach { f =>
+          val p = new org.apache.hadoop.fs.Path(f)
+          p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+        }
       case _ => ()
     }
 

@@ -63,18 +63,21 @@ class ExplainPlanTest extends AnyFunSuite {
     val p = plan("t2_hausdorff_pairs")
     val joinLines = p.linesIterator.filter(_.contains("Join")).mkString("\n")
     assert(!joinLines.contains("UDF"), joinLines)
-    // the pair scan itself: slim nested-loop join evaluating the native
-    // graft_boxlb expression, no UDF anywhere, no coordinate arrays
+    // the pair scan itself (the STR candidate frame): equi-joins on tile
+    // ids evaluating the native graft_boxlb expression, no UDF anywhere
     val ta = Tables.trajArrays(TestSpark.spark, TestSpark.sf0001)
-    val lbPlan = graft.operators.TrajectorySearch.allPairsLb(ta)
-      .queryExecution.executedPlan.toString
-    assert(lbPlan.contains("graft_boxlb"), lbPlan)
-    assert(!lbPlan.contains("UDF"), lbPlan)
-    // the joined pair rows carry (user_id, boxes) only — coordinate arrays
-    // stay out of the quadratic scan
-    val joined = lbPlan.linesIterator.find(_.contains("BroadcastNestedLoopJoin"))
-    assert(joined.isDefined, lbPlan)
-    assert(!lbPlan.contains("xs1") && !lbPlan.contains("ys1"), lbPlan)
+    val scan = graft.operators.StrPartition.candidateFrame(ta, 20, "hausdorff")
+      .queryExecution.sparkPlan
+    val scanPlan = scan.toString
+    assert(scanPlan.contains("graft_boxlb"), scanPlan)
+    assert(!scanPlan.contains("UDF"), scanPlan)
+    // the joined pair rows carry (row id, user_id, tile, boxes) only —
+    // coordinate arrays stay out of the quadratic scan
+    val joins = scan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+    assert(joins.nonEmpty, scanPlan)
+    for (j <- joins)
+      assert(!j.output.exists(a => a.name.startsWith("xs") || a.name.startsWith("ys")),
+        s"coordinate arrays in a pair-scan join: ${j.output}\n$scanPlan")
   }
 
   test("r13: correlated-aggregate filter plans as one window, no self-join") {

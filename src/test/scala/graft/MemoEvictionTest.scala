@@ -6,7 +6,7 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
-import graft.operators.{Components, DocSimilarity, TrajectorySearch}
+import graft.operators.{Components, DocSimilarity, StrPartition}
 import graft.util.Memo
 
 /** The session artifact registry: one access-order LRU bound over typed
@@ -182,16 +182,36 @@ class MemoEvictionTest extends AnyFunSuite {
     Memo.clearAll()
   }
 
-  test("clearing the registry frees the all-pairs bound frame's checkpoint") {
+  test("clearing the registry frees the all-pairs scan's checkpoint") {
     Memo.clearAll()
     val rnd = new scala.util.Random(7)
     val ta = Tables.withSliceBoxes((0L until 40L).map { u =>
       (u, Seq.fill(6)(rnd.nextDouble() * 100), Seq.fill(6)(rnd.nextDouble() * 100))
     }.toDF("user_id", "xs", "ys"))
     val created = storageOf(1)(
-      TrajectorySearch.allPairsTopKAuto(ta, 5, cacheKey = Some("memo-lb-test")).collect())
+      StrPartition.allPairsTopKStr(ta, 5, cacheKey = Some("memo-scan-test")).collect())
     Memo.clearAll()
     assertFreed(created)
+  }
+
+  test("clearing the registry deletes a reliable checkpoint's files") {
+    Memo.clearAll()
+    val sc = spark.sparkContext
+    val saved = sc.getCheckpointDir
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    def rddDirs(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("rdd-")).toSeq
+    }
+    sc.setCheckpointDir(dir.toString)
+    try {
+      val c = Memo(spark, "kind", "reliable")(_.snap(spark.range(0, 100, 1, 2).toDF("c")))
+      assert(c.count() == 100)
+      assert(rddDirs().nonEmpty, "a snap under a checkpoint dir writes a reliable checkpoint")
+      Memo.clearAll()
+      assert(rddDirs().isEmpty, s"checkpoint files left after clearAll: ${rddDirs()}")
+    } finally org.apache.spark.CheckpointDirReset(sc, saved)
   }
 
   test("artifacts differing only in name, or in how a key splits, never share an entry") {

@@ -1,14 +1,15 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.functions.{col, round, udf}
 
 import graft.geo.Metrics
 
 /** Test-only oracles for the metric kernels in [[graft.geo.Metrics]]: the
-  * definitional memoized recursions behind the DP property tests, and a
-  * plain Hausdorff UDF that is independent of the engine's bounded
-  * codegen path. */
+  * definitional memoized recursions behind the DP property tests, plain
+  * Hausdorff/Fréchet UDFs that are independent of the engine's bounded
+  * codegen path, and the unpruned all-pairs join built on them. */
 object MetricOracles {
 
   private def d2(ax: Double, ay: Double, bx: Double, by: Double): Double = {
@@ -27,6 +28,26 @@ object MetricOracles {
     udf { (xa: Seq[Double], ya: Seq[Double], xb: Seq[Double], yb: Seq[Double]) =>
       Metrics.hausdorff(xa.toArray, ya.toArray, xb.toArray, yb.toArray)
     }
+
+  /** Unbounded [[Metrics.discreteFrechet]] over the boxed array columns. */
+  val frechetUdf: UserDefinedFunction =
+    udf { (xa: Seq[Double], ya: Seq[Double], xb: Seq[Double], yb: Seq[Double]) =>
+      Metrics.discreteFrechet(xa.toArray, ya.toArray, xb.toArray, yb.toArray)
+    }
+
+  /** The unpruned all-pairs top-k of a (user_id, xs, ys) table: the exact
+    * kernel on every pair of rows with u1 < u2, ranked by (6-dp distance,
+    * u1, u2) — one row per pair of input rows, so duplicated ids give
+    * several. */
+  def allPairsNaive(ta: DataFrame, k: Int, metric: String): DataFrame = {
+    val fn = if (metric == "frechet") frechetUdf else hausdorffUdf
+    val a = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
+    val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
+    a.join(b, col("u1") < col("u2"))
+      .select(col("u1"), col("u2"),
+        round(fn(col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6).as(metric))
+      .orderBy(col(metric), col("u1"), col("u2")).limit(k)
+  }
 
   def dtwNaive(xa: Array[Double], ya: Array[Double],
                xb: Array[Double], yb: Array[Double]): Double = {

@@ -84,6 +84,19 @@ class StaticChecksTest extends AnyFunSuite {
     assert(n <= 41, s"collect() call count grew to $n — audit new driver-side collects")
   }
 
+  test("every checkpoint in src/main goes through util/Snap") {
+    // Snap switches to a reliable checkpoint under a checkpoint dir and its
+    // release frees either kind; a direct call bypasses both
+    val offenders = mainSources.filterNot(_._1.endsWith("util/Snap.scala")).flatMap {
+      case (path, text) =>
+        text.split("\n", -1).zipWithIndex.collect {
+          case (l, i) if l.contains("localCheckpoint(") || l.contains(".checkpoint(") =>
+            s"$path:${i + 1}"
+        }
+    }
+    assert(offenders.isEmpty, s"checkpoints outside Snap in: $offenders")
+  }
+
   test("no boxed Scala UDF wraps a trajectory metric kernel in src/main") {
     // A UDF over Seq[Double] boxes every coordinate of every pair; the
     // metric kernels are reached through graft.functions.MetricCol's

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{StrPartition, TrajectorySearch}
 
 /** STR tile pre-filter (reference O8 as a dataflow pre-filter): exact
-  * equality with the unpartitioned bound-then-refine scan, tile-level
-  * pruning power on clustered data, and the equi-join plan shape. */
+  * equality with the naive all-pairs join ([[MetricOracles.allPairsNaive]]),
+  * tile-level pruning power on clustered data, and the equi-join plan
+  * shape. */
 class StrPartitionTest extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -15,7 +16,7 @@ class StrPartitionTest extends AnyFunSuite {
   test("STR all-pairs top-k equals the unpartitioned scan at two SFs") {
     for (dir <- Seq(TestSpark.sf0001, TestSpark.sf001)) {
       val ta = Tables.trajArrays(spark, dir)
-      val base = TrajectorySearch.allPairsTopK(ta, 20, "hausdorff")
+      val base = MetricOracles.allPairsNaive(ta, 20, "hausdorff")
         .collect().map(_.toString).toSeq
       val str = StrPartition.allPairsTopKStr(ta, 20, "hausdorff")
         .collect().map(_.toString).toSeq
@@ -25,7 +26,7 @@ class StrPartitionTest extends AnyFunSuite {
 
   test("STR all-pairs works for the Fréchet metric too (bound ≤ Hausdorff ≤ Fréchet)") {
     val ta = Tables.trajArrays(spark, TestSpark.sf0001)
-    val base = TrajectorySearch.allPairsTopK(ta, 10, "frechet")
+    val base = MetricOracles.allPairsNaive(ta, 10, "frechet")
       .collect().map(_.toString).toSeq
     val str = StrPartition.allPairsTopKStr(ta, 10, "frechet")
       .collect().map(_.toString).toSeq
@@ -34,24 +35,24 @@ class StrPartitionTest extends AnyFunSuite {
 
   /** Three clusters ~500 apart: within-cluster top-k distances are ≤ ~3, so
     * every cross-cluster tile pair must be pruned at the tile level. */
-  private def clusteredTa = {
+  private def clusteredRows = {
     val rnd = new scala.util.Random(7)
     def traj(cx: Double, cy: Double): (Seq[Double], Seq[Double]) = {
       val n = 5 + rnd.nextInt(10)
       (Seq.fill(n)(cx + rnd.nextDouble()), Seq.fill(n)(cy + rnd.nextDouble()))
     }
     val centers = Seq((0.0, 0.0), (500.0, 0.0), (0.0, 500.0))
-    val rows = (0L until 60L).map { i =>
+    (0L until 60L).map { i =>
       val (cx, cy) = centers((i % 3).toInt)
       val (xs, ys) = traj(cx, cy)
       (i, xs, ys)
     }
-    rows.toDF("user_id", "xs", "ys")
   }
+  private def clusteredTa = clusteredRows.toDF("user_id", "xs", "ys")
 
   test("tile pruning fires on clustered data and the result stays exact") {
     val ta = clusteredTa
-    val base = TrajectorySearch.allPairsTopK(ta, 10, "hausdorff")
+    val base = MetricOracles.allPairsNaive(ta, 10, "hausdorff")
       .collect().map(_.toString).toSeq
     val str = StrPartition.allPairsTopKStr(ta, 10, "hausdorff")
       .collect().map(_.toString).toSeq
@@ -65,11 +66,27 @@ class StrPartitionTest extends AnyFunSuite {
     assert(enumerated >= 10, s"candidates must cover the answer: $enumerated")
   }
 
+  test("a NaN coordinate does not hide a nearest neighbour in another tile") {
+    // user 60 is user 0 (cluster at the origin) plus one point with a NaN x:
+    // Hausdorff skips that point, so the pair (0, 60) is at distance 0. Its
+    // NaN centroid sorts into the top x-slab, with the cluster at x = 500,
+    // so its neighbour sits in another tile, and its tile's union box is
+    // NaN — a box that bounds nothing and must prune no tile pair.
+    val (_, xs0, ys0) = clusteredRows.head
+    val ta = (clusteredRows :+ ((60L, xs0 :+ Double.NaN, ys0 :+ ys0.last)))
+      .toDF("user_id", "xs", "ys")
+    val base = MetricOracles.allPairsNaive(ta, 10, "hausdorff")
+      .collect().map(_.toString).toSeq
+    assert(base.head == "[0,60,0.0]", base)
+    val str = StrPartition.allPairsTopKStr(ta, 10, "hausdorff")
+      .collect().map(_.toString).toSeq
+    assert(str == base)
+  }
+
   test("candidate enumeration is an equi-join on tiles, never a nested loop") {
     val ta = clusteredTa
-    val frame = StrPartition.candidateFrame(ta, 10, "hausdorff")
-    assert(frame.isDefined, "clustered fixture must not fall back")
-    val plan = frame.get.queryExecution.executedPlan.toString
+    val plan = StrPartition.candidateFrame(ta, 10, "hausdorff")
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan.linesIterator.take(5).mkString("\n"))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.linesIterator.take(5).mkString("\n"))
   }
@@ -80,7 +97,7 @@ class StrPartitionTest extends AnyFunSuite {
       (1L, Seq(5.0, 6.0), Seq(5.0, 6.0)),
       (2L, Seq(9.0, 10.0), Seq(9.0, 10.0))
     ).toDF("user_id", "xs", "ys")
-    val base = TrajectorySearch.allPairsTopK(tiny, 10, "hausdorff")
+    val base = MetricOracles.allPairsNaive(tiny, 10, "hausdorff")
       .collect().map(_.toString).toSeq
     val str = StrPartition.allPairsTopKStr(tiny, 10, "hausdorff")
       .collect().map(_.toString).toSeq
@@ -155,10 +172,10 @@ class StrPartitionTest extends AnyFunSuite {
       assert(hintCount(hinted) > 1, "under the cap the data-sided hints apply")
       assert(unhinted.collect().map(_.toString).toSeq == hintedRows,
         "guarded plan must produce identical results")
-      // the all-pairs form falls back the same way
+      // the all-pairs form drops its data-sized hints the same way
       val basePairs = StrPartition.allPairsTopKStr(ta, 10, "hausdorff")
       assert(basePairs.collect().map(_.toString).toSeq ==
-        TrajectorySearch.allPairsTopK(ta, 10, "hausdorff").collect().map(_.toString).toSeq)
+        MetricOracles.allPairsNaive(ta, 10, "hausdorff").collect().map(_.toString).toSeq)
     } finally spark.conf.unset("spark.graft.broadcastCapBytes")
   }
 

@@ -5,7 +5,7 @@ import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.TrajectorySearch
+import graft.operators.{StrPartition, TrajectorySearch}
 
 /** Bound-seeding top-k search (reference O11/O13): exact equality with the
   * naive scan, and pruning power on spatially separated data. */
@@ -64,22 +64,51 @@ class TrajectorySearchTest extends AnyFunSuite {
     } yield SearchCase(all, query, k)
   }
 
-  test("topKPruned ≡ topKOf row for row on generated adversarial tables, 1 and 7 partitions") {
+  /** A (user_id, xs, ys) table of `rows` in `parts` input partitions. */
+  private def frameOf(rows: Seq[(Long, Seq[Double], Seq[Double])], parts: Int) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("xs", ArrayType(DoubleType)), StructField("ys", ArrayType(DoubleType))))
-    def round6(d: Double) = if (d.isNaN || d.isInfinite) d
-      else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (u, xs, ys) => Row(u, xs, ys) }, parts), schema)
+  }
+
+  private def round6(d: Double) = if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** (distance, ids) ascending with NaN last — the engine's result order. */
+  private def byDist[T](key: T => (Double, Long, Long))(a: T, b: T): Boolean = {
+    val (da, a1, a2) = key(a); val (db, b1, b2) = key(b)
+    val c = java.lang.Double.compare(da, db)
+    c < 0 || (c == 0 && (a1 < b1 || (a1 == b1 && a2 < b2)))
+  }
+
+  /** Layouts random tables rarely hit. Trajectory 0 and 1 are at Hausdorff
+    * distance 0, but slice 0 of trajectory 1 (2 of 16 points) has a box the
+    * box bound cannot use: a NaN corner, or a corner whose squared distance
+    * to trajectory 0 is finite while both points' squared distances
+    * overflow. Its bound is then > 1 although its distance is 0, so a
+    * bound-trusting search stops at trajectory 2 (distance 1). */
+  private val badSliceLayouts: Seq[Seq[(Long, Seq[Double], Seq[Double])]] = {
+    def pts(n: Int, x: Double, y: Double) = Seq.fill(n)((x, y))
+    val query = pts(8, 0.0, 0.0) ++ pts(8, 5.0, 0.0)
+    for (cand <- Seq(
+        Seq((0.0, 0.0), (Double.NaN, 0.0)) ++ pts(14, 5.0, 0.0),
+        Seq((1e154, 1.5e154), (1.5e154, 0.0)) ++ pts(7, 0.0, 0.0) ++ pts(7, 5.0, 0.0)))
+      yield Seq((0L, query.map(_._1), query.map(_._2)),
+        (1L, cand.map(_._1), cand.map(_._2)),
+        (2L, query.map(_._1), query.map(_._2 + 1.0)))
+  }
+
+  test("topKPruned ≡ topKOf row for row on generated adversarial tables, 1 and 7 partitions") {
     val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     def mismatch(sc: SearchCase): Option[String] = {
-      def frame(parts: Int) = spark.createDataFrame(spark.sparkContext.parallelize(
-        sc.rows.map { case (u, xs, ys) => Row(u, xs, ys) }, parts), schema)
       (for (metric <- Seq("hausdorff", "frechet")) yield {
-        val naive = TrajectorySearch.topKOf(frame(1), sc.query, sc.k, metric)
+        val naive = TrajectorySearch.topKOf(frameOf(sc.rows, 1), sc.query, sc.k, metric)
           .collect().map(_.toString).toSeq
         Seq(1, 7).flatMap { parts =>
-          val pruned = TrajectorySearch.topKPruned(frame(parts), sc.query, sc.k, metric)
+          val pruned = TrajectorySearch.topKPruned(frameOf(sc.rows, parts), sc.query, sc.k, metric)
             .collect().map(_.toString).toSeq
           if (pruned == naive) None
           else Some(s"$metric, $parts partitions: $pruned != $naive for $sc")
@@ -93,10 +122,7 @@ class TrajectorySearchTest extends AnyFunSuite {
       val cands = sc.rows.filter(_._1 != sc.query)
       val ranked = (for ((u, xs, ys) <- cands; (_, qx, qy) <- qRows) yield (u, round6(
         graft.geo.Metrics.hausdorff(xs.toArray, ys.toArray, qx.toArray, qy.toArray))))
-        .sortWith { (a, b) =>
-          val c = java.lang.Double.compare(a._2, b._2)
-          c < 0 || (c == 0 && a._1 < b._1)
-        }
+        .sortWith(byDist[(Long, Double)](h => (h._2, h._1, 0L)))
       val pts = sc.rows.flatMap(r => r._2 ++ r._3)
       Seq("empty" -> sc.rows.exists(_._2.isEmpty), "1-point" -> sc.rows.exists(_._2.size == 1),
         "NaN" -> pts.exists(_.isNaN), "Inf" -> pts.exists(_.isInfinite),
@@ -117,23 +143,50 @@ class TrajectorySearchTest extends AnyFunSuite {
         "tie at k-th", "duplicate id"))
       assert(seen(what) > 0, s"no generated case covered '$what': $seen")
 
-    // Layouts random tables rarely hit. Query 0 and candidate 1 are at
-    // Hausdorff distance 0, but slice 0 of candidate 1 (2 of 16 points) has
-    // a box the box bound cannot use: a NaN corner, or a corner whose
-    // squared distance to the query is finite while both points' squared
-    // distances overflow.
-    // Its bound is then > 1 although its distance is 0, so a bound-trusting
-    // search stops after candidate 2 (distance 1).
-    def pts(n: Int, x: Double, y: Double) = Seq.fill(n)((x, y))
-    val query = pts(8, 0.0, 0.0) ++ pts(8, 5.0, 0.0)
-    for (cand <- Seq(
-        Seq((0.0, 0.0), (Double.NaN, 0.0)) ++ pts(14, 5.0, 0.0),
-        Seq((1e154, 1.5e154), (1.5e154, 0.0)) ++ pts(7, 0.0, 0.0) ++ pts(7, 5.0, 0.0))) {
-      val sc = SearchCase(Seq((0L, query.map(_._1), query.map(_._2)),
-        (1L, cand.map(_._1), cand.map(_._2)),
-        (2L, query.map(_._1), query.map(_._2 + 1.0))), query = 0L, k = 1)
-      mismatch(sc).foreach(m => fail(m))
+    for (rows <- badSliceLayouts)
+      mismatch(SearchCase(rows, query = 0L, k = 1)).foreach(m => fail(m))
+  }
+
+  test("allPairsTopKStr ≡ the naive all-pairs join row for row on generated adversarial tables, 1 and 7 partitions") {
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def mismatch(rows: Seq[(Long, Seq[Double], Seq[Double])], k: Int): Option[String] =
+      (for (metric <- Seq("hausdorff", "frechet")) yield {
+        val naive = MetricOracles.allPairsNaive(frameOf(rows, 1), k, metric)
+          .collect().map(_.toString).toSeq
+        Seq(1, 7).flatMap { parts =>
+          val got = StrPartition.allPairsTopKStr(frameOf(rows, parts), k, metric)
+            .collect().map(_.toString).toSeq
+          if (got == naive) None
+          else Some(s"$metric, $parts partitions, k=$k: $got != $naive for $rows")
+        }
+      }).flatten.headOption
+
+    // the single-search generator's tables, its query user unused
+    val prop = Prop.forAllNoShrink(searchCases) { sc =>
+      // what the case covers, from a local brute force
+      val ranked = (for ((u1, x1, y1) <- sc.rows; (u2, x2, y2) <- sc.rows if u1 < u2)
+        yield (u1, u2, round6(
+          graft.geo.Metrics.hausdorff(x1.toArray, y1.toArray, x2.toArray, y2.toArray))))
+        .sortWith(byDist[(Long, Long, Double)](p => (p._3, p._1, p._2)))
+      val pts = sc.rows.flatMap(r => r._2 ++ r._3)
+      Seq("empty" -> sc.rows.exists(_._2.isEmpty), "1-point" -> sc.rows.exists(_._2.size == 1),
+        "NaN" -> pts.exists(_.isNaN), "Inf" -> pts.exists(_.isInfinite),
+        "fewer than k pairs" -> (ranked.size < sc.k),
+        "tie at k-th" -> (ranked.size > sc.k && ranked(sc.k - 1)._3 == ranked(sc.k)._3),
+        "duplicate id" -> (sc.rows.map(_._1).distinct.size < sc.rows.size))
+        .foreach { case (what, hit) => if (hit) seen(what) += 1 }
+      val m = mismatch(sc.rows, sc.k)
+      m.isEmpty :| m.getOrElse("")
     }
+    val res = org.scalacheck.Test.check(org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(30).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261020L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    for (what <- Seq("empty", "1-point", "NaN", "Inf", "fewer than k pairs", "tie at k-th",
+        "duplicate id"))
+      assert(seen(what) > 0, s"no generated case covered '$what': $seen")
+
+    for (rows <- badSliceLayouts) mismatch(rows, 1).foreach(m => fail(m))
   }
 
   test("topKPruned runs exactly two Spark jobs per call, whatever the query user") {
@@ -205,17 +258,11 @@ class TrajectorySearchTest extends AnyFunSuite {
   }
 
   test("allPairsTopK (t2 surface) equals the unpruned all-pairs top-k at two SFs") {
-    val h = MetricOracles.hausdorffUdf
     for (dir <- Seq(TestSpark.sf0001, TestSpark.sf001)) {
       val ta = Tables.trajArrays(spark, dir)
       val pruned = TrajectorySearch.allPairsTopK(ta, 20, "hausdorff")
         .collect().map(_.toString).toSeq
-      val a = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
-      val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
-      val naive = a.join(b, col("u1") < col("u2"))
-        .select(col("u1"), col("u2"),
-          round(h(col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6).as("hausdorff"))
-        .orderBy(col("hausdorff"), col("u1"), col("u2")).limit(20)
+      val naive = MetricOracles.allPairsNaive(ta, 20, "hausdorff")
         .collect().map(_.toString).toSeq
       assert(pruned == naive, dir)
     }
@@ -444,32 +491,5 @@ class TrajectorySearchTest extends AnyFunSuite {
         .collect().map(_.toString).toSeq
       assert(repart == base)
     } finally spark.conf.unset("spark.graft.broadcastCapBytes")
-  }
-
-  /** Round-9 directive 3: t2's all-pairs search gains the same measured
-    * dispatch as knnJoin — flat bound scan only while the table is below
-    * the tiled knee AND the slim frame broadcasts; else the STR tile
-    * enumeration replaces the pair scan itself. */
-  test("allPairsTopKAuto dispatches flat below the knee, tiled past it or past the cap — same answer") {
-    val ta = Tables.trajArrays(spark, TestSpark.sf001)
-    val st = TrajectorySearch.trajStats(ta)
-    val cap = TrajectorySearch.BruteBroadcastMaxBytes
-    assert(!TrajectorySearch.allPairsUseTiled(st, cap),
-      "the sf0.01 fixture stays on the flat path")
-    assert(TrajectorySearch.allPairsUseTiled(
-      TrajectorySearch.TrajStats(TrajectorySearch.TiledFlatKnee, 13.0), cap),
-      "knee-sized table → tiled regardless of broadcastability")
-    assert(TrajectorySearch.allPairsUseTiled(st, 0L),
-      "slim frame past the cap → tiled (never a forced broadcast)")
-    val flat = TrajectorySearch.allPairsTopK(ta, 10, "hausdorff")
-      .collect().map(_.toString).toSeq
-    assert(TrajectorySearch.allPairsTopKAuto(ta, 10, "hausdorff")
-      .collect().map(_.toString).toSeq == flat, "auto flat route")
-    spark.conf.set("spark.graft.broadcastCapBytes", "0")
-    try
-      assert(TrajectorySearch.allPairsTopKAuto(ta, 10, "hausdorff")
-        .collect().map(_.toString).toSeq == flat,
-        "auto tiled route under a tiny cap must return the flat answer")
-    finally spark.conf.unset("spark.graft.broadcastCapBytes")
   }
 }
