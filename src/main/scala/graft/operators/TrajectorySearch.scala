@@ -1,46 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
 import graft.Tables
 import graft.functions.{BoxLbKernel, MetricCol}
 import graft.geo.Metrics
 import graft.util.Memo
-import graft.util.Snap.Ops
+import graft.util.Snap
 
-/** Reference O15 — the flagship query of the DFT system: given a query
-  * trajectory, return the k most similar trajectories under Hausdorff or
-  * discrete Fréchet distance.
-  *
-  * Spark-first shape ([[topKOf]]): the 1-row query trajectory is broadcast
-  * (the reference broadcasts its query the same way), distances are
-  * computed partition-local over the per-user array table, and top-k is
-  * `TakeOrderedAndProject` (per-partition heap, driver merges k rows).
-  * [[topKPruned]] runs the same search as the reference's partition-local
-  * branch-and-bound: candidates in lower-bound order, exact kernel only
-  * until the bound passes the running k-th distance — the same
-  * bound-then-refine pattern implemented for vectors in
-  * VectorOps.cosineSelfJoin.
-  */
+/** Reference O15 — the flagship query of the DFT system: the k most
+  * similar trajectories to a query trajectory, or to each of a query set,
+  * under Hausdorff or discrete Fréchet distance. [[topKPruned]] (t7/t8) and
+  * [[topKBatchPruned]] (t9) share one partition-local branch-and-bound
+  * search ([[searchQuerySet]]), the bound-then-refine pattern implemented
+  * for vectors in VectorOps.cosineSelfJoin. */
 object TrajectorySearch {
-
-  def topK(s: SparkSession, dir: String, queryUser: Long = 0L, k: Int = 10,
-           metric: String = "hausdorff", eventType: String = "purchase"): DataFrame =
-    topKOf(Tables.trajArrays(s, dir, eventType), queryUser, k, metric)
-
-  def topKOf(ta: DataFrame, queryUser: Long, k: Int, metric: String): DataFrame = {
-    val q = ta.filter(col("user_id") === queryUser)
-      .select(col("xs").as("qxs"), col("ys").as("qys"))
-    ta.filter(col("user_id") =!= queryUser)
-      .crossJoin(broadcast(q))
-      .select(col("user_id"),
-        round(MetricCol(metric, col("xs"), col("ys"), col("qxs"), col("qys")), 6).as("dist"))
-      .orderBy(col("dist"), col("user_id"))
-      .limit(k)
-  }
 
   /** Time-sliced MBR lower bound (reference O4/O11 carried to pairs): with
     * A partitioned into time slices {Aᵢ} and B into {Bⱼ}, every a ∈ Aᵢ has
@@ -91,48 +69,16 @@ object TrajectorySearch {
                        cacheKey: Option[String] = None): DataFrame =
     StrPartition.allPairsTopKStr(ta0, k, metric, cacheKey)
 
-  /** Reference-workload batch form of O15: top-k most similar trajectories
-    * for EACH query in a query set, one job. The bounded query set is
-    * broadcast (like the reference broadcasts its query trajectories),
-    * distances are computed partition-local against the candidate table, and
-    * per-query top-k is a window ranked within `q_user` — a single shuffle
-    * keyed by query, no driver-side loop over queries.
-    */
-  def topKBatch(ta0: DataFrame, queryUsers: Seq[Long], k: Int,
-                metric: String = "hausdorff"): DataFrame = {
-    val ta = ensureBoxes(ta0)
-    val q = ta.filter(col("user_id").isInCollection(queryUsers))
-      .select(col("user_id").as("q_user"), col("xs").as("qxs"), col("ys").as("qys"))
-    val dists = ta.select(col("user_id"), col("xs"), col("ys"))
-      .join(broadcast(q), col("user_id") =!= col("q_user"))
-      .select(col("q_user"), col("user_id"),
-        round(MetricCol(metric, col("xs"), col("ys"), col("qxs"), col("qys")), 6).as("dist"))
-    // two-stage top-k: a query's candidate set is the whole table — never
-    // pull it through one reducer (Rank.topKPerGroup)
-    Rank.topKPerGroup(dists, Seq(col("q_user")), Seq(col("dist"), col("user_id")), k)
-      .select(col("q_user"), col("user_id"), col("dist"))
-      .orderBy(col("q_user"), col("dist"), col("user_id"))
-  }
-
-  /** Bound-seeded batch top-k — the fully RELATIONAL form of the reference's
-    * bound seeding, with no driver-side threshold at all: per query,
-    *
-    *  1. rank candidates by the sliced-box lower bound (window over q_user),
-    *  2. exact-evaluate the `seedFactor·k` best-bound seeds; the k-th exact
-    *     distance per query is that query's threshold r_q (max over ≤ k
-    *     seed rows — a windowed aggregate, not a collect),
-    *  3. refine candidates with `lb ≤ r_q` using the early-abandoning
-    *     kernel (per-ROW bound: r_q + margin), rank, keep k.
-    *
-    * Identical results to [[topKBatch]] (asserted at two SFs). At 10⁸
-    * trajectories this shape runs any number of queries in one job with the
-    * kernel evaluated only on per-query survivors. */
+  /** Reference-workload batch form of O15 (t9): the [[topKPruned]] search
+    * for every id of a query set, in one lookup job plus one search job per
+    * chunk of queries ([[searchQuerySet]]). Rows `(q_user, user_id, dist)`
+    * ordered by (q_user, dist, user_id), NaN last; ids listed twice count
+    * once, and an id absent from the table has no rows. */
   def topKBatchPruned(ta0: DataFrame, queryUsers: Seq[Long], k: Int,
-                      metric: String = "hausdorff", seedFactor: Int = 3): DataFrame = {
-    val ta = ensureBoxes(ta0)
-    batchPrunedOf(ta, ta.filter(col("user_id").isInCollection(queryUsers)),
-      k, metric, seedFactor)
-  }
+                      metric: String = "hausdorff"): DataFrame =
+    localFrame(ta0.sparkSession, searchQuerySet(ta0, queryUsers, k, metric)
+      .map { case (q, h) => Row(q, h.user, h.dist) },
+      "q_user" -> LongType, "user_id" -> LongType, "dist" -> DoubleType)
 
   /** Physical path of [[knnJoin]]. `Auto` (the default) picks from measured
     * table stats — see [[choosePath]] for the crossover. */
@@ -302,8 +248,8 @@ object TrajectorySearch {
     *
     * Two physical paths, same answer (equivalence-tested); the default
     * `KnnPath.Auto` picks per-invocation from measured stats ([[choosePath]]):
-    *  - `Seeded`: the relational per-query bound seeding of
-    *    [[topKBatchPruned]] with the query set = the whole table. The right
+    *  - `Seeded`: relational per-query bound seeding ([[batchPrunedOf]])
+    *    with every trajectory as a query. The right
     *    regime when the kernel dominates (LONG trajectories) or the pair
     *    count is large: exact distances run only on per-query bound
     *    survivors. At 10⁸ trajectories the slim boxes frame outgrows a
@@ -323,7 +269,7 @@ object TrajectorySearch {
               cacheKey: Option[String] = None): DataFrame = {
     val ta = ensureBoxes(ta0)
     path match {
-      case KnnPath.Seeded => batchPrunedOf(ta, ta, k, metric, seedFactor)
+      case KnnPath.Seeded => batchPrunedOf(ta, k, metric, seedFactor)
       case KnnPath.Tiled => StrPartition.knnJoinStr(ta, k, metric, seedFactor = seedFactor)
       case _ =>
         val st = trajStatsCached(ta, cacheKey)
@@ -336,7 +282,7 @@ object TrajectorySearch {
             bruteKnnJoin(ta, k, metric, hintBroadcast = st.estArrayBytes <= cap)
           case KnnPath.Tiled =>
             StrPartition.knnJoinStr(ta, k, metric, seedFactor = seedFactor)
-          case _ => batchPrunedOf(ta, ta, k, metric, seedFactor)
+          case _ => batchPrunedOf(ta, k, metric, seedFactor)
         }
     }
   }
@@ -366,8 +312,8 @@ object TrajectorySearch {
   private def bruteKnnJoin(ta: DataFrame, k: Int, metric: String,
                            hintBroadcast: Boolean): DataFrame = {
     // the 24-byte (u1, u2, d) rows are materialized so the mirror does not
-    // re-run the kernels
-    val half = bruteHalfBuild(ta, metric, hintBroadcast).snap()
+    // re-run the kernels; nothing owns this per-call snapshot, so it is local
+    val half = Snap.local(bruteHalfBuild(ta, metric, hintBroadcast))
     val sym = half.unionAll(
         half.select(col("u2").as("u1"), col("u1").as("u2"), col("dist")))
       .select(col("u1").as("q_user"), col("u2").as("user_id"), col("dist"))
@@ -380,34 +326,36 @@ object TrajectorySearch {
     * frame (q_user + r + row overhead) for its broadcast-hint gate. */
   private[graft] val RqRowBytes = 128L
 
-  private def batchPrunedOf(ta: DataFrame, q0: DataFrame, k: Int,
+  /** Bound-seeded kNN self-join, fully relational (no driver threshold):
+    * per query row, the `seedFactor·k` best-bound candidates are the seeds,
+    * their k-th exact distance is the query's threshold r_q, and candidates
+    * with `lb ≤ r_q` are refined by the early-abandoning kernel. */
+  private def batchPrunedOf(ta: DataFrame, k: Int,
                             metric: String, seedFactor: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.SlicedBoxLb.register(ta.sparkSession)
 
     // size-guard EVERY data-sized hint (the StrPartition.hinted pattern):
-    // in the knnJoin-Seeded self-join q0 IS the corpus, so `fat`/`qFat`/
-    // `qSlim` are corpus-sized — an unconditional hint would OOM every
+    // the query side IS the corpus, so `fat`/`qFat`/`qSlim` are
+    // corpus-sized — an unconditional hint would OOM every
     // executor at 10⁸ trajectories. Past the cap the equi-joins on
     // user_id/q_user plan as shuffle joins (the bounded seeds/survivor
     // frames become the small sides the planner broadcasts on its own),
     // and the non-equi bound pass runs partitioned instead of shipped.
     val cap = broadcastCap(ta.sparkSession)
-    val taSt = trajStats(ta)
-    val qSt = if (q0 eq ta) taSt else trajStats(q0)
-    val hintFat = taSt.estArrayBytes <= cap
-    val hintQFat = qSt.estArrayBytes <= cap
-    val hintQSlim = qSt.estSlimBytes <= cap
-    val hintRq = qSt.users * RqRowBytes <= cap
+    val st = trajStats(ta)
+    val hintFat = st.estArrayBytes <= cap
+    val hintSlim = st.estSlimBytes <= cap
+    val hintRq = st.users * RqRowBytes <= cap
 
-    val qSlim = q0.select(col("user_id").as("q_user"), col("boxes").as("qboxes"))
-    val qFat = q0.select(col("user_id").as("q_user"), col("xs").as("qxs"), col("ys").as("qys"))
+    val qSlim = ta.select(col("user_id").as("q_user"), col("boxes").as("qboxes"))
+    val qFat = ta.select(col("user_id").as("q_user"), col("xs").as("qxs"), col("ys").as("qys"))
     val fat = ta.select(col("user_id"), col("xs"), col("ys"))
     val exact = round(MetricCol(metric, col("xs"), col("ys"), col("qxs"), col("qys")), 6)
 
     // slim bound pass: (q_user, user_id, lb)
     val lbs = ta.select(col("user_id"), col("boxes"))
-      .join(hinted(qSlim, hintQSlim), col("user_id") =!= col("q_user"))
+      .join(hinted(qSlim, hintSlim), col("user_id") =!= col("q_user"))
       .select(col("q_user"), col("user_id"), slicedBoxLb("boxes", "qboxes").as("lb"))
 
     // two-stage seed selection — the pre-pruning candidate set per query is
@@ -421,7 +369,7 @@ object TrajectorySearch {
     // max seed distance when a query has fewer than k candidates)
     val wSeed = Window.partitionBy(col("q_user")).orderBy(col("dist"), col("user_id"))
     val rq = seeds
-      .join(hinted(fat, hintFat), "user_id").join(hinted(qFat, hintQFat), "q_user")
+      .join(hinted(fat, hintFat), "user_id").join(hinted(qFat, hintFat), "q_user")
       .select(col("q_user"), col("user_id"), exact.as("dist"))
       .withColumn("srn", row_number().over(wSeed))
       .filter(col("srn") <= k)
@@ -431,7 +379,7 @@ object TrajectorySearch {
       col("xs"), col("ys"), col("qxs"), col("qys"), col("r") + 1e-5), 6)
     val refined = lbs.join(hinted(rq, hintRq), "q_user")
       .filter(col("lb") <= col("r") + 1e-6)
-      .join(hinted(fat, hintFat), "user_id").join(hinted(qFat, hintQFat), "q_user")
+      .join(hinted(fat, hintFat), "user_id").join(hinted(qFat, hintFat), "q_user")
       .select(col("q_user"), col("user_id"), refine.as("dist"))
     // survivors per query are bound-pruned but can still be large at scale —
     // final top-k is the same two-stage selection
@@ -479,12 +427,8 @@ object TrajectorySearch {
           s"file ${f.path} of $tdir@v$v carries none")))
       (bs.map(_._1).min, bs.map(_._2).max)
     }
-    if (files.isEmpty) {
-      import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-      return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("user_id", LongType),
-          StructField("event_id", LongType), StructField("d", DoubleType))))
-    }
+    val cols = Seq("user_id" -> LongType, "event_id" -> LongType, "d" -> DoubleType)
+    if (files.isEmpty) return localFrame(s, Nil, cols: _*)
     val (txLo, txHi) = bound(txCol); val (tyLo, tyHi) = bound(tyCol)
     val dist2 = (col("x") - qx) * (col("x") - qx) + (col("y") - qy) * (col("y") - qy)
     def candidates(r: Double) =
@@ -509,15 +453,8 @@ object TrajectorySearch {
       if (full || certified) {
         // the ≤k collected rows ARE the answer, already ordered — rebuild
         // locally instead of re-running the pruned scan + sort on consume
-        import scala.jdk.CollectionConverters._
-        import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-        val sch = StructType(Seq(StructField("user_id", LongType),
-          StructField("event_id", LongType), StructField("d", DoubleType)))
-        out = s.createDataFrame(
-          got.toSeq.map(g => org.apache.spark.sql.Row(
-            g.getLong(g.fieldIndex("user_id")),
-            g.getLong(g.fieldIndex("event_id")),
-            g.getDouble(g.fieldIndex("d")))).asJava, sch)
+        out = localFrame(s, got.toSeq.map(g => Row(g.getLong(g.fieldIndex("user_id")),
+          g.getLong(g.fieldIndex("event_id")), g.getDouble(g.fieldIndex("d")))), cols: _*)
       }
       else r *= 2
     }
@@ -576,29 +513,38 @@ object TrajectorySearch {
   private[operators] def ensureBoxes(ta: DataFrame): DataFrame =
     if (ta.columns.contains("boxes")) ta else graft.Tables.withSliceBoxes(ta)
 
-  /** Reference O11/O13 single search the way DFT runs it: the query
-    * trajectory is shipped to every partition, and each partition runs a
-    * branch-and-bound pass over its own candidates.
+  /** Reference O11/O13 single search (t7/t8): the 1-query case of
+    * [[searchQuerySet]], rows `(user_id, dist)` ordered by (dist, user_id),
+    * NaN last. */
+  def topKPruned(ta0: DataFrame, queryUser: Long, k: Int, metric: String): DataFrame =
+    localFrame(ta0.sparkSession, searchQuerySet(ta0, Seq(queryUser), k, metric)
+      .map { case (_, h) => Row(h.user, h.dist) },
+      "user_id" -> LongType, "dist" -> DoubleType)
+
+  /** Reference O11/O13 search over a query set, run the way DFT (and
+    * REPOSE) runs it. Returns each query id's top-k hits, ids ascending,
+    * hits by (dist, user_id), NaN last.
     *
-    *  1. One tiny job fetches the query user's `xs`/`ys`/`boxes`.
-    *  2. One job searches every partition: candidates are ranked by the
+    *  1. One lookup job fetches the rows of the query ids (an id duplicated
+    *     in the table has several, and a candidate pairs with each).
+    *  2. One search job per [[chunked]] chunk of queries, shipped to every
+    *     partition. A partition copies its rows once; for each query, the
+    *     rows of every other id (other queries included) are ranked by the
     *     sliced-box lower bound ([[graft.functions.BoxLbKernel]]) and the
-    *     exact kernel ([[graft.geo.Metrics]] `hausdorffBounded` /
-    *     `frechetBounded`) runs in bound order. Once k rows are held, the
-    *     abandon bound is the partition's k-th rounded distance + 1e-5, and
-    *     the scan stops at the first candidate whose bound exceeds the k-th
-    *     + 1e-6. Each partition returns ≤ k rows.
-    *  3. The driver merges those rows by (dist, user_id) into a local
-    *     DataFrame `(user_id, dist)`.
+    *     exact kernel (`Metrics.hausdorffBounded`/`frechetBounded`) runs in
+    *     bound order. With k rows held, the kernel abandons past the k-th
+    *     rounded distance + 1e-5, and the scan stops at the first bound past
+    *     the k-th + 1e-6. ≤ k rows per query leave the partition.
+    *  3. The driver merges each query's rows and keeps k.
     *
-    * Nothing is planned or code-generated per call: both jobs run over the
+    * Nothing is planned or code-generated per call: the jobs run over the
     * table's already-planned RDD (`queryExecution.toRdd`).
     *
-    * Exactness (TrajectorySearchTest checks row-for-row equality with
-    * [[topKOf]] on adversarial tables). Distances are compared after the
-    * 6-dp rounding of `round(x, 6)`, and both margins sit well above its
-    * 1e-6 granularity (for distances whose double spacing is finer than
-    * the margins, i.e. below ~1e9):
+    * Exactness (TrajectorySearchTest checks row-for-row equality with the
+    * unpruned relational searches on adversarial tables). Distances are
+    * compared after the 6-dp rounding of `round(x, 6)`, and both margins
+    * sit well above its 1e-6 granularity (for distances whose double
+    * spacing is finer than the margins, i.e. below ~1e9):
     *  - stop: every later candidate has exact distance ≥ its bound >
     *    k-th + 1e-6, so it rounds strictly above the k-th and cannot enter
     *    the top-k, not even on a `user_id` tie-break;
@@ -612,37 +558,64 @@ object TrajectorySearch {
     * NaN k-th (empty trajectories rank last) never stops or abandons the
     * scan.
     */
-  def topKPruned(ta0: DataFrame, queryUser: Long, k: Int, metric: String): DataFrame = {
+  private def searchQuerySet(ta0: DataFrame, queryUsers: Seq[Long], k: Int,
+                             metric: String): Seq[(Long, Hit)] = {
     require(k >= 0, s"k must be non-negative, got $k")
     val frechet = MetricCol.isFrechet(metric)
-    val ta = ensureBoxes(ta0)
-    val sch = ta.schema
-    val c = SearchCols(sch.fieldIndex("user_id"), sch.fieldIndex("xs"),
-      sch.fieldIndex("ys"), sch.fieldIndex("boxes"))
-    val rows = ta.queryExecution.toRdd
-    // 1-row query lookup: the query user's row (one per copy of its id)
-    val qs = rows.mapPartitions(_.filter(c.isUser(_, queryUser)).map(c.traj)).collect()
-    // ≤ k rows per partition, merged on the driver into the k smallest
-    val hits =
-      if (qs.isEmpty) Array.empty[Hit]
-      else rows.mapPartitions(searchPartition(_, c, queryUser, qs, k, frechet))
-        .takeOrdered(k)(HitOrder)
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-    ta.sparkSession.createDataFrame(
-      hits.toSeq.map(h => org.apache.spark.sql.Row(h.user, h.dist)).asJava,
-      StructType(Seq(StructField("user_id", LongType), StructField("dist", DoubleType))))
+    val ids = queryUsers.toSet
+    if (k == 0 || ids.isEmpty) Nil
+    else {
+      val ta = ensureBoxes(ta0)
+      val sch = ta.schema
+      val c = SearchCols(sch.fieldIndex("user_id"), sch.fieldIndex("xs"),
+        sch.fieldIndex("ys"), sch.fieldIndex("boxes"))
+      val rows = ta.queryExecution.toRdd
+      // query lookup: one row per copy of each query id, bounded by the set
+      val queries = rows.mapPartitions(_.filter(c.isIn(_, ids))
+          .map(r => (r.getLong(c.user), c.traj(r)))).collect()
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (u, ts) => Query(u, ts.map(_._2)) }
+      // ≤ k rows per query and partition, merged into each query's k smallest
+      chunked(queries, broadcastCap(ta.sparkSession)).flatMap { chunk =>
+        val tops = rows.mapPartitions(it => Iterator(searchPartition(it, c, chunk, k, frechet)))
+          .fold(Array.fill(chunk.size)(Array.empty[Hit]))(mergeTops(k))
+        chunk.zip(tops).flatMap { case (q, top) => top.map(q.user -> _) }
+      }
+    }
   }
+
+  private def localFrame(s: SparkSession, rows: Seq[Row], cols: (String, DataType)*) =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(cols.map { case (n, t) => StructField(n, t) }))
 
   /** Column ordinals of a trajectory table's internal rows. */
   private final case class SearchCols(user: Int, xs: Int, ys: Int, boxes: Int) {
-    def isUser(r: InternalRow, u: Long): Boolean = !r.isNullAt(user) && r.getLong(user) == u
-    def isOther(r: InternalRow, u: Long): Boolean = !r.isNullAt(user) && r.getLong(user) != u
+    def isIn(r: InternalRow, us: Set[Long]): Boolean =
+      !r.isNullAt(user) && us.contains(r.getLong(user))
     def traj(r: InternalRow): QueryTraj = QueryTraj(r.getArray(xs).toDoubleArray(),
       r.getArray(ys).toDoubleArray(), r.getArray(boxes).toDoubleArray())
   }
 
   private final case class QueryTraj(xs: Array[Double], ys: Array[Double], boxes: Array[Double])
+
+  /** A query id and its rows. */
+  private final case class Query(user: Long, trajs: Array[QueryTraj]) {
+    /** Estimated bytes it adds to a search task: 16 per point and 8 per
+      * `boxes` entry of each row, plus a row overhead. */
+    def estBytes: Long = trajs.map(t => 16L * t.xs.length + 8L * t.boxes.length + 100L).sum
+  }
+
+  /** `qs` in consecutive chunks whose estimated bytes fit `cap`, so what a
+    * search task ships stays bounded however large the query set; a query
+    * over the cap is a chunk of its own. */
+  private def chunked(qs: Seq[Query], cap: Long): Seq[Seq[Query]] =
+    qs.foldLeft(Vector.empty[(Long, Vector[Query])]) { (chunks, q) =>
+      chunks.lastOption match {
+        case Some((used, chunk)) if used + q.estBytes <= cap =>
+          chunks.init :+ (used + q.estBytes, chunk :+ q)
+        case _ => chunks :+ (q.estBytes, Vector(q))
+      }
+    }.map(_._2)
 
   private final case class Hit(user: Long, dist: Double)
 
@@ -655,43 +628,50 @@ object TrajectorySearch {
     }
   }
 
+  /** Per query, the k smallest hits of two partial results. */
+  private def mergeTops(k: Int)(a: Array[Array[Hit]], b: Array[Array[Hit]]): Array[Array[Hit]] =
+    a.zip(b).map { case (x, y) => (x ++ y).sorted(HitOrder).take(k) }
+
   /** Spark's `round(x, 6)` on a double: HALF_UP on the shortest decimal
     * form, NaN and ±Inf passed through. */
   private def round6(d: Double): Double =
     if (d.isNaN || d.isInfinite) d
     else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** One partition's branch-and-bound top-k (see [[topKPruned]]). */
-  private def searchPartition(it: Iterator[InternalRow], c: SearchCols, queryUser: Long,
-                              qs: Array[QueryTraj], k: Int,
-                              frechet: Boolean): Iterator[Hit] = {
-    val qBoxes = qs.map(q => UnsafeArrayData.fromPrimitiveArray(q.boxes))
-    // rows are reused by the scan: keep a copy of every candidate
-    val cands = it.filter(c.isOther(_, queryUser)).flatMap { r =>
-      val row = r.copy()
-      val boxes = row.getArray(c.boxes)
-      qs.indices.map(i => (BoxLbKernel.compute(boxes, qBoxes(i)), row, qs(i)))
-    }.toArray.sortBy(_._1)(Ordering.Double.TotalOrdering)
+  /** One partition's top-k for each query of `qs`, in order ([[searchQuerySet]]). */
+  private def searchPartition(it: Iterator[InternalRow], c: SearchCols, qs: Seq[Query],
+                              k: Int, frechet: Boolean): Array[Array[Hit]] = {
+    // rows are reused by the scan: copy each once, for every query
+    val rows = it.filter(!_.isNullAt(c.user)).map(_.copy()).toArray
+    qs.map { q =>
+      val qBoxes = q.trajs.map(t => UnsafeArrayData.fromPrimitiveArray(t.boxes))
+      val cands = (for {
+        r <- rows.indices if rows(r).getLong(c.user) != q.user
+        t <- q.trajs.indices
+      } yield (BoxLbKernel.compute(rows(r).getArray(c.boxes), qBoxes(t)), r, t))
+        .sortBy(_._1)(Ordering.Double.TotalOrdering)
 
-    val top = new Array[Hit](k) // ascending by HitOrder, first `held` slots used
-    var held = 0
-    var i = 0
-    while (i < cands.length && !(held == k && cands(i)._1 > top(k - 1).dist + 1e-6)) {
-      val (_, row, q) = cands(i)
-      val bound = if (held == k) top(k - 1).dist + 1e-5 else Double.MaxValue
-      val (xs, ys) = (row.getArray(c.xs).toDoubleArray(), row.getArray(c.ys).toDoubleArray())
-      val hit = Hit(row.getLong(c.user), round6(
-        if (frechet) Metrics.frechetBounded(xs, ys, q.xs, q.ys, bound)
-        else Metrics.hausdorffBounded(xs, ys, q.xs, q.ys, bound)))
-      if (held < k || HitOrder.lt(hit, top(k - 1))) {
-        var j = math.min(held, k - 1)
-        while (j > 0 && HitOrder.lt(hit, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
-        top(j) = hit
-        if (held < k) held += 1
+      val top = new Array[Hit](k) // ascending by HitOrder, first `held` slots used
+      var held = 0
+      var i = 0
+      while (i < cands.length && !(held == k && cands(i)._1 > top(k - 1).dist + 1e-6)) {
+        val (_, r, t) = cands(i)
+        val (row, qt) = (rows(r), q.trajs(t))
+        val bound = if (held == k) top(k - 1).dist + 1e-5 else Double.MaxValue
+        val (xs, ys) = (row.getArray(c.xs).toDoubleArray(), row.getArray(c.ys).toDoubleArray())
+        val hit = Hit(row.getLong(c.user), round6(
+          if (frechet) Metrics.frechetBounded(xs, ys, qt.xs, qt.ys, bound)
+          else Metrics.hausdorffBounded(xs, ys, qt.xs, qt.ys, bound)))
+        if (held < k || HitOrder.lt(hit, top(k - 1))) {
+          var j = math.min(held, k - 1)
+          while (j > 0 && HitOrder.lt(hit, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
+          top(j) = hit
+          if (held < k) held += 1
+        }
+        i += 1
       }
-      i += 1
-    }
-    top.iterator.take(held)
+      top.take(held)
+    }.toArray
   }
 
   /** Candidate count after bound pruning at threshold r — exposed for tests

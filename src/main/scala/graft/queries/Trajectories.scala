@@ -292,7 +292,8 @@ object Trajectories {
     },
 
     // Batch form of O15: the reference workload is query SETS, not single
-    // queries — top-10 per query for queries {0..4}, one job.
+    // queries — top-10 per query for queries {0..4}, searched together by
+    // the partition-local t7 search: one lookup job, one search job.
     DeclaredQuery("t9_topk_batch",
       s"""WITH pts AS ${ptsViewS("purchase")},
          |q AS (SELECT * FROM pts WHERE user_id IN (0,1,2,3,4)),

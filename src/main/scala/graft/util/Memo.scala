@@ -23,9 +23,11 @@ import org.apache.spark.storage.StorageLevel
   * reliable checkpoint dir the release deletes the checkpoint's files
   * ([[Snap.release]]).
   *
-  * UNCACHED CALLS. [[get]] with no source builds without registering: its
-  * `persist` is the identity (nothing would ever release it) and its
-  * `snap` still truncates lineage, reclaimed by the ContextCleaner.
+  * UNCACHED CALLS. [[get]] with no source builds without registering:
+  * nothing would ever release what it materializes, so its `persist` is
+  * the identity and its `snap` is [[Snap.local]] even under a reliable
+  * checkpoint dir — it still truncates lineage, and the ContextCleaner
+  * reclaims it.
   *
   * BOUND. One access-order LRU over all artifacts ([[MaxEntries]]): a hot
   * entry created early survives, and a service session iterating over
@@ -70,11 +72,11 @@ object Memo {
         kept(p)(() => p.unpersist())
       }
 
-    /** [[Snap]]`(df)`, released by unpersisting its checkpoint RDD. */
-    def snap(df: DataFrame): DataFrame = {
-      val c = Snap(df)
-      kept(c)(() => Snap.release(c))
-    }
+    /** [[Snap]]`(df)`, released by unpersisting its checkpoint RDD
+      * ([[Snap.local]] in an unregistered build). */
+    def snap(df: DataFrame): DataFrame =
+      if (!register) Snap.local(df)
+      else { val c = Snap(df); kept(c)(() => Snap.release(c)) }
 
     private[Memo] def release(): Unit = synchronized(releases).foreach { r =>
       try r() catch { case _: Throwable => () }

@@ -18,7 +18,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * rows) and rebuilding it costs one bounded job. Deployments that want
   * recoverability set `sc.setCheckpointDir(...)` (or `spark.checkpoint.dir`)
   * and every Snap site switches to a RELIABLE checkpoint (one distributed
-  * write, recoverable across executor loss). Eager in both modes:
+  * write, recoverable across executor loss) — except [[local]] ones, which
+  * no owner would ever delete. Eager in both modes:
   * consumers must never observe a half-built frame, and the build is
   * charged to the query that runs it.
   */
@@ -27,6 +28,11 @@ object Snap {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
     else df.localCheckpoint(true)
+
+  /** A snapshot no owner will [[release]]: always a local checkpoint, which
+    * the ContextCleaner reclaims — a reliable one would leave its `rdd-*`
+    * files behind for good (Spark's cleaner keeps them by default). */
+  def local(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** Free a snapped frame's storage now instead of at GC. The checkpoint
     * RDD is persisted at the RDD layer, not in the SQL CacheManager, so

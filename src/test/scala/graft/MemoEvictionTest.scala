@@ -6,7 +6,7 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 
-import graft.operators.{Components, DocSimilarity, StrPartition}
+import graft.operators.{Components, DocSimilarity, StrPartition, TrajectorySearch}
 import graft.util.Memo
 
 /** The session artifact registry: one access-order LRU bound over typed
@@ -211,6 +211,31 @@ class MemoEvictionTest extends AnyFunSuite {
       assert(rddDirs().nonEmpty, "a snap under a checkpoint dir writes a reliable checkpoint")
       Memo.clearAll()
       assert(rddDirs().isEmpty, s"checkpoint files left after clearAll: ${rddDirs()}")
+    } finally org.apache.spark.CheckpointDirReset(sc, saved)
+  }
+
+  test("uncached builds leave no reliable checkpoint files behind") {
+    Memo.clearAll()
+    val sc = spark.sparkContext
+    val saved = sc.getCheckpointDir
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    def rddDirs(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("rdd-")).toSeq
+    }
+    sc.setCheckpointDir(dir.toString)
+    try {
+      val rnd = new scala.util.Random(7)
+      val ta = Tables.withSliceBoxes((0L until 40L).map { u =>
+        (u, Seq.fill(6)(rnd.nextDouble() * 100), Seq.fill(6)(rnd.nextDouble() * 100))
+      }.toDF("user_id", "xs", "ys"))
+      // no cacheKey: nothing registers what these calls materialize
+      assert(StrPartition.allPairsTopKStr(ta, 5).collect().length == 5)
+      assert(TrajectorySearch.knnJoin(ta, 3, path = TrajectorySearch.KnnPath.Brute)
+        .collect().length == 40 * 3)
+      Memo.clearAll()
+      assert(rddDirs().isEmpty, s"checkpoint files left by uncached calls: ${rddDirs()}")
     } finally org.apache.spark.CheckpointDirReset(sc, saved)
   }
 

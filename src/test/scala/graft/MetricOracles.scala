@@ -1,15 +1,16 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.{col, round, udf}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
+import org.apache.spark.sql.functions.{broadcast, col, round, row_number, udf}
 
 import graft.geo.Metrics
 
 /** Test-only oracles for the metric kernels in [[graft.geo.Metrics]]: the
   * definitional memoized recursions behind the DP property tests, plain
   * Hausdorff/Fréchet UDFs that are independent of the engine's bounded
-  * codegen path, and the unpruned all-pairs join built on them. */
+  * codegen path, and the unpruned searches and all-pairs join built on
+  * them. */
 object MetricOracles {
 
   private def d2(ax: Double, ay: Double, bx: Double, by: Double): Double = {
@@ -35,12 +36,48 @@ object MetricOracles {
       Metrics.discreteFrechet(xa.toArray, ya.toArray, xb.toArray, yb.toArray)
     }
 
+  private def metricUdf(metric: String): UserDefinedFunction =
+    if (metric == "frechet") frechetUdf else hausdorffUdf
+
+  /** The unpruned single top-k search of a (user_id, xs, ys) table: the
+    * exact kernel between every row of the query user and every row of
+    * another id, ranked by (6-dp distance, user_id) — `(user_id, dist)`. */
+  def topKOf(ta: DataFrame, queryUser: Long, k: Int, metric: String): DataFrame = {
+    val q = ta.filter(col("user_id") === queryUser)
+      .select(col("xs").as("qxs"), col("ys").as("qys"))
+    ta.filter(col("user_id") =!= queryUser)
+      .crossJoin(broadcast(q))
+      .select(col("user_id"),
+        round(metricUdf(metric)(col("xs"), col("ys"), col("qxs"), col("qys")), 6).as("dist"))
+      .orderBy(col("dist"), col("user_id"))
+      .limit(k)
+  }
+
+  /** [[topKOf]] over a data dir's purchase trajectories. */
+  def topK(s: SparkSession, dir: String, queryUser: Long, k: Int, metric: String): DataFrame =
+    topKOf(Tables.trajArrays(s, dir, "purchase"), queryUser, k, metric)
+
+  /** [[topKOf]] for each id of a query set: `(q_user, user_id, dist)`
+    * ordered by (q_user, dist, user_id). */
+  def topKBatch(ta: DataFrame, queryUsers: Seq[Long], k: Int, metric: String): DataFrame = {
+    val q = ta.filter(col("user_id").isInCollection(queryUsers))
+      .select(col("user_id").as("q_user"), col("xs").as("qxs"), col("ys").as("qys"))
+    val w = Window.partitionBy(col("q_user")).orderBy(col("dist"), col("user_id"))
+    ta.join(broadcast(q), col("user_id") =!= col("q_user"))
+      .select(col("q_user"), col("user_id"),
+        round(metricUdf(metric)(col("xs"), col("ys"), col("qxs"), col("qys")), 6).as("dist"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("q_user"), col("user_id"), col("dist"))
+      .orderBy(col("q_user"), col("dist"), col("user_id"))
+  }
+
   /** The unpruned all-pairs top-k of a (user_id, xs, ys) table: the exact
     * kernel on every pair of rows with u1 < u2, ranked by (6-dp distance,
     * u1, u2) — one row per pair of input rows, so duplicated ids give
     * several. */
   def allPairsNaive(ta: DataFrame, k: Int, metric: String): DataFrame = {
-    val fn = if (metric == "frechet") frechetUdf else hausdorffUdf
+    val fn = metricUdf(metric)
     val a = ta.select(col("user_id").as("u1"), col("xs").as("xs1"), col("ys").as("ys1"))
     val b = ta.select(col("user_id").as("u2"), col("xs").as("xs2"), col("ys").as("ys2"))
     a.join(b, col("u1") < col("u2"))

@@ -114,7 +114,7 @@ class OperatorsTest extends AnyFunSuite {
   }
 
   test("t8 frechet search: k rows, each >= the hausdorff distance of the same pair") {
-    val h = graft.operators.TrajectorySearch.topK(spark, TestSpark.sf0001, 0L, 1000, "hausdorff")
+    val h = MetricOracles.topK(spark, TestSpark.sf0001, 0L, 1000, "hausdorff")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val f = SparkEntry.queries("t8_topk_search_frechet")(spark, TestSpark.sf0001).collect()
     assert(f.length == 10)

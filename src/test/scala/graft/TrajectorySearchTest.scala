@@ -16,7 +16,7 @@ class TrajectorySearchTest extends AnyFunSuite {
   test("pruned top-k equals naive top-k on real data") {
     val ta = Tables.trajArrays(spark, TestSpark.sf0001)
     for (metric <- Seq("hausdorff", "frechet")) {
-      val naive = TrajectorySearch.topKOf(ta, 0L, 10, metric)
+      val naive = MetricOracles.topKOf(ta, 0L, 10, metric)
         .collect().map(_.toString).toSeq
       val pruned = TrajectorySearch.topKPruned(ta, 0L, 10, metric)
         .collect().map(_.toString).toSeq
@@ -84,6 +84,18 @@ class TrajectorySearchTest extends AnyFunSuite {
     c < 0 || (c == 0 && (a1 < b1 || (a1 == b1 && a2 < b2)))
   }
 
+  /** The Hausdorff hits of `query` by local brute force: every row of
+    * another id against every row of the query id, in the engine's order. */
+  private def ranked(rows: Seq[(Long, Seq[Double], Seq[Double])], query: Long) =
+    (for ((u, xs, ys) <- rows if u != query; (_, qx, qy) <- rows.filter(_._1 == query))
+      yield (u, round6(
+        graft.geo.Metrics.hausdorff(xs.toArray, ys.toArray, qx.toArray, qy.toArray))))
+      .sortWith(byDist[(Long, Double)](h => (h._2, h._1, 0L)))
+
+  /** Whether `hits` tie at the k-th distance with different ids. */
+  private def tieAtKth(hits: Seq[(Long, Double)], k: Int) =
+    k > 0 && hits.size > k && hits(k - 1)._2 == hits(k)._2 && hits(k - 1)._1 != hits(k)._1
+
   /** Layouts random tables rarely hit. Trajectory 0 and 1 are at Hausdorff
     * distance 0, but slice 0 of trajectory 1 (2 of 16 points) has a box the
     * box bound cannot use: a NaN corner, or a corner whose squared distance
@@ -105,7 +117,7 @@ class TrajectorySearchTest extends AnyFunSuite {
     val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     def mismatch(sc: SearchCase): Option[String] = {
       (for (metric <- Seq("hausdorff", "frechet")) yield {
-        val naive = TrajectorySearch.topKOf(frameOf(sc.rows, 1), sc.query, sc.k, metric)
+        val naive = MetricOracles.topKOf(frameOf(sc.rows, 1), sc.query, sc.k, metric)
           .collect().map(_.toString).toSeq
         Seq(1, 7).flatMap { parts =>
           val pruned = TrajectorySearch.topKPruned(frameOf(sc.rows, parts), sc.query, sc.k, metric)
@@ -119,17 +131,13 @@ class TrajectorySearchTest extends AnyFunSuite {
     val prop = Prop.forAllNoShrink(searchCases) { sc =>
       // what the case covers, from a local brute force
       val qRows = sc.rows.filter(_._1 == sc.query)
-      val cands = sc.rows.filter(_._1 != sc.query)
-      val ranked = (for ((u, xs, ys) <- cands; (_, qx, qy) <- qRows) yield (u, round6(
-        graft.geo.Metrics.hausdorff(xs.toArray, ys.toArray, qx.toArray, qy.toArray))))
-        .sortWith(byDist[(Long, Double)](h => (h._2, h._1, 0L)))
+      val hits = ranked(sc.rows, sc.query)
       val pts = sc.rows.flatMap(r => r._2 ++ r._3)
       Seq("empty" -> sc.rows.exists(_._2.isEmpty), "1-point" -> sc.rows.exists(_._2.size == 1),
         "NaN" -> pts.exists(_.isNaN), "Inf" -> pts.exists(_.isInfinite),
         "absent query" -> qRows.isEmpty,
-        "fewer than k" -> (qRows.nonEmpty && ranked.size < sc.k),
-        "tie at k-th" -> (ranked.size > sc.k && ranked(sc.k - 1)._2 == ranked(sc.k)._2 &&
-          ranked(sc.k - 1)._1 != ranked(sc.k)._1),
+        "fewer than k" -> (qRows.nonEmpty && hits.size < sc.k),
+        "tie at k-th" -> tieAtKth(hits, sc.k),
         "duplicate id" -> (sc.rows.map(_._1).distinct.size < sc.rows.size))
         .foreach { case (what, hit) => if (hit) seen(what) += 1 }
       val m = mismatch(sc)
@@ -145,6 +153,74 @@ class TrajectorySearchTest extends AnyFunSuite {
 
     for (rows <- badSliceLayouts)
       mismatch(SearchCase(rows, query = 0L, k = 1)).foreach(m => fail(m))
+  }
+
+  /** One generated batch case: a single-search case's table with a query
+    * set of 0–6 ids (repeats and absent ids included) and k from 0. */
+  private case class BatchCase(rows: Seq[(Long, Seq[Double], Seq[Double])],
+                               queries: Seq[Long], k: Int)
+
+  private val batchCases: Gen[BatchCase] = for {
+    sc <- searchCases
+    ids = sc.rows.map(_._1).distinct
+    id = if (ids.isEmpty) Gen.const(999L)
+         else Gen.frequency(6 -> Gen.oneOf(ids), 1 -> Gen.const(999L))
+    queries <- Gen.choose(0, 6).flatMap(Gen.listOfN(_, id))
+    k <- Gen.frequency(1 -> Gen.const(0), 8 -> Gen.const(sc.k))
+  } yield BatchCase(sc.rows, queries, k)
+
+  /** `body` with `spark.graft.broadcastCapBytes` set to `cap`. */
+  private def withCap[T](cap: String)(body: => T): T = {
+    spark.conf.set("spark.graft.broadcastCapBytes", cap)
+    try body finally spark.conf.unset("spark.graft.broadcastCapBytes")
+  }
+
+  test("topKBatchPruned ≡ topKBatch row for row on generated adversarial query sets, 1 and 7 partitions, one chunk and one chunk per query") {
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def mismatch(bc: BatchCase): Option[String] =
+      (for (metric <- Seq("hausdorff", "frechet")) yield {
+        val naive = MetricOracles.topKBatch(frameOf(bc.rows, 1), bc.queries, bc.k, metric)
+          .collect().map(_.toString).toSeq
+        // a 1-byte cap ships every query in a search job of its own
+        for (cap <- Seq(None, Some("1")); parts <- Seq(1, 7)) yield {
+          def run = TrajectorySearch.topKBatchPruned(frameOf(bc.rows, parts), bc.queries,
+            bc.k, metric).collect().map(_.toString).toSeq
+          val pruned = cap.fold(run)(withCap(_)(run))
+          if (pruned == naive) None
+          else Some(s"$metric, $parts partitions, cap $cap: $pruned != $naive for $bc")
+        }
+      }).flatten.flatten.headOption
+
+    val prop = Prop.forAllNoShrink(batchCases) { bc =>
+      // what the case covers, from a local brute force
+      val present = bc.queries.distinct.filter(q => bc.rows.exists(_._1 == q))
+      val hits = present.map(ranked(bc.rows, _))
+      val pts = bc.rows.flatMap(r => r._2 ++ r._3)
+      val counts = bc.rows.groupBy(_._1).map { case (u, rs) => u -> rs.size }
+      Seq("empty" -> bc.rows.exists(_._2.isEmpty), "1-point" -> bc.rows.exists(_._2.size == 1),
+        "NaN" -> pts.exists(_.isNaN), "Inf" -> pts.exists(_.isInfinite),
+        "id listed twice" -> (bc.queries.distinct.size < bc.queries.size),
+        "query id twice in the table" -> present.exists(counts(_) > 1),
+        "absent id" -> (present.size < bc.queries.distinct.size),
+        "query is another query's candidate" -> (present.size > 1),
+        "fewer than k" -> (bc.k > 0 && hits.exists(_.size < bc.k)),
+        "tie at k-th" -> hits.exists(tieAtKth(_, bc.k)),
+        "k = 0" -> (bc.k == 0), "empty query set" -> bc.queries.isEmpty)
+        .foreach { case (what, hit) => if (hit) seen(what) += 1 }
+      val m = mismatch(bc)
+      m.isEmpty :| m.getOrElse("")
+    }
+    val res = org.scalacheck.Test.check(org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(40).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261021L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    for (what <- Seq("empty", "1-point", "NaN", "Inf", "id listed twice",
+        "query id twice in the table", "absent id", "query is another query's candidate",
+        "fewer than k", "tie at k-th", "k = 0", "empty query set"))
+      assert(seen(what) > 0, s"no generated case covered '$what': $seen")
+
+    for (rows <- badSliceLayouts)
+      mismatch(BatchCase(rows, Seq(0L, 2L), k = 1)).foreach(m => fail(m))
   }
 
   test("allPairsTopKStr ≡ the naive all-pairs join row for row on generated adversarial tables, 1 and 7 partitions") {
@@ -198,6 +274,19 @@ class TrajectorySearchTest extends AnyFunSuite {
       assert(jobs == 2, s"$metric, query $q: $jobs jobs")
       assert(rows.length == 10)
     }
+    // a 5-query batch is one chunk: the lookup job and one search job
+    val qs = Seq(0L, 1L, 2L, 3L, 4L)
+    for (metric <- Seq("hausdorff", "frechet")) {
+      val (rows, jobs) = JobCount(spark)(
+        TrajectorySearch.topKBatchPruned(ta, qs, 10, metric).collect())
+      assert(jobs == 2, s"$metric, batch $qs: $jobs jobs")
+      assert(rows.length == 50)
+    }
+    // under a 1-byte cap every query is a chunk of its own
+    val (rows, jobs) = withCap("1")(JobCount(spark)(
+      TrajectorySearch.topKBatchPruned(ta, qs, 10, "hausdorff").collect()))
+    assert(jobs == 1 + qs.size, s"one chunk per query: $jobs jobs")
+    assert(rows.toSeq == TrajectorySearch.topKBatchPruned(ta, qs, 10, "hausdorff").collect().toSeq)
   }
 
   test("epsilonGate equals the naive cross-pair gate at two SFs and never enumerates within-side pairs") {
@@ -243,7 +332,7 @@ class TrajectorySearchTest extends AnyFunSuite {
       (20L until 60L).map(i => (i, traj(500 + (i % 5) * 100, 500)))
     val ta = rows.map { case (id, (xs, ys)) => (id, xs, ys) }.toDF("user_id", "xs", "ys")
 
-    val naive = TrajectorySearch.topKOf(ta, 0L, 10, "hausdorff")
+    val naive = MetricOracles.topKOf(ta, 0L, 10, "hausdorff")
       .collect().map(_.toString).toSeq
     val pruned = TrajectorySearch.topKPruned(ta, 0L, 10, "hausdorff")
       .collect().map(_.toString).toSeq
@@ -251,7 +340,7 @@ class TrajectorySearchTest extends AnyFunSuite {
 
     // the k-th distance stays inside the near cluster (≈ ≤ 3), so the far
     // users' boxes (≥ ~490 away) must be pruned
-    val r = TrajectorySearch.topKOf(ta, 0L, 10, "hausdorff")
+    val r = MetricOracles.topKOf(ta, 0L, 10, "hausdorff")
       .agg(max($"dist")).as[Double].head()
     val nCand = TrajectorySearch.prunedCandidateCount(ta, 0L, r + 1e-6)
     assert(nCand <= 19, s"expected only near-cluster candidates, got $nCand")
@@ -280,11 +369,11 @@ class TrajectorySearchTest extends AnyFunSuite {
       s"expected >50% pruning on the fixture, got $survivors of $pairs")
   }
 
-  test("relational bound-seeded batch top-k equals the exact batch search at two SFs") {
+  test("partition-local batch top-k equals the exact batch search at two SFs") {
     for (dir <- Seq(TestSpark.sf0001, TestSpark.sf001)) {
       val ta = Tables.trajArrays(spark, dir)
       val qs = Seq(0L, 1L, 2L, 3L, 4L)
-      val exact = TrajectorySearch.topKBatch(ta, qs, 10, "hausdorff")
+      val exact = MetricOracles.topKBatch(ta, qs, 10, "hausdorff")
         .collect().map(_.toString).toSeq
       val pruned = TrajectorySearch.topKBatchPruned(ta, qs, 10, "hausdorff")
         .collect().map(_.toString).toSeq
@@ -296,7 +385,7 @@ class TrajectorySearchTest extends AnyFunSuite {
     for (dir <- Seq(TestSpark.sf0001)) {
       val ta = Tables.trajArrays(spark, dir)
       val allUsers = ta.select($"user_id").collect().map(_.getLong(0)).toSeq
-      val exact = TrajectorySearch.topKBatch(ta, allUsers, 3, "hausdorff")
+      val exact = MetricOracles.topKBatch(ta, allUsers, 3, "hausdorff")
         .collect().map(_.toString).toSeq
       val seeded = TrajectorySearch.knnJoin(ta, 3, "hausdorff",
           path = TrajectorySearch.KnnPath.Seeded)
@@ -344,7 +433,7 @@ class TrajectorySearchTest extends AnyFunSuite {
 
     for (ta <- Seq(short, long)) {
       val allUsers = ta.select($"user_id").collect().map(_.getLong(0)).toSeq
-      val exact = TrajectorySearch.topKBatch(ta, allUsers, 3, "hausdorff")
+      val exact = MetricOracles.topKBatch(ta, allUsers, 3, "hausdorff")
         .collect().map(_.toString).toSeq
       val auto = TrajectorySearch.knnJoin(ta, 3, "hausdorff")
         .collect().map(_.toString).toSeq
@@ -456,12 +545,14 @@ class TrajectorySearchTest extends AnyFunSuite {
     assert(res.length == 5)
   }
 
-  /** Round-9 directive 1: the seeded batch search's corpus-sized frames
+  /** Round-9 directive 1: the seeded kNN join's corpus-sized frames
     * (qSlim/fat/qFat — in the knnJoin-Seeded self-join they ARE the
     * corpus) must not carry an unconditional broadcast hint. With the cap
     * set tiny EVERY data-sized hint drops (zero ResolvedHints in the
     * analyzed plan — the equi-joins on user_id/q_user fall to shuffle
-    * joins) and the answer is unchanged at both partitionings. */
+    * joins) and the answer is unchanged. t9's batch search, a local
+    * relation built from two jobs, must give the same answer under the tiny
+    * cap and at another input partitioning. */
   test("seeded batch search drops ALL data-sized broadcast hints past the cap — result unchanged") {
     def hintCount(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.analyzed.collect {
@@ -469,27 +560,26 @@ class TrajectorySearchTest extends AnyFunSuite {
       }.size
     val ta = Tables.trajArrays(spark, TestSpark.sf0001)
     val qs = Seq(0L, 1L, 2L, 3L, 4L)
-    val hintedQ = TrajectorySearch.topKBatchPruned(ta, qs, 10, "hausdorff")
-    assert(hintCount(hintedQ) > 0, "under the cap the hints apply")
-    val base = hintedQ.collect().map(_.toString).toSeq
-    val seededBase = TrajectorySearch.knnJoin(ta, 3, "hausdorff",
-        path = TrajectorySearch.KnnPath.Seeded).collect().map(_.toString).toSeq
-    spark.conf.set("spark.graft.broadcastCapBytes", "0")
-    try {
-      val unhinted = TrajectorySearch.topKBatchPruned(ta, qs, 10, "hausdorff")
-      assert(hintCount(unhinted) == 0,
-        s"expected zero data-sized hints under a tiny cap, got ${hintCount(unhinted)}")
-      assert(unhinted.collect().map(_.toString).toSeq == base,
-        "guarded t9 plan must produce identical results")
+    val base = TrajectorySearch.topKBatchPruned(ta, qs, 10, "hausdorff")
+      .collect().map(_.toString).toSeq
+    val hintedSeeded = TrajectorySearch.knnJoin(ta, 3, "hausdorff",
+      path = TrajectorySearch.KnnPath.Seeded)
+    assert(hintCount(hintedSeeded) > 0, "under the cap the hints apply")
+    val seededBase = hintedSeeded.collect().map(_.toString).toSeq
+    withCap("0") {
       val seeded = TrajectorySearch.knnJoin(ta, 3, "hausdorff",
           path = TrajectorySearch.KnnPath.Seeded)
-      assert(hintCount(seeded) == 0, "knnJoin-Seeded must be guarded too")
-      assert(seeded.collect().map(_.toString).toSeq == seededBase)
-      // a different input partitioning must not change the guarded answer
+      assert(hintCount(seeded) == 0,
+        s"expected zero data-sized hints under a tiny cap, got ${hintCount(seeded)}")
+      assert(seeded.collect().map(_.toString).toSeq == seededBase,
+        "the guarded knnJoin-Seeded plan must produce identical results")
+      assert(TrajectorySearch.topKBatchPruned(ta, qs, 10, "hausdorff")
+        .collect().map(_.toString).toSeq == base, "t9 under the tiny cap")
+      // a different input partitioning must not change the answer
       val repart = TrajectorySearch
         .topKBatchPruned(ta.repartition(7), qs, 10, "hausdorff")
         .collect().map(_.toString).toSeq
       assert(repart == base)
-    } finally spark.conf.unset("spark.graft.broadcastCapBytes")
+    }
   }
 }
