@@ -155,10 +155,10 @@ object ScaleSmoke {
 
     // t28 spatial ingest gate at growing corpus (round-9): the arriving
     // batch stays FIXED (the base copy's user_id % 5 == 0 trajectories)
-    // while the corpus grows ×k. The probe is one slim corpus bound-scan
-    // per batch (cross-only) — cost should track the corpus LINEARLY
-    // (bound rows ×k, kernel survivors ×k since copies clone close pairs),
-    // never a pair-space blowup. trajArrays is pre-warmed so the timing is
+    // while the corpus grows ×k. The probe is one corpus scan per batch
+    // (cross-only: each corpus partition searches the shipped batch) —
+    // cost should track the corpus LINEARLY (bound ranks ×k, kernel
+    // survivors ×k since copies clone close pairs), never a pair blowup. trajArrays is pre-warmed so the timing is
     // the probe, not the per-dir array-artifact build.
     if (mode == "all" || mode == "traj") {
       val baseUserMax = spark.read.parquet(s"$Base/events.parquet")

@@ -10,6 +10,12 @@ package graft.geo
   * with the monotone sqrt, so results are bit-identical to the SQL form that
   * computes `SQRT((ax-bx)^2+(ay-by)^2)` per pair and then min/max — this is
   * what makes the kernel form hash-match the DuckDB oracle (t2).
+  *
+  * An empty trajectory on either side: [[hausdorff]], [[discreteFrechet]],
+  * their bounded forms, [[dtw]] and [[closestApproach]] return NaN (a top-k
+  * search ranks it last, an ε-gate never counts it); [[lcssCount]] is 0,
+  * [[edr]] the other side's length, [[erp]] the other side's summed
+  * distance to the gap point; [[polylineDist]] to it is Double.MaxValue.
   */
 object Metrics {
 

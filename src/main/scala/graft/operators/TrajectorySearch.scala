@@ -14,10 +14,11 @@ import graft.util.Snap
 
 /** Reference O15 — the flagship query of the DFT system: the k most
   * similar trajectories to a query trajectory, or to each of a query set,
-  * under Hausdorff or discrete Fréchet distance. [[topKPruned]] (t7/t8) and
-  * [[topKBatchPruned]] (t9) share one partition-local branch-and-bound
-  * search ([[searchQuerySet]]), the bound-then-refine pattern implemented
-  * for vectors in VectorOps.cosineSelfJoin. */
+  * under Hausdorff or discrete Fréchet distance. [[topKPruned]] (t7/t8),
+  * [[topKBatchPruned]] (t9) and the ε-gate [[epsilonGate]] (t28) share one
+  * partition-local branch-and-bound search ([[searchQuerySet]]), the
+  * bound-then-refine pattern implemented for vectors in
+  * VectorOps.cosineSelfJoin. */
 object TrajectorySearch {
 
   /** Time-sliced MBR lower bound (reference O4/O11 carried to pairs): with
@@ -76,7 +77,7 @@ object TrajectorySearch {
     * once, and an id absent from the table has no rows. */
   def topKBatchPruned(ta0: DataFrame, queryUsers: Seq[Long], k: Int,
                       metric: String = "hausdorff"): DataFrame =
-    localFrame(ta0.sparkSession, searchQuerySet(ta0, queryUsers, k, metric)
+    localFrame(ta0.sparkSession, topKSearch(ta0, queryUsers, k, metric)
       .map { case (q, h) => Row(q, h.user, h.dist) },
       "q_user" -> LongType, "user_id" -> LongType, "dist" -> DoubleType)
 
@@ -466,46 +467,18 @@ object TrajectorySearch {
     * member of the incremental-admission family (d14 gates lexical
     * near-dups, v11 semantic ones; this gates route duplicates — the
     * same path re-recorded — that token/embedding hashing cannot see).
-    *
-    * CROSS pairs only: corpus×corpus and batch×batch never enumerate, so
-    * probe cost tracks one corpus bound-scan per arriving batch. The
-    * bound scan is slim (boxes only — 4·slices doubles a side — with the
-    * codegen'd sliced-box LB in the join projection; the bounded batch
-    * side broadcasts, the corpus streams across all cores); only bound
-    * survivors get the early-abandoning exact kernel (exact at/below
-    * tau+1e-5, certificate above — so the 6-dp-rounded compare against
-    * tau can never misclassify an abandoned pair). Report is one row per
-    * batch trajectory: close-corpus count and the admit flag. */
+    * The ε mode of [[searchQuerySet]], the batch its query set (cross
+    * pairs only; 2 jobs for a one-chunk batch). One `(user_id, n_close,
+    * admitted)` row per batch row, by user_id: an id's rows share its close
+    * pairs' count over all its rows; a null batch id is `(null, 0, 1)`. */
   def epsilonGate(corpus0: DataFrame, batch0: DataFrame, tau: Double,
                   metric: String = "hausdorff"): DataFrame = {
-    val s = corpus0.sparkSession
-    graft.functions.SlicedBoxLb.register(s)
-    val corpus = ensureBoxes(corpus0)
-    val batch = ensureBoxes(batch0)
-    val sc = corpus.select(col("user_id").as("cu"), col("boxes").as("cboxes"))
-      .repartition(s.sparkContext.defaultParallelism, col("cu"))
-    val sb = batch.select(col("user_id").as("bu"), col("boxes").as("bboxes"))
-    // bound slack 1e-6 ≫ the 6-dp rounding granularity (the allPairsTopK
-    // convention): a pair whose EXACT h lands in (tau, tau+5e-7] still
-    // rounds to ≤ tau — its lb ≤ h < tau+1e-6 must survive to the kernel
-    val cand = sc.crossJoin(broadcast(sb))
-      .select(col("cu"), col("bu"), slicedBoxLb("cboxes", "bboxes").as("lb"))
-      .filter(col("lb") <= tau + 1e-6)
-      .select(col("cu"), col("bu"))
-    val fatC = corpus.select(col("user_id").as("cu"), col("xs").as("cxs"), col("ys").as("cys"))
-    val fatB = batch.select(col("user_id").as("bu"), col("xs").as("bxs"), col("ys").as("bys"))
-    val refine = round(MetricCol(metric,
-      col("cxs"), col("cys"), col("bxs"), col("bys"), lit(tau + 1e-5)), 6)
-    val close = cand
-      .join(broadcast(fatB), "bu").join(fatC, "cu")
-      .filter(refine <= tau)
-      .groupBy(col("bu")).agg(count(lit(1)).as("n_close"))
-    batch.select(col("user_id"))
-      .join(close, col("user_id") === col("bu"), "left_outer")
-      .select(col("user_id"),
-        coalesce(col("n_close"), lit(0L)).as("n_close"),
-        when(coalesce(col("n_close"), lit(0L)) === 0L, 1L).otherwise(0L).as("admitted"))
-      .orderBy(col("user_id"))
+    val (frechet, batch) = (MetricCol.isFrechet(metric), lookup(ensureBoxes(batch0), _ => true))
+    val close = searchQuerySet(ensureBoxes(corpus0), batch, Within(tau), frechet).toMap
+    localFrame(corpus0.sparkSession, batch.map(_._1).sorted.map { u =>
+      val n = u.flatMap(close.get).getOrElse(0L)
+      Row(u.map(Long.box).orNull, n, if (n == 0L) 1L else 0L)
+    }, "user_id" -> LongType, "n_close" -> LongType, "admitted" -> LongType)
   }
 
   /** Frames built by Tables.trajArrays carry `boxes`; synthetic xs/ys
@@ -517,71 +490,68 @@ object TrajectorySearch {
     * [[searchQuerySet]], rows `(user_id, dist)` ordered by (dist, user_id),
     * NaN last. */
   def topKPruned(ta0: DataFrame, queryUser: Long, k: Int, metric: String): DataFrame =
-    localFrame(ta0.sparkSession, searchQuerySet(ta0, Seq(queryUser), k, metric)
+    localFrame(ta0.sparkSession, topKSearch(ta0, Seq(queryUser), k, metric)
       .map { case (_, h) => Row(h.user, h.dist) },
       "user_id" -> LongType, "dist" -> DoubleType)
 
+  /** [[searchQuerySet]]'s top-k mode over the query ids' rows of `ta0`. */
+  private def topKSearch(ta0: DataFrame, queryUsers: Seq[Long], k: Int,
+                         metric: String): Seq[(Long, Hit)] = {
+    require(k >= 0, s"k must be non-negative, got $k")
+    val (frechet, ta, ids) = (MetricCol.isFrechet(metric), ensureBoxes(ta0), queryUsers.toSet)
+    if (k == 0 || ids.isEmpty) Nil
+    else searchQuerySet(ta, lookup(ta, _.exists(ids)), TopK(k), frechet)
+      .flatMap { case (u, top) => top.map(u -> _) }
+  }
+
   /** Reference O11/O13 search over a query set, run the way DFT (and
-    * REPOSE) runs it. Returns each query id's top-k hits, ids ascending,
-    * hits by (dist, user_id), NaN last.
-    *
-    *  1. One lookup job fetches the rows of the query ids (an id duplicated
-    *     in the table has several, and a candidate pairs with each).
-    *  2. One search job per [[chunked]] chunk of queries, shipped to every
-    *     partition. A partition copies its rows once; for each query, the
-    *     rows of every other id (other queries included) are ranked by the
-    *     sliced-box lower bound ([[graft.functions.BoxLbKernel]]) and the
-    *     exact kernel (`Metrics.hausdorffBounded`/`frechetBounded`) runs in
-    *     bound order. With k rows held, the kernel abandons past the k-th
-    *     rounded distance + 1e-5, and the scan stops at the first bound past
-    *     the k-th + 1e-6. ≤ k rows per query leave the partition.
-    *  3. The driver merges each query's rows and keeps k.
-    *
-    * Nothing is planned or code-generated per call: the jobs run over the
-    * table's already-planned RDD (`queryExecution.toRdd`).
+    * REPOSE) runs its top-k and its threshold (ε) queries: per non-null
+    * query id ascending, its [[TopK]] or [[Within]] result. An id's rows
+    * (from the caller's [[lookup]] job) form one query. One search job per
+    * [[chunked]] chunk of queries ships it to every partition of `ta` (a
+    * frame with `boxes`), which copies its rows once and per query ranks
+    * the candidates by the sliced-box bound ([[graft.functions.BoxLbKernel]])
+    * and runs the exact kernel (`Metrics.hausdorffBounded`/`frechetBounded`)
+    * in bound order against a threshold thr: the k-th held rounded
+    * distance (∞ until k are held), or τ. The kernel abandons past
+    * thr + 1e-5, the scan stops at the first bound past thr + 1e-6, and
+    * ≤ k hits or one count per query return to the driver's merge. The
+    * jobs run over the table's planned RDD (`queryExecution.toRdd`).
     *
     * Exactness (TrajectorySearchTest checks row-for-row equality with the
-    * unpruned relational searches on adversarial tables). Distances are
-    * compared after the 6-dp rounding of `round(x, 6)`, and both margins
-    * sit well above its 1e-6 granularity (for distances whose double
-    * spacing is finer than the margins, i.e. below ~1e9):
+    * unpruned relational searches and gate on adversarial tables).
+    * Distances are compared after the 6-dp rounding of `round(x, 6)`, and
+    * both margins sit well above its 1e-6 granularity (for distances whose
+    * double spacing is finer than the margins, i.e. below ~1e9):
     *  - stop: every later candidate has exact distance ≥ its bound >
-    *    k-th + 1e-6, so it rounds strictly above the k-th and cannot enter
-    *    the top-k, not even on a `user_id` tie-break;
-    *  - abandon: an abandoned kernel returns a value > k-th + 1e-5 that is
+    *    thr + 1e-6, so it rounds strictly above thr: it can neither enter
+    *    the top-k, not even on a `user_id` tie-break, nor be within τ;
+    *  - abandon: an abandoned kernel returns a value > thr + 1e-5 that is
     *    ≤ the exact distance (or the exact distance is NaN, which ranks
-    *    last), so the candidate ranks after the k-th either way and is
-    *    discarded either way; below the bound the kernel is exact.
-    * The box bound ([[graft.functions.BoxLbKernel.compute]]) is ≤ the
-    * kernel's value even in floating point; a pair with NaN, ±Inf or
-    * overflowing box coordinates gets bound 0 and is always evaluated. A
-    * NaN k-th (empty trajectories rank last) never stops or abandons the
-    * scan.
+    *    last and is never within τ), so either way the candidate is out;
+    *    below the bound the kernel is exact.
+    * The box bound is ≤ the kernel's value even in floating point
+    * ([[graft.functions.BoxLbKernel.compute]]), and a NaN thr (empty
+    * trajectories rank last) never stops or abandons the scan.
     */
-  private def searchQuerySet(ta0: DataFrame, queryUsers: Seq[Long], k: Int,
-                             metric: String): Seq[(Long, Hit)] = {
-    require(k >= 0, s"k must be non-negative, got $k")
-    val frechet = MetricCol.isFrechet(metric)
-    val ids = queryUsers.toSet
-    if (k == 0 || ids.isEmpty) Nil
-    else {
-      val ta = ensureBoxes(ta0)
-      val sch = ta.schema
-      val c = SearchCols(sch.fieldIndex("user_id"), sch.fieldIndex("xs"),
-        sch.fieldIndex("ys"), sch.fieldIndex("boxes"))
-      val rows = ta.queryExecution.toRdd
-      // query lookup: one row per copy of each query id, bounded by the set
-      val queries = rows.mapPartitions(_.filter(c.isIn(_, ids))
-          .map(r => (r.getLong(c.user), c.traj(r)))).collect()
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (u, ts) => Query(u, ts.map(_._2)) }
-      // ≤ k rows per query and partition, merged into each query's k smallest
-      chunked(queries, broadcastCap(ta.sparkSession)).flatMap { chunk =>
-        val tops = rows.mapPartitions(it => Iterator(searchPartition(it, c, chunk, k, frechet)))
-          .fold(Array.fill(chunk.size)(Array.empty[Hit]))(mergeTops(k))
-        chunk.zip(tops).flatMap { case (q, top) => top.map(q.user -> _) }
-      }
+  private def searchQuerySet[R](ta: DataFrame, queryRows: Seq[(Option[Long], QueryTraj)],
+                                mode: Mode[R], frechet: Boolean): Seq[(Long, R)] = {
+    val queries = queryRows.collect { case (Some(u), t) => (u, t) }.groupBy(_._1).toSeq
+      .sortBy(_._1).map { case (u, ts) => Query(u, ts.map(_._2).toArray) }
+    val (c, rows) = (new SearchCols(ta), ta.queryExecution.toRdd)
+    chunked(queries, broadcastCap(ta.sparkSession)).flatMap { chunk =>
+      chunk.map(_.user).zip(rows.mapPartitions(it => Iterator(searchPartition(it, c, chunk, mode, frechet)))
+        .fold(chunk.map(_ => mode.zero))(_.zip(_).map { case (a, b) => mode.merge(a, b) }))
     }
+  }
+
+  /** The search's one lookup job: (user_id, trajectory) of each row of `ta`
+    * (a frame with `boxes`) whose id `keep` accepts, a null id as None. */
+  private def lookup(ta: DataFrame, keep: Option[Long] => Boolean): Seq[(Option[Long], QueryTraj)] = {
+    val c = new SearchCols(ta)
+    ta.queryExecution.toRdd.mapPartitions(_.flatMap { r =>
+      Some(if (r.isNullAt(c.user)) None else Some(r.getLong(c.user))).filter(keep).map(_ -> c.traj(r))
+    }).collect().toSeq // bounded by the query set
   }
 
   private def localFrame(s: SparkSession, rows: Seq[Row], cols: (String, DataType)*) =
@@ -589,9 +559,8 @@ object TrajectorySearch {
       StructType(cols.map { case (n, t) => StructField(n, t) }))
 
   /** Column ordinals of a trajectory table's internal rows. */
-  private final case class SearchCols(user: Int, xs: Int, ys: Int, boxes: Int) {
-    def isIn(r: InternalRow, us: Set[Long]): Boolean =
-      !r.isNullAt(user) && us.contains(r.getLong(user))
+  private final class SearchCols(ta: DataFrame) extends Serializable {
+    val Seq(user, xs, ys, boxes) = Seq("user_id", "xs", "ys", "boxes").map(ta.schema.fieldIndex)
     def traj(r: InternalRow): QueryTraj = QueryTraj(r.getArray(xs).toDoubleArray(),
       r.getArray(ys).toDoubleArray(), r.getArray(boxes).toDoubleArray())
   }
@@ -628,9 +597,45 @@ object TrajectorySearch {
     }
   }
 
-  /** Per query, the k smallest hits of two partial results. */
-  private def mergeTops(k: Int)(a: Array[Array[Hit]], b: Array[Array[Hit]]): Array[Array[Hit]] =
-    a.zip(b).map { case (x, y) => (x ++ y).sorted(HitOrder).take(k) }
+  /** What [[searchQuerySet]] keeps per query: an `R` per partition from a [[Scan]], merged. */
+  private sealed abstract class Mode[R] extends Serializable {
+    val othersOnly: Boolean // a query's own id is not its candidate
+    val zero: R
+    def merge(a: R, b: R): R
+    def scan(): Scan[R]
+  }
+  /** One query's scan of a partition: its threshold and what a hit does. */
+  private abstract class Scan[R] { def thr: Double; def offer(h: Hit): Unit; def result: R }
+
+  /** The k nearest rows of other ids, by [[HitOrder]] (NaN last). */
+  private final case class TopK(k: Int) extends Mode[Array[Hit]] {
+    val (othersOnly, zero) = (true, Array.empty[Hit])
+    def merge(a: Array[Hit], b: Array[Hit]) = (a ++ b).sorted(HitOrder).take(k)
+    def scan() = new Scan[Array[Hit]] {
+      private val top = new Array[Hit](k) // ascending, first `held` slots used
+      private var held = 0
+      def thr = if (held == k) top(k - 1).dist else Double.PositiveInfinity
+      def offer(hit: Hit) = if (held < k || HitOrder.lt(hit, top(k - 1))) {
+        var j = math.min(held, k - 1)
+        while (j > 0 && HitOrder.lt(hit, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
+        top(j) = hit
+        held = math.min(held + 1, k)
+      }
+      def result = top.take(held)
+    }
+  }
+
+  /** The count of rows of any id within `tau`. */
+  private final case class Within(tau: Double) extends Mode[Long] {
+    val (othersOnly, zero) = (false, 0L)
+    def merge(a: Long, b: Long) = a + b
+    def scan() = new Scan[Long] {
+      private var n = 0L
+      def thr = tau
+      def offer(hit: Hit) = if (hit.dist <= tau) n += 1
+      def result = n
+    }
+  }
 
   /** Spark's `round(x, 6)` on a double: HALF_UP on the shortest decimal
     * form, NaN and ±Inf passed through. */
@@ -638,40 +643,29 @@ object TrajectorySearch {
     if (d.isNaN || d.isInfinite) d
     else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
-  /** One partition's top-k for each query of `qs`, in order ([[searchQuerySet]]). */
-  private def searchPartition(it: Iterator[InternalRow], c: SearchCols, qs: Seq[Query],
-                              k: Int, frechet: Boolean): Array[Array[Hit]] = {
+  /** One partition's result for each query of `qs`, in order ([[searchQuerySet]]). */
+  private def searchPartition[R](it: Iterator[InternalRow], c: SearchCols, qs: Seq[Query],
+                                 mode: Mode[R], frechet: Boolean): Seq[R] = {
     // rows are reused by the scan: copy each once, for every query
     val rows = it.filter(!_.isNullAt(c.user)).map(_.copy()).toArray
     qs.map { q =>
       val qBoxes = q.trajs.map(t => UnsafeArrayData.fromPrimitiveArray(t.boxes))
       val cands = (for {
-        r <- rows.indices if rows(r).getLong(c.user) != q.user
+        r <- rows.indices if !mode.othersOnly || rows(r).getLong(c.user) != q.user
         t <- q.trajs.indices
       } yield (BoxLbKernel.compute(rows(r).getArray(c.boxes), qBoxes(t)), r, t))
         .sortBy(_._1)(Ordering.Double.TotalOrdering)
-
-      val top = new Array[Hit](k) // ascending by HitOrder, first `held` slots used
-      var held = 0
-      var i = 0
-      while (i < cands.length && !(held == k && cands(i)._1 > top(k - 1).dist + 1e-6)) {
-        val (_, r, t) = cands(i)
-        val (row, qt) = (rows(r), q.trajs(t))
-        val bound = if (held == k) top(k - 1).dist + 1e-5 else Double.MaxValue
+      val acc = mode.scan()
+      // takeWhile reads thr after each offer
+      cands.iterator.takeWhile(cand => !(cand._1 > acc.thr + 1e-6)).foreach { case (_, r, t) =>
+        val (row, qt, bound) = (rows(r), q.trajs(t), acc.thr + 1e-5)
         val (xs, ys) = (row.getArray(c.xs).toDoubleArray(), row.getArray(c.ys).toDoubleArray())
-        val hit = Hit(row.getLong(c.user), round6(
+        acc.offer(Hit(row.getLong(c.user), round6(
           if (frechet) Metrics.frechetBounded(xs, ys, qt.xs, qt.ys, bound)
-          else Metrics.hausdorffBounded(xs, ys, qt.xs, qt.ys, bound)))
-        if (held < k || HitOrder.lt(hit, top(k - 1))) {
-          var j = math.min(held, k - 1)
-          while (j > 0 && HitOrder.lt(hit, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
-          top(j) = hit
-          if (held < k) held += 1
-        }
-        i += 1
+          else Metrics.hausdorffBounded(xs, ys, qt.xs, qt.ys, bound))))
       }
-      top.take(held)
-    }.toArray
+      acc.result
+    }
   }
 
   /** Candidate count after bound pruning at threshold r — exposed for tests

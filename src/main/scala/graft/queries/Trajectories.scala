@@ -833,11 +833,11 @@ object Trajectories {
     // this gates ROUTE duplicates, the same path re-recorded, which
     // token/embedding hashing cannot see): admit each batch trajectory
     // (user_id % 5 = 0) iff no corpus trajectory (the rest) lies within
-    // Hausdorff 11.0. Cross pairs only — corpus×corpus / batch×batch never
-    // enumerate; slim sliced-box bound scan, early-abandoning exact kernel
-    // on survivors only (TrajectorySearch.epsilonGate). The DuckDB oracle
-    // computes the full cross Hausdorff relationally — the gate must land
-    // the exact admit/reject partition.
+    // Hausdorff 11.0. Cross pairs only: TrajectorySearch.epsilonGate is
+    // the ε mode of t7–t9's partition-local query-set search, the batch
+    // its query set (one lookup job, one search job over the corpus). The
+    // DuckDB oracle computes the full cross Hausdorff relationally — the
+    // gate must land the exact admit/reject partition.
     DeclaredQuery("t28_traj_ingest_gate",
       s"""WITH pts AS ${ptsViewS("purchase")},
          |d AS (SELECT a.user_id cu, b.user_id bu, a.event_id ea, b.event_id eb,

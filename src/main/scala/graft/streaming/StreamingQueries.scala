@@ -266,9 +266,8 @@ object StreamingQueries {
     val batch = graft.Tables.withSliceBoxes(newTrajs)
       .select(col("user_id").as("bu"), col("xs").as("bxs"),
         col("ys").as("bys"), col("boxes").as("bboxes"))
-    // bound slack 1e-6 ≫ the 6-dp rounding granularity (epsilonGate's
-    // convention): pairs whose exact h rounds into ≤ tau must reach the
-    // in-row kernel even when the box bound sits between tau and h
+    // the 1e-6 bound and 1e-5 abandon margins of the batch gate's search
+    // (TrajectorySearch.searchQuerySet states why they are exact)
     batch.join(broadcast(corpus),
         graft.operators.TrajectorySearch.slicedBoxLb("bboxes", "cboxes") <= tau + 1e-6)
       .withColumn("h", round(graft.functions.MetricCol("hausdorff",

@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
-import org.apache.spark.sql.functions.{broadcast, col, round, row_number, udf}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, round, row_number, udf, when}
 
 import graft.geo.Metrics
 
 /** Test-only oracles for the metric kernels in [[graft.geo.Metrics]]: the
   * definitional memoized recursions behind the DP property tests, plain
   * Hausdorff/Fréchet UDFs that are independent of the engine's bounded
-  * codegen path, and the unpruned searches and all-pairs join built on
-  * them. */
+  * codegen path, and the unpruned searches, all-pairs join and ε-gate
+  * built on them. */
 object MetricOracles {
 
   private def d2(ax: Double, ay: Double, bx: Double, by: Double): Double = {
@@ -84,6 +84,27 @@ object MetricOracles {
       .select(col("u1"), col("u2"),
         round(fn(col("xs1"), col("ys1"), col("xs2"), col("ys2")), 6).as(metric))
       .orderBy(col(metric), col("u1"), col("u2")).limit(k)
+  }
+
+  /** The unpruned ε-gate of a corpus and a batch (user_id, xs, ys): the
+    * exact kernel on every (corpus row, batch row) pair. A batch id's
+    * `n_close` counts the pairs of all its rows with a non-null corpus id
+    * whose 6-dp distance is ≤ tau; one `(user_id, n_close, admitted)` row
+    * per batch row, ordered by user_id, a null batch id never matching. */
+  def epsilonGateNaive(corpus: DataFrame, batch: DataFrame, tau: Double,
+                       metric: String): DataFrame = {
+    val c = corpus.filter(col("user_id").isNotNull)
+      .select(col("xs").as("cxs"), col("ys").as("cys"))
+    val b = batch.select(col("user_id").as("bu"), col("xs").as("bxs"), col("ys").as("bys"))
+    val close = c.crossJoin(b)
+      .filter(round(metricUdf(metric)(col("cxs"), col("cys"), col("bxs"), col("bys")), 6) <= tau)
+      .groupBy(col("bu")).agg(count(lit(1)).as("n"))
+    batch.select(col("user_id"))
+      .join(close, col("user_id") === col("bu"), "left_outer")
+      .select(col("user_id"), coalesce(col("n"), lit(0L)).as("n_close"))
+      .select(col("user_id"), col("n_close"),
+        when(col("n_close") === 0L, 1L).otherwise(0L).as("admitted"))
+      .orderBy(col("user_id"))
   }
 
   def dtwNaive(xa: Array[Double], ya: Array[Double],

@@ -2,13 +2,16 @@ package graft
 
 import scala.util.Random
 
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.geo.Metrics
 
 /** Property tests for the trajectory metric kernels (SURVEY §5.2): metric
   * axioms on seeded random trajectories, DP == naive recursion for Fréchet,
-  * and the Hausdorff ≤ discrete-Fréchet dominance.
+  * and — on generated degenerate trajectories — the bounded kernels'
+  * contract and the Hausdorff ≤ discrete-Fréchet dominance.
   */
 class MetricPropertiesTest extends AnyFunSuite {
 
@@ -43,11 +46,84 @@ class MetricPropertiesTest extends AnyFunSuite {
     }
   }
 
+  /** One generated kernel input: a kind per side and the two trajectories. */
+  private case class KernelCase(kinds: (String, String), a: (Array[Double], Array[Double]),
+                                b: (Array[Double], Array[Double])) {
+    override def toString: String = s"$kinds: ${show(a)} vs ${show(b)}"
+    private def show(t: (Array[Double], Array[Double])) =
+      if (t._1.length > 50) s"${t._1.length} points"
+      else t._1.zip(t._2).mkString("[", ", ", "]")
+  }
+
+  /** The trajectories a table can hold: plain random ones, and empty,
+    * 1-point, NaN/±Inf-coordinate, repeated-point and longer-than-
+    * [[Tables.MaxTrajPoints]] ones. A long one is only paired with a
+    * short one: the kernels are O(n·m). */
+  private val kernelCases: Gen[KernelCase] = {
+    val odd = Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    def coords(n: Int, oddWeight: Int) =
+      Gen.listOfN(n, Gen.frequency(8 -> Gen.choose(0, 20).map(_ * 0.5), oddWeight -> odd))
+        .map(_.toArray)
+    def traj(n: Int, oddWeight: Int) = for (xs <- coords(n, oddWeight); ys <- coords(n, oddWeight))
+      yield (xs, ys)
+    val short = Gen.frequency(
+      1 -> Gen.const("empty" -> (Array.emptyDoubleArray, Array.emptyDoubleArray)),
+      2 -> traj(1, 0).map("1-point" -> _),
+      2 -> Gen.choose(1, 12).flatMap(traj(_, 2)).map("NaN/Inf" -> _),
+      2 -> (for {
+        (xs, ys) <- Gen.choose(1, 8).flatMap(traj(_, 0))
+        reps <- Gen.listOfN(xs.length, Gen.choose(1, 3))
+      } yield "repeated points" -> (xs.zip(reps).flatMap { case (x, r) => Array.fill(r)(x) },
+        ys.zip(reps).flatMap { case (y, r) => Array.fill(r)(y) })),
+      4 -> Gen.choose(2, 30).flatMap(traj(_, 0)).map("plain" -> _))
+    // a seeded random walk: listOfN is too slow for 10⁵ points
+    val long = Gen.long.map { seed =>
+      val r = new Random(seed)
+      val n = Tables.MaxTrajPoints + 1
+      "long" -> (Array.tabulate(n)(i => i * 1e-4 + r.nextInt(3)),
+        Array.tabulate(n)(i => 5.0 + r.nextInt(3) * 0.5))
+    }
+    for {
+      (ka, a) <- Gen.frequency(12 -> short, 1 -> long)
+      (kb, b) <- if (ka == "long") short else Gen.frequency(12 -> short, 1 -> long)
+    } yield KernelCase((ka, kb), a, b)
+  }
+
+  /** `prop` over 300 generated kernel cases; fails unless every kind
+    * occurred on some side. */
+  private def checkKernelCases(seed: Long)(prop: KernelCase => Prop): Unit = {
+    val seen = scala.collection.mutable.Set.empty[String]
+    val res = org.scalacheck.Test.check(org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(300).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(seed)),
+      Prop.forAllNoShrink(kernelCases) { kc => seen ++= Seq(kc.kinds._1, kc.kinds._2); prop(kc) })
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    for (kind <- Seq("empty", "1-point", "NaN/Inf", "repeated points", "plain", "long"))
+      assert(seen(kind), s"no generated case had a '$kind' trajectory")
+  }
+
+  private def same(a: Double, b: Double) = a == b || (a.isNaN && b.isNaN)
+
+  /** The bounded-kernel contract of `v` = kernel(bound) against the
+    * unbounded `exact`: at or below the bound (and always under a NaN
+    * bound, which never abandons) `v` is `exact`; above it `v` certifies
+    * that the exact value is above it too — `v ≤ exact`, or `exact` is
+    * NaN. */
+  private def boundedAgrees(v: Double, exact: Double, bound: Double): Prop =
+    (if (bound.isNaN || v <= bound || v.isNaN) same(v, exact)
+     else v > bound && (exact.isNaN || v <= exact)) :| s"bound $bound: $v vs exact $exact"
+
+  private def boundsFor(exact: Double) = Seq(exact * 0.25, exact * 0.75, exact, exact + 1.0,
+    0.0, 1e-5, Double.NaN, Double.PositiveInfinity, Double.MaxValue)
+
   test("hausdorff <= discrete frechet") {
-    cases.foreach { case ((xa, ya), (xb, yb)) =>
+    checkKernelCases(20261022L) { kc =>
+      val ((xa, ya), (xb, yb)) = (kc.a, kc.b)
+      val finite = xa.nonEmpty && xb.nonEmpty &&
+        (xa ++ ya ++ xb ++ yb).forall(v => !v.isNaN && !v.isInfinite)
       val h = Metrics.hausdorff(xa, ya, xb, yb)
       val f = Metrics.discreteFrechet(xa, ya, xb, yb)
-      assert(h <= f + 1e-12, s"hausdorff $h > frechet $f")
+      (!finite || h <= f) :| s"hausdorff $h > frechet $f"
     }
   }
 
@@ -94,18 +170,11 @@ class MetricPropertiesTest extends AnyFunSuite {
   }
 
   test("bounded hausdorff: exact at/below the bound, a certificate above it") {
-    cases.foreach { case ((xa, ya), (xb, yb)) =>
+    checkKernelCases(20261023L) { kc =>
+      val ((xa, ya), (xb, yb)) = (kc.a, kc.b)
       val exact = Metrics.hausdorff(xa, ya, xb, yb)
-      // generous bound → identical to the exact kernel
-      assert(Metrics.hausdorffBounded(xa, ya, xb, yb, exact + 1.0) == exact)
-      // tight bound → either the exact value (<= bound) or an abandoned
-      // partial that is a valid lower bound strictly above the bound
-      for (bound <- Seq(exact * 0.25, exact * 0.75, exact)) {
-        val v = Metrics.hausdorffBounded(xa, ya, xb, yb, bound)
-        assert(v <= exact + 1e-12)
-        if (v <= bound) assert(v == exact, s"v=$v bound=$bound exact=$exact")
-        else assert(exact > bound)
-      }
+      Prop.all(boundsFor(exact).map(bound =>
+        boundedAgrees(Metrics.hausdorffBounded(xa, ya, xb, yb, bound), exact, bound)): _*)
     }
   }
 
@@ -184,15 +253,11 @@ class MetricPropertiesTest extends AnyFunSuite {
   }
 
   test("bounded frechet: exact at/below the bound, a certificate above it") {
-    cases.foreach { case ((xa, ya), (xb, yb)) =>
+    checkKernelCases(20261024L) { kc =>
+      val ((xa, ya), (xb, yb)) = (kc.a, kc.b)
       val exact = Metrics.discreteFrechet(xa, ya, xb, yb)
-      assert(Metrics.frechetBounded(xa, ya, xb, yb, exact + 1.0) == exact)
-      for (bound <- Seq(exact * 0.25, exact * 0.75, exact)) {
-        val v = Metrics.frechetBounded(xa, ya, xb, yb, bound)
-        assert(v <= exact + 1e-12)
-        if (v <= bound) assert(v == exact, s"v=$v bound=$bound exact=$exact")
-        else assert(exact > bound)
-      }
+      Prop.all(boundsFor(exact).map(bound =>
+        boundedAgrees(Metrics.frechetBounded(xa, ya, xb, yb, bound), exact, bound)): _*)
     }
   }
 

@@ -65,13 +65,17 @@ class TrajectorySearchTest extends AnyFunSuite {
   }
 
   /** A (user_id, xs, ys) table of `rows` in `parts` input partitions. */
-  private def frameOf(rows: Seq[(Long, Seq[Double], Seq[Double])], parts: Int) = {
+  private def frameOf(rows: Seq[(Long, Seq[Double], Seq[Double])], parts: Int) =
+    frameOfIds(rows.map { case (u, xs, ys) => (Some(u), xs, ys) }, parts)
+
+  /** [[frameOf]] with a null user_id where the id is None. */
+  private def frameOfIds(rows: Seq[(Option[Long], Seq[Double], Seq[Double])], parts: Int) = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("xs", ArrayType(DoubleType)), StructField("ys", ArrayType(DoubleType))))
     spark.createDataFrame(spark.sparkContext.parallelize(
-      rows.map { case (u, xs, ys) => Row(u, xs, ys) }, parts), schema)
+      rows.map { case (u, xs, ys) => Row(u.map(Long.box).orNull, xs, ys) }, parts), schema)
   }
 
   private def round6(d: Double) = if (d.isNaN || d.isInfinite) d
@@ -223,6 +227,76 @@ class TrajectorySearchTest extends AnyFunSuite {
       mismatch(BatchCase(rows, Seq(0L, 2L), k = 1)).foreach(m => fail(m))
   }
 
+  /** One generated gate case: a single-search case's rows split into a
+    * corpus and a batch (a row may go to both, and now and then all go to
+    * one side), now and then a batch row listed twice, ids now and then
+    * null, and τ now and then a cross pair's rounded Hausdorff distance. */
+  private case class GateCase(corpus: Seq[(Option[Long], Seq[Double], Seq[Double])],
+                              batch: Seq[(Option[Long], Seq[Double], Seq[Double])], tau: Double)
+
+  private val gateCases: Gen[GateCase] = for {
+    sc <- searchCases
+    side = Gen.frequency(4 -> "corpus", 2 -> "batch", 1 -> "both")
+    sides <- Gen.frequency(8 -> Gen.listOfN(sc.rows.size, side),
+      1 -> Gen.const(sc.rows.map(_ => "corpus")), 1 -> Gen.const(sc.rows.map(_ => "batch")))
+    nulls <- Gen.listOfN(sc.rows.size, Gen.frequency(9 -> false, 1 -> true))
+    rows = sc.rows.zip(nulls).map { case ((u, xs, ys), n) => (if (n) None else Some(u), xs, ys) }
+    corpus = rows.zip(sides).collect { case (r, s) if s != "batch" => r }
+    batch0 = rows.zip(sides).collect { case (r, s) if s != "corpus" => r }
+    batch <- if (batch0.isEmpty) Gen.const(batch0)
+             else Gen.frequency(3 -> Gen.const(batch0), 1 -> Gen.oneOf(batch0).map(batch0 :+ _))
+    dists = for ((_, cx, cy) <- corpus; (_, bx, by) <- batch) yield round6(
+      graft.geo.Metrics.hausdorff(cx.toArray, cy.toArray, bx.toArray, by.toArray))
+    finite = dists.filter(d => !d.isNaN && !d.isInfinite)
+    tau <- if (finite.isEmpty) Gen.oneOf(0.0, 1.0, 3.0)
+           else Gen.frequency(1 -> Gen.oneOf(0.0, 1.0, 3.0), 2 -> Gen.oneOf(finite))
+  } yield GateCase(corpus, batch, tau)
+
+  test("epsilonGate ≡ the naive cross-pair gate row for row on generated adversarial corpora and batches, 1 and 7 partitions, one chunk and one chunk per query") {
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def mismatch(gc: GateCase): Option[String] =
+      (for (metric <- Seq("hausdorff", "frechet")) yield {
+        val naive = MetricOracles.epsilonGateNaive(frameOfIds(gc.corpus, 1),
+          frameOfIds(gc.batch, 1), gc.tau, metric).collect().map(_.toString).toSeq
+        // a 1-byte cap ships every batch id in a search job of its own
+        for (cap <- Seq(None, Some("1")); parts <- Seq(1, 7)) yield {
+          def run = TrajectorySearch.epsilonGate(frameOfIds(gc.corpus, parts),
+            frameOfIds(gc.batch, parts), gc.tau, metric).collect().map(_.toString).toSeq
+          val got = cap.fold(run)(withCap(_)(run))
+          if (got == naive) None
+          else Some(s"$metric, $parts partitions, cap $cap: $got != $naive for $gc")
+        }
+      }).flatten.flatten.headOption
+
+    val prop = Prop.forAllNoShrink(gateCases) { gc =>
+      // what the case covers, from a local brute force
+      val all = gc.corpus ++ gc.batch
+      val pts = all.flatMap(r => r._2 ++ r._3)
+      val bIds = gc.batch.flatMap(_._1)
+      val dists = for ((_, cx, cy) <- gc.corpus; (_, bx, by) <- gc.batch) yield round6(
+        graft.geo.Metrics.hausdorff(cx.toArray, cy.toArray, bx.toArray, by.toArray))
+      Seq("empty" -> all.exists(_._2.isEmpty), "1-point" -> all.exists(_._2.size == 1),
+        "NaN" -> pts.exists(_.isNaN), "Inf" -> pts.exists(_.isInfinite),
+        "duplicated batch id" -> (bIds.distinct.size < bIds.size),
+        "batch id in the corpus" -> bIds.exists(gc.corpus.flatMap(_._1).toSet),
+        "empty batch" -> gc.batch.isEmpty, "empty corpus" -> gc.corpus.isEmpty,
+        "distance = τ" -> dists.contains(gc.tau),
+        "null corpus id" -> gc.corpus.exists(_._1.isEmpty),
+        "null batch id" -> gc.batch.exists(_._1.isEmpty))
+        .foreach { case (what, hit) => if (hit) seen(what) += 1 }
+      val m = mismatch(gc)
+      m.isEmpty :| m.getOrElse("")
+    }
+    val res = org.scalacheck.Test.check(org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(40).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261022L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    for (what <- Seq("empty", "1-point", "NaN", "Inf", "duplicated batch id",
+        "batch id in the corpus", "empty batch", "empty corpus", "distance = τ",
+        "null corpus id", "null batch id"))
+      assert(seen(what) > 0, s"no generated case covered '$what': $seen")
+  }
+
   test("allPairsTopKStr ≡ the naive all-pairs join row for row on generated adversarial tables, 1 and 7 partitions") {
     val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     def mismatch(rows: Seq[(Long, Seq[Double], Seq[Double])], k: Int): Option[String] =
@@ -287,6 +361,25 @@ class TrajectorySearchTest extends AnyFunSuite {
       TrajectorySearch.topKBatchPruned(ta, qs, 10, "hausdorff").collect()))
     assert(jobs == 1 + qs.size, s"one chunk per query: $jobs jobs")
     assert(rows.toSeq == TrajectorySearch.topKBatchPruned(ta, qs, 10, "hausdorff").collect().toSeq)
+
+    // a 16-trajectory ε-gate is one chunk too: the batch lookup and one
+    // search job over the corpus; under a 1-byte cap one per batch id
+    val gateTa = Tables.trajArrays(spark, TestSpark.sf001)
+    val batchIds = gateTa.select(col("user_id")).orderBy(col("user_id")).limit(16)
+      .collect().map(_.getLong(0)).toSeq // builds the cache
+    assert(batchIds.size == 16)
+    val corpus = gateTa.filter(!col("user_id").isin(batchIds: _*))
+    val batch = gateTa.filter(col("user_id").isin(batchIds: _*))
+    for (metric <- Seq("hausdorff", "frechet")) {
+      val (gate, gateJobs) = JobCount(spark)(
+        TrajectorySearch.epsilonGate(corpus, batch, 11.0, metric).collect())
+      assert(gateJobs == 2, s"$metric, 16-trajectory gate: $gateJobs jobs")
+      assert(gate.map(_.getLong(0)).toSeq == batchIds)
+    }
+    val (gate, gateJobs) = withCap("1")(JobCount(spark)(
+      TrajectorySearch.epsilonGate(corpus, batch, 11.0).collect()))
+    assert(gateJobs == 1 + batchIds.size, s"one chunk per batch id: $gateJobs jobs")
+    assert(gate.toSeq == TrajectorySearch.epsilonGate(corpus, batch, 11.0).collect().toSeq)
   }
 
   test("epsilonGate equals the naive cross-pair gate at two SFs and never enumerates within-side pairs") {
